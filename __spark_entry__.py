@@ -46,7 +46,6 @@ from otel_semconvprocessor_spark.operators.enrich import (
 from otel_semconvprocessor_spark.operators.metrics import cardinality_summary, rule_effectiveness
 from otel_semconvprocessor_spark.operators.route import sink_expr
 from otel_semconvprocessor_spark.operators.rules import apply_rules
-from otel_semconvprocessor_spark.operators.rules_broadcast import apply_rules_broadcast
 from otel_semconvprocessor_spark.operators.similarity import (
     embedding_near_dup_pairs,
     hyperplanes,
@@ -99,11 +98,12 @@ def _q_rule_cascade_rows(spark, sf_dir):
 
 
 def _q_rule_cascade_broadcast(spark, sf_dir):
-    """North-star variant: the schema-url-keyed BROADCAST rule-table cascade
-    (operators/rules_broadcast.py) must produce the identical row-level output
-    as the CASE chain — same oracle SQL as rule_cascade_rows."""
+    """North-star variant: the schema-url-keyed rule-table cascade.  The
+    reference rules are version-wildcard, so ``apply_rules`` attaches no
+    dispatch table and must produce the row-level output of the plain
+    chain — same oracle SQL as rule_cascade_rows."""
     cfg = reference_config()
-    n = apply_rules_broadcast(doc_spans(spark, sf_dir), cfg, id_col="doc_id")
+    n = apply_rules(doc_spans(spark, sf_dir), cfg)
     return n.select(
         "doc_id",
         "kind",
@@ -1711,7 +1711,8 @@ SELECT doc_id, kind, rule_id, operation_name, operation_type,
        coalesce(operation_name, name) AS final_name,
        {name_original} AS name_original
 FROM named""",
-        # the broadcast rule-table variant must equal the CASE chain exactly
+        # the schema_url-keyed cascade on version-wildcard rules must equal
+        # the CASE chain exactly
         "rule_cascade_broadcast": f"""WITH {cascade}
 SELECT doc_id, kind, rule_id, operation_name, operation_type,
        coalesce(operation_name, name) AS final_name,

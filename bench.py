@@ -43,8 +43,8 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 2M rows (r3 ran 3M).  Round 4 re-measured the serial floor DIRECTLY by
-# running the identical write plan on a tiny same-shape input
-# (scripts/s_profile.py): S = 1.0-1.7s (planning 0.25s first-run then
+# running the identical write plan on a tiny same-shape input (s_profile.py
+# harness, commit 980a121): S = 1.0-1.7s (planning 0.25s first-run then
 # cached, noop-shuffle 0.8s, parquet+commit of the ~100-dir tree ~0.85s) —
 # NOT the 7.5s the r2/r3 two-point T=S+W/k fit claimed.  That fit conflated
 # SUBLINEAR-SCALING work (reduce-wave packing, GC, memory-bandwidth and
@@ -210,8 +210,9 @@ def _session(cores: int):
     )
     # ParallelGC: throughput-oriented collector for a batch job — measured
     # ~8% off the steady wall vs default G1 at local[8] (same-window A/B,
-    # scripts/warmup_ab.py round 4); less GC-thread interference also helps
-    # the scaling symmetry between the 2- and 8-thread levels
+    # warmup_ab.py harness round 4, commit 980a121); less GC-thread
+    # interference also helps the scaling symmetry between the 2- and
+    # 8-thread levels
     b = b.config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     # AQE partition coalescing OFF for the write stage: at local[8] it
     # coalesced the 16 shuffle partitions to 10 -> a wave of 8 + a straggler
@@ -264,7 +265,7 @@ def run_pipeline_level(cores: int, rows: int, out_dir: str) -> dict:
         # bytes -> less memory-bus traffic in shuffle + encode + tmpfs write
         normalized = slim_for_sink(
             build_normalized(
-                spark, pages_df, extractor="pandas", mappings_df=mappings_df, dims=[(dim, "lang")]
+                spark, pages_df, mappings_df=mappings_df, dims=[(dim, "lang")]
             ).drop("html", "text")
         )
         normalized.schema  # force analysis once, outside the timed region
@@ -420,15 +421,12 @@ def run_operator_benches(cores: int, sf_dir: str, out_dir: str) -> dict:
         ext = extract_pages_native(pages)
         bench("cascade_enrich_mode", lambda: apply_rules(ext, cfg_enrich).groupBy("rule_id").count().collect())
         bench("cascade_8_rules", lambda: apply_rules(ext, cfg8).groupBy("rule_id").count().collect())
-        # the broadcast rule-table variant at the same scale: prices the
-        # "x18 candidate amplification + 2 slim shuffles" cost claim
-        # (rules_broadcast.py) against the zero-shuffle CASE chain
-        from otel_semconvprocessor_spark.operators.rules_broadcast import apply_rules_broadcast
-
+        # the schema_url-keyed rule-table cascade at the same scale; the
+        # reference rules are version-wildcard, so apply_rules attaches no
+        # dispatch table and this times the zero-shuffle chain
         bench(
             "cascade_broadcast",
-            lambda: apply_rules_broadcast(ext, cfg, id_col="url")
-            .groupBy("rule_id").count().collect(),
+            lambda: apply_rules(ext, cfg).groupBy("rule_id").count().collect(),
         )
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         bench("rule_cascade_docs", lambda: apply_rules(doc_spans(spark, sf_dir), cfg).groupBy("rule_id").count().collect())
@@ -631,7 +629,7 @@ def write_baseline_md(
         "",
         "The serial floor S was re-measured DIRECTLY in round 4 by running"
         " the identical write plan on a tiny same-shape input"
-        " (scripts/s_profile.py): S = 1.0-1.7s — Catalyst phases 0.25s on"
+        " (s_profile.py harness, commit 980a121): S = 1.0-1.7s — Catalyst phases 0.25s on"
         " the first action then cached, noop-shuffle floor 0.8s, parquet"
         " encode + v2 commit of the ~100-dir tree ~0.85s.  The r2/r3"
         " two-point T = S + W/k fit that claimed S~7.5s was conflating"
@@ -722,7 +720,7 @@ def write_baseline_md(
         "",
         "## cascade_native 9.5s -> 16.6s (r1 -> r2): attributed (round 3)",
         "",
-        "Controlled A/B (scripts/cascade_attrib.py; 1M rows, local[32], own JVM",
+        "Controlled A/B (cascade_attrib.py harness, commit 980a121; 1M rows, local[32], own JVM",
         "per mode, min-of-3-warms): direct-1M input + r2 attempt-struct cascade",
         "12.30s; 2M-staged + pmod-slice + attempt-struct 12.79s (the in-bench",
         "slice costs ~0.5s); direct-1M + r1 predicate-folding cascade 11.16s.",
@@ -736,12 +734,13 @@ def write_baseline_md(
         "## Top-k rank + scoring (round 3)",
         "",
         "Two-phase top-k vs the old per-query row_number window",
-        "(scripts/topk_rank_ab.py, 100k corpus x 10 queries): 6.11s vs 5.92s —",
+        "(topk_rank_ab.py harness, commit 980a121; 100k corpus x 10 queries): 6.11s vs 5.92s —",
         "wall parity with byte-identical results, but no task ever holds a",
         "query's full candidate set (the window form OOMs at 10^9+ corpora).",
         "Precomputing vector norms once per vector (instead of 3 dots per pair",
         "inside cosine()) took the same query from 31.0s to 5.9s (5.2x).",
-        "Crossover re-measured after both changes (scripts/topk_crossover.py):",
+        "Crossover re-measured after both changes (topk_crossover.py harness,",
+        "commit 980a121):",
         "expr-brute/LSH = 12.4/5.6s at 2e6 pairs, 69.5/20.4s at 1e7.  The",
         "Arrow numpy-matmul brute twin measured 1.79s at 2e6 and 5.06s at 1e7",
         "— EXACT results 4x faster than approximate LSH — so topk_auto now",

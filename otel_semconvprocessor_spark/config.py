@@ -35,8 +35,9 @@ VALID_SPAN_KINDS = frozenset({"server", "client", "producer", "consumer", "inter
 @dataclass
 class OTTLRule:
     """One rule (config.go:62-82). ``schema_url`` is the graft's addition: the
-    semconv schema version this rule row belongs to, used by the
-    broadcast-joined rule-table variant (BASELINE.json north_star)."""
+    semconv schema version this rule row belongs to ("" = every version);
+    ``apply_rules`` dispatches versioned rules through a broadcast-joined
+    rule table (BASELINE.json north_star)."""
 
     id: str
     priority: int

@@ -1,6 +1,7 @@
 """Operator surface. Import from the submodules:
 
-  rules       apply_rules, compile_rule_columns
+  rules       apply_rules (the one cascade; schema_url-versioned rules
+              dispatch through a broadcast rule table), compile_rule_columns
   extract     extract_pages (pandas/Arrow), extract_pages_native
   enrich      insert_attrs_if_absent, apply_semconv_mappings, join_dims
   route       assign_sink, write_routed_single_pass, write_per_sink_tables,

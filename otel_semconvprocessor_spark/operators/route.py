@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..tuning import ensure_jit_codegen
 
@@ -35,6 +36,7 @@ __all__ = [
     "assign_sink",
     "route_predicates",
     "salt_expr",
+    "routed_schema",
     "salted_repartition",
     "slim_for_sink",
     "write_routed_single_pass",
@@ -115,8 +117,7 @@ _ATTR_TO_COLUMN = {
 }
 
 
-def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
-                  dedup_attrs: bool = True) -> DataFrame:
+def slim_for_sink(df: DataFrame) -> DataFrame:
     """Information-preserving sink projection, applied BEFORE the write-side
     repartition so the shuffle payload shrinks with the files.
 
@@ -139,7 +140,7 @@ def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
     memory-bus traffic through shuffle + parquet encode + tmpfs write).
     """
     out = df
-    if dedup_attrs and "attrs" in out.columns:
+    if "attrs" in out.columns:
         def entry_is_dup(k, v):
             cond = F.lit(False)
             if "trace_id" in df.columns and "span_id" in df.columns:
@@ -155,11 +156,17 @@ def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
         out = out.withColumn(
             "attrs", F.map_filter("attrs", lambda k, v: ~entry_is_dup(k, v))
         )
-    if binary_ids:
-        for c in ("trace_id", "span_id"):
-            if c in out.columns:
-                out = out.withColumn(c, F.unhex(F.col(c)))
+    for c in ("trace_id", "span_id"):
+        if c in out.columns:
+            out = out.withColumn(c, F.unhex(F.col(c)))
     return out
+
+
+def routed_schema(df: DataFrame) -> StructType:
+    """Schema of the rows ``write_routed_single_pass`` writes for ``df``,
+    partition columns included: readers of the sink tree pass it instead of
+    inferring one (an empty input writes no data files to infer from)."""
+    return _with_day(assign_sink(df)).schema
 
 
 def write_routed_single_pass(

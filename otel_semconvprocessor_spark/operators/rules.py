@@ -33,9 +33,19 @@ words), ``attrs:map<string,string>``.  Output adds:
   name_original:string    see above
   attrs:map               (replaced) updated attribute map
 
-Scale note: the cascade is pure expression work — no shuffle, no UDF, no
-joins; it fuses into the scan's WholeStageCodegen stage, so it costs ~0 extra
-passes at any data size.
+Versioned rules: a rule with a non-empty ``schema_url`` applies only to spans
+whose ``schema_url`` column equals it; a rule with ``schema_url == ""`` applies
+to every span.  When the rule set has versioned rules, the rule table becomes
+DATA keyed by schema_url (the north star's "schema-version keyed rule tables
+broadcast-joined"): one broadcast row per schema_url carries the ordered seqs
+of the rules that apply to it, a broadcast LEFT join on ``schema_url``
+attaches that set to each span (BroadcastHashJoin, the span side never
+shuffles), and each versioned rule's predicate is gated on membership.  The
+chain stays in validated priority order, so first-match is unchanged.
+
+Scale note: with no versioned rule (the reference config) the cascade is pure
+expression work — no shuffle, no UDF, no join; it fuses into the scan's
+WholeStageCodegen stage, so it costs ~0 extra passes at any data size.
 """
 
 from __future__ import annotations
@@ -108,18 +118,14 @@ def apply_rules(
     attrs_col: str = "attrs",
     name_col: str = "name",
     kind_col: str = "kind",
-    pre_project_keys: bool = False,
 ) -> DataFrame:
     """Apply the processor to a span-shaped DataFrame (see module docstring).
 
-    ``pre_project_keys=True`` pre-evaluates every referenced attr key into a
-    hidden struct ONCE per row.  Output-identical; measured SLOWER on the
-    reference rule set (interleaved same-session A/B at local[8]/2M rows:
-    35.2s vs 20.3s min) — materializing a 26-string-field struct per row
-    costs more than the probes the lazy CASE actually skips, because
-    first-match-wins means the average row only evaluates a few rules'
-    predicates.  Kept as a hook: a rule set whose FIRST rules reuse many
-    keys would flip the trade."""
+    A rule set with ``schema_url``-versioned rules needs a ``schema_url``
+    column on ``df``; without one it raises ``ValueError`` — silently
+    degrading to wildcard-only matching would be invisible, since the output
+    schema is unchanged.  Spans whose schema_url is NULL or has no versioned
+    rule see only the version-wildcard rules."""
     ensure_jit_codegen(df.sparkSession)
     if not cfg.enabled or not cfg.span_processing.enabled:
         # processor.go:122-124 / 146-148: disabled => identity, but keep the
@@ -138,23 +144,37 @@ def apply_rules(
     name = F.col(name_col)
     kind = F.col(kind_col)
 
-    # Collect every attr key the rule set references (plus the skip-guard
-    # key); resolution strategy is chosen below.
+    # Versioned dispatch DATA: one broadcast row per schema_url with the
+    # ordered applicable seq set.  Left join: a span whose version has no
+    # rule rows (or whose schema_url is NULL) gets NULL -> empty set.
+    by_url: dict[str, list[int]] = {}
+    for seq, rule in enumerate(sp.rules):
+        if rule.schema_url:
+            by_url.setdefault(rule.schema_url, []).append(seq)
+    applicable = None
+    if by_url:
+        if "schema_url" not in df.columns:
+            raise ValueError(
+                "rule set has schema_url-versioned rules but column "
+                f"'schema_url' is not in the input ({df.columns})"
+            )
+        vseqs = df.sparkSession.createDataFrame(
+            sorted(by_url.items()), "schema_url string, __vseqs array<int>"
+        )
+        df = df.join(
+            F.broadcast(vseqs), on=df["schema_url"] == vseqs["schema_url"], how="left"
+        ).drop(vseqs["schema_url"])
+        applicable = F.coalesce(F.col("__vseqs"), F.array().cast("array<int>"))
+
+    # Every attr key the rule set references (plus the skip-guard key),
+    # resolved once per key so the compiled predicates share the lookups.
     keys: set[str] = {sp.operation_name_attribute}
     for rule in sp.rules:
         keys |= referenced_attr_keys(rule.condition)
         keys |= referenced_attr_keys(rule.operation_name)
         if rule.operation_type:
             keys |= referenced_attr_keys(rule.operation_type)
-    key_list = sorted(keys)
-    if pre_project_keys:
-        ak = F.struct(
-            *[attr(attrs, k).alias(f"k{i}") for i, k in enumerate(key_list)]
-        )
-        df = df.withColumn("__ak", ak)
-        field = {k: F.col(f"__ak.k{i}") for i, k in enumerate(key_list)}
-    else:
-        field = {k: attr(attrs, k) for k in key_list}
+    field = {k: attr(attrs, k) for k in sorted(keys)}
     src = AttrSource(attrs, lambda key: field.get(key, attr(attrs, key)))
 
     compiled = compile_rule_columns(cfg, src, name, kind)
@@ -166,12 +186,18 @@ def apply_rules(
         "struct<rule_id:string,op_name:string,op_type:string>"
     )
     cascade = no_match
-    for c in reversed(compiled):
+    for seq in reversed(range(len(compiled))):
+        c = compiled[seq]
         hit = F.struct(
             F.lit(c.rule_id).alias("rule_id"),
             c.operation_name.alias("op_name"),
             (c.operation_type if c.operation_type is not None else F.lit(None).cast("string")).alias("op_type"),
         )
+        pred = c.predicate
+        if sp.rules[seq].schema_url:
+            # versioned rule: applies only when the broadcast table lists it
+            # for this span's schema version
+            pred = F.array_contains(applicable, F.lit(seq)) & pred
         if c.name_nullable:
             # name-expr error => skip THIS rule and continue the cascade
             # (processor.go:244-250): fold name_expr IS NOT NULL into the
@@ -179,21 +205,18 @@ def apply_rules(
             # the value (2 evals on matched rows only); the alternative —
             # evaluating the hit struct once behind the predicate and testing
             # its op_name field — was measured 10% SLOWER on the 18-rule 1M-row
-            # cascade (12.30s vs 11.16s min-warm, scripts/cascade_attrib.py):
-            # the nested struct-valued CASE costs codegen more than the rare
-            # re-evaluation saves.
-            cascade = F.when(
-                c.predicate & c.operation_name.isNotNull(), hit
-            ).otherwise(cascade)
-        else:
-            cascade = F.when(c.predicate, hit).otherwise(cascade)
+            # cascade (12.30s vs 11.16s min-warm, cascade_attrib.py harness,
+            # commit 980a121): the nested struct-valued CASE costs codegen
+            # more than the rare re-evaluation saves.
+            pred = pred & c.operation_name.isNotNull()
+        cascade = F.when(pred, hit).otherwise(cascade)
 
     # Skip-guard (processor.go:202-206): pre-existing operation.name attribute
     # short-circuits the whole cascade.
     guarded = F.when(field[sp.operation_name_attribute].isNull(), cascade)
 
     out = finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
-    return out.drop("__ak")
+    return out.drop("__vseqs") if applicable is not None else out
 
 
 def finish_match(
@@ -202,13 +225,10 @@ def finish_match(
     attrs_col: str = "attrs",
     name_col: str = "name",
 ) -> DataFrame:
-    """Shared post-match stage: given a ``__match`` struct column
+    """Post-match stage: given a ``__match`` struct column
     (``struct<rule_id,op_name,op_type>``, NULL = skip-guarded or no match),
     produce the output contract — enforce/enrich naming, name.original
-    preservation, and the attribute-map update.  Used by both the CASE-chain
-    cascade above and the broadcast rule-table variant
-    (operators/rules_broadcast.py), which is how the two are cross-checked
-    to be identical."""
+    preservation, and the attribute-map update."""
     sp = cfg.span_processing
     attrs = F.col(attrs_col)
     name = F.col(name_col)

@@ -106,8 +106,8 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFra
     per-batch top-k's, so the result is identical to the single-window form
     (regression-tested + oracle-checked).
 
-    Measured (scripts/topk_rank_ab.py, 100k corpus x 10 queries, local[32]):
-    window 5.92s vs two-phase 6.11s min-warm — wall parity (+3% Arrow-pass
+    Measured (topk_rank_ab.py harness, commit 980a121; 100k corpus x 10
+    queries, local[32]): window 5.92s vs two-phase 6.11s min-warm — wall parity (+3% Arrow-pass
     constant) with byte-identical results; the win is boundedness, not
     small-scale speed: the window form holds |corpus| rows per query in one
     task (OOM at 10^9+), two-phase never exceeds the Arrow batch + k*P merge.

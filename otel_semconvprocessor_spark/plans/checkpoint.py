@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..config import Config
 from ..plans.pipeline import build_normalized
-from ..operators.route import assign_sink
+from ..operators.route import assign_sink, slim_for_sink
 
 __all__ = [
     "SimulatedCrash",
@@ -66,9 +66,15 @@ class SimulatedCrash(RuntimeError):
 
 
 def read_manifest(spark: SparkSession, out_path: str) -> DataFrame | None:
+    """The lineage manifest, or None before the first chunk commits.  Any
+    failure other than "path not found" propagates: treating an unreadable
+    or corrupt manifest as "no chunks done" would re-run every chunk and
+    append duplicate lineage rows on resume."""
     try:
-        return spark.read.parquet(f"{out_path}/_manifest")
-    except Exception:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(f"{out_path}/_manifest")
+    except Exception as e:
+        if not _is_path_not_found(e):
+            raise
         return None
 
 
@@ -237,7 +243,6 @@ def run_with_checkpoints(
     *,
     n_chunks: int = 8,
     run_id: str = "ckpt-0",
-    extractor: str = "pandas",
     fail_after_chunk: int | None = None,
     chunk_by: str = "files",
 ) -> list[int]:
@@ -285,11 +290,9 @@ def run_with_checkpoints(
         if chunk in done:
             continue
         t0 = time.time()
-        normalized = assign_sink(build_normalized(spark, chunk_df(chunk), cfg, extractor=extractor))
+        normalized = assign_sink(build_normalized(spark, chunk_df(chunk), cfg))
         # same lossless sink projection as run_pipeline (binary ids, attr
         # dedup) — resumed chunks must match fresh chunks byte-for-byte
-        from ..operators.route import slim_for_sink
-
         normalized = slim_for_sink(normalized.drop("html", "text")).withColumn(
             "warc_day", F.to_date(F.col("warc_ts"))
         )

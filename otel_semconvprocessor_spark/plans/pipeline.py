@@ -8,7 +8,9 @@ Mirrors the reference's receiver -> [semconv, batch] -> exporters pipeline
       -> apply_semconv_mappings   (broadcast-joined rename/move/copy/delete)
       -> insert_attrs_if_absent   (resource processor, config.yaml:17-27)
       -> join_dims                (broadcast lookups)
-      -> apply_rules              (compiled CASE cascade — processor.go parity)
+      -> apply_rules              (compiled CASE cascade — processor.go parity;
+                                   schema_url-versioned rules via a broadcast
+                                   dispatch table)
       -> write single-pass, partitioned by (sink, warc_day, lang)
       -> metrics from a pruned re-scan of the written sinks
 
@@ -36,9 +38,15 @@ from ..operators.enrich import (
     lang_dim,
     mappings_table,
 )
-from ..operators.extract import extract_pages, extract_pages_native
+from ..operators.extract import extract_pages
 from ..operators.metrics import MetricsManifest, metrics_manifest
-from ..operators.route import write_routed_single_pass
+from ..operators.route import (
+    SINKS,
+    routed_schema,
+    slim_for_sink,
+    write_per_sink_tables,
+    write_routed_single_pass,
+)
 from ..operators.rules import apply_rules
 from ..tuning import ensure_jit_codegen
 
@@ -65,13 +73,11 @@ def build_normalized(
     pages: DataFrame,
     cfg: Config | None = None,
     *,
-    extractor: str = "pandas",
-    with_mappings: bool = True,
-    with_dims: bool = True,
     mappings_df: DataFrame | None = None,
     dims: list[tuple[DataFrame, str]] | None = None,
 ) -> DataFrame:
-    """The full transform plan, unexecuted (lazy).
+    """The full transform plan, unexecuted (lazy).  Every stage is stateless
+    or stream-static, so the same chain serves batch and streaming sources.
 
     ``mappings_df`` / ``dims`` let a long-lived driver (or the bench's timed
     region) build the tiny broadcast tables ONCE and reuse them across runs —
@@ -79,15 +85,11 @@ def build_normalized(
     otherwise."""
     cfg = cfg or reference_config()
     ensure_jit_codegen(spark)
-    extract = extract_pages if extractor == "pandas" else extract_pages_native
-    df = extract(pages)
-    if with_mappings:
-        if mappings_df is None:
-            mappings_df = mappings_table(spark, default_semconv_mappings())
-        df = apply_semconv_mappings(df, mappings_df)
+    if mappings_df is None:
+        mappings_df = mappings_table(spark, default_semconv_mappings())
+    df = apply_semconv_mappings(extract_pages(pages), mappings_df)
     df = insert_attrs_if_absent(df, RESOURCE_ATTRS)
-    if with_dims:
-        df = join_dims(df, *(dims if dims is not None else [(lang_dim(spark), "lang")]))
+    df = join_dims(df, *(dims if dims is not None else [(lang_dim(spark), "lang")]))
     return apply_rules(df, cfg)
 
 
@@ -98,9 +100,7 @@ def run_pipeline(
     cfg: Config | None = None,
     *,
     run_id: str = "run-0",
-    extractor: str = "pandas",
     approx_distinct: bool = False,
-    keep_raw: bool = False,
     catalog=None,
 ) -> PipelineResult:
     """End-to-end run.  Default sink = the single-pass partitioned parquet
@@ -110,51 +110,29 @@ def run_pipeline(
     re-reads the catalog tables (same pruned columns)."""
     cfg = cfg or reference_config()
     start = time.time()
-    normalized = build_normalized(spark, pages, cfg, extractor=extractor)
-    if not keep_raw:
-        # sinks carry NORMALIZED records, not raw payloads — the reference's
-        # exporters write processed spans, not the original request bytes.
-        # At 10^12 rows the raw html/text would dominate shuffle + sink IO.
-        # slim_for_sink then removes per-row redundancy losslessly (binary
-        # ids, attr entries that duplicate columns) — measured 45% fewer
-        # sink bytes, which is the pipeline's bandwidth bill at scale.
-        from ..operators.route import slim_for_sink
-
-        normalized = slim_for_sink(normalized.drop("html", "text"))
+    # sinks carry NORMALIZED records, not raw payloads — the reference's
+    # exporters write processed spans, not the original request bytes.
+    # At 10^12 rows the raw html/text would dominate shuffle + sink IO.
+    # slim_for_sink then removes per-row redundancy losslessly (binary
+    # ids, attr entries that duplicate columns) — measured 45% fewer
+    # sink bytes, which is the pipeline's bandwidth bill at scale.
+    normalized = slim_for_sink(build_normalized(spark, pages, cfg).drop("html", "text"))
     sink_path = f"{out_path}/sinks"
     if catalog is not None:
-        from ..operators.route import SINKS, write_per_sink_tables
-
         tables = write_per_sink_tables(normalized, catalog=catalog)
         routed = None
         for sink in SINKS:
             sub = catalog.read(spark, tables[sink]).withColumn("sink", F.lit(sink))
             routed = sub if routed is None else routed.unionByName(sub)
-        duration = time.time() - start
-        metrics = metrics_manifest(
-            routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct
-        )
-        rows = metrics.summary.select("spans_processed").collect()[0][0]
-        metrics.summary.write.mode("overwrite").parquet(f"{out_path}/metrics/summary")
-        metrics.rule_effectiveness.write.mode("overwrite").parquet(
-            f"{out_path}/metrics/rule_effectiveness"
-        )
-        metrics.sink_counts.write.mode("overwrite").parquet(f"{out_path}/metrics/sink_counts")
-        return PipelineResult(catalog.base_path if hasattr(catalog, "base_path") else sink_path,
-                              metrics, rows, time.time() - start)
-    write_routed_single_pass(normalized, sink_path)
-
-    # aggregate stage over the written, partitioned output: reads only the
-    # pruned columns it needs (rule_id, operation_type, name, name_original,
-    # sink) — scan cost is a fraction of the raw data even at 10^12 rows.
-    try:
-        routed = spark.read.parquet(sink_path)
-    except Exception:
-        # empty input -> partitionBy wrote no files; keep the schema stable
-        from ..operators.route import assign_sink
-
-        schema = assign_sink(normalized).withColumn("warc_day", F.to_date("warc_ts")).schema
-        routed = spark.createDataFrame([], schema)
+        sink_path = getattr(catalog, "base_path", sink_path)
+    else:
+        # aggregate stage over the written, partitioned output: reads only
+        # the pruned columns it needs (rule_id, operation_type, name,
+        # name_original, sink) — scan cost is a fraction of the raw data even
+        # at 10^12 rows.  The written schema is passed explicitly, so an
+        # empty input (partitionBy writes no files) reads as an empty frame.
+        write_routed_single_pass(normalized, sink_path)
+        routed = spark.read.schema(routed_schema(normalized)).parquet(sink_path)
     duration = time.time() - start
     metrics = metrics_manifest(
         routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct

@@ -198,8 +198,8 @@ def generate_pages(
         gql_type = F.when(gql_idx == i, F.lit(t)).otherwise(gql_type)
         gql_name = F.when(gql_idx == i, F.lit(n)).otherwise(gql_name)
 
-    # old vs new semconv naming, keyed by schema_url — drives the
-    # broadcast-joined rule-table variant (BASELINE.json north_star)
+    # old vs new semconv naming, keyed by schema_url — drives the semconv
+    # mappings and schema_url-versioned rules (BASELINE.json north_star)
     new_conv = _bucket(15, 2) == 0
     schema_url = F.when(new_conv, F.lit("1.26.0")).otherwise(F.lit("1.21.0"))
     method_key_new = F.when(new_conv, method)  # http.request.method

@@ -21,19 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import Config, reference_config
-from ..operators.enrich import (
-    apply_semconv_mappings,
-    default_semconv_mappings,
-    insert_attrs_if_absent,
-    join_dims,
-    lang_dim,
-    mappings_table,
-)
-from ..operators.extract import extract_pages
-from ..operators.route import assign_sink
-from ..operators.rules import apply_rules
-from ..plans.pipeline import RESOURCE_ATTRS
+from ..config import Config
+from ..operators.route import assign_sink, slim_for_sink
+from ..plans.pipeline import build_normalized
 from ..sources.pages import PAGES_SCHEMA
 
 __all__ = ["stream_pages", "streaming_normalized", "start_streaming_pipeline", "windowed_rule_counts"]
@@ -47,17 +37,11 @@ def stream_pages(spark: SparkSession, input_dir: str, max_files_per_trigger: int
 
 
 def streaming_normalized(spark: SparkSession, pages: DataFrame, cfg: Config | None = None) -> DataFrame:
-    """Identical transform chain to plans/pipeline.build_normalized —
-    extraction, broadcast mapping, resource attrs, the stream-static
-    broadcast dims join, and the rule cascade; every stage is stateless or
-    stream-static, so the one definition serves both batch and streaming
-    (tested column-for-column equal in tests/test_streaming.py)."""
-    cfg = cfg or reference_config()
-    df = extract_pages(pages)
-    df = apply_semconv_mappings(df, mappings_table(spark, default_semconv_mappings()))
-    df = insert_attrs_if_absent(df, RESOURCE_ATTRS)
-    df = join_dims(df, (lang_dim(spark), "lang"))
-    return apply_rules(df, cfg)
+    """The batch transform chain (plans/pipeline.build_normalized) over a
+    streaming source: every stage is stateless or stream-static, so the one
+    definition serves both (tested column-for-column equal in
+    tests/test_streaming.py)."""
+    return build_normalized(spark, pages, cfg)
 
 
 def start_streaming_pipeline(
@@ -71,8 +55,6 @@ def start_streaming_pipeline(
     """File-source -> partitioned file-sink with checkpointed exactly-once;
     ``available_now`` drains the current backlog then stops (batch-like runs,
     incremental across restarts)."""
-    from ..operators.route import slim_for_sink
-
     normalized = streaming_normalized(spark, stream_pages(spark, input_dir), cfg)
     routed = (
         # same sink projection as the batch path (drop raw payloads, binary

@@ -7,7 +7,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from otel_semconvprocessor_spark.config import reference_config
+from otel_semconvprocessor_spark.config import reference_config, reference_rules
 from otel_semconvprocessor_spark.plans.checkpoint import (
     SimulatedCrash,
     read_all_output,
@@ -175,7 +175,7 @@ def test_cascade_matches_pure_python_oracle(spark, pages):
     raw = [(r["url"], r["text"]) for r in pages.select("url", "text").collect()]
     oracle = {u: (rid, op_name, op_type, final_name) for u, rid, op_name, op_type, final_name in _py_pipeline(raw)}
 
-    got = build_normalized(spark, pages, reference_config(), extractor="pandas")
+    got = build_normalized(spark, pages, reference_config())
     for r in got.select("url", "rule_id", "operation_name", "operation_type", "name").collect():
         o_rid, o_name, o_type, o_final = oracle[r["url"]]
         assert r["rule_id"] == o_rid, r["url"]
@@ -221,6 +221,14 @@ def test_run_pipeline_end_to_end(spark, pages, tmp_path):
         assert eff.get(rid, 0) > 0, rid
 
 
+def test_run_pipeline_empty_input(spark, pages, tmp_path):
+    """No input rows -> partitionBy writes no data files; the metrics stage
+    still reads the sink tree (with the written schema) and reports 0."""
+    res = run_pipeline(spark, pages.limit(0), str(tmp_path / "empty"), run_id="e")
+    assert res.rows == 0
+    assert res.metrics.sink_counts.count() == 0
+
+
 def test_sink_counts_match_python_oracle(spark, pages, tmp_path):
     raw = [(r["url"], r["text"]) for r in pages.select("url", "text").collect()]
     sink_of = {}
@@ -244,6 +252,30 @@ def test_sink_counts_match_python_oracle(spark, pages, tmp_path):
     assert got == expected
 
 
+def _versioned_config(schema_url="1.26.0"):
+    cfg = reference_config()
+    cfg.span_processing.rules = reference_rules(schema_url=schema_url)
+    cfg.validate()
+    return cfg
+
+
+def test_versioned_rules_match_only_their_schema_version(spark, pages):
+    """A rule set limited to schema 1.26.0 matches no span of any other
+    version, and on 1.26.0 spans matches exactly what the unversioned
+    reference rules match."""
+    cols = ["url", "schema_url", "rule_id"]
+    plain = {r["url"]: r for r in build_normalized(spark, pages, reference_config()).select(*cols).collect()}
+    versioned = {r["url"]: r for r in build_normalized(spark, pages, _versioned_config()).select(*cols).collect()}
+    assert plain.keys() == versioned.keys()
+    new = [u for u, r in versioned.items() if r["schema_url"] == "1.26.0"]
+    old = [u for u, r in versioned.items() if r["schema_url"] != "1.26.0"]
+    # both groups carry spans the unversioned rules match: the version gate,
+    # not the data, is what keeps the old ones unmatched
+    assert any(plain[u]["rule_id"] for u in new) and any(plain[u]["rule_id"] for u in old)
+    assert all(versioned[u]["rule_id"] is None for u in old)
+    assert all(versioned[u]["rule_id"] == plain[u]["rule_id"] for u in new)
+
+
 @pytest.fixture(scope="module")
 def pages_path(spark, pages, tmp_path_factory):
     """File-backed pages input (the production checkpoint path is chunked by
@@ -251,6 +283,29 @@ def pages_path(spark, pages, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("ckpt-in") / "pages")
     pages.repartition(4).write.mode("overwrite").parquet(p)
     return p
+
+
+def test_versioned_rules_through_run_pipeline_and_checkpoints(spark, pages, pages_path, tmp_path):
+    """Both batch entry points honour schema_url: the sink rows matched by
+    a 1.26.0-only rule set are exactly the 1.26.0 spans the unversioned
+    rules match, with the same rule ids."""
+    expected = {
+        r["url"]: r["rule_id"]
+        for r in build_normalized(spark, pages, reference_config())
+        .filter((F.col("schema_url") == "1.26.0") & F.col("rule_id").isNotNull())
+        .collect()
+    }
+    cfg = _versioned_config()
+    res = run_pipeline(spark, pages, str(tmp_path / "out"), cfg, run_id="v")
+    ckpt = str(tmp_path / "ckpt")
+    run_with_checkpoints(spark, pages_path, ckpt, cfg, n_chunks=2, run_id="v")
+    for routed in (spark.read.parquet(res.sink_path), read_all_output(spark, ckpt)):
+        assert routed.count() == N
+        got = {
+            r["url"]: r["rule_id"]
+            for r in routed.filter(F.col("rule_id").isNotNull()).select("url", "rule_id").collect()
+        }
+        assert got == expected
 
 
 def test_checkpoint_resume_no_dup_no_missing(spark, pages_path, tmp_path):
@@ -379,6 +434,28 @@ def test_checkpoint_corrupt_plan_raises_not_regenerates(spark, pages_path, tmp_p
     with pytest.raises(Exception) as ei:
         run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
     assert "PATH_NOT_FOUND" not in str(ei.value)
+
+
+def test_checkpoint_corrupt_manifest_raises_not_reruns(spark, pages_path, tmp_path):
+    """A non-path-not-found failure reading _manifest must PROPAGATE:
+    treating it as "no chunks done" would re-run committed chunks and append
+    duplicate lineage rows on resume."""
+    import os
+
+    out = str(tmp_path / "ckpt-corrupt-manifest")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=0)
+    man_dir = f"{out}/_manifest"
+    for f in os.listdir(man_dir):
+        if f.endswith(".parquet"):
+            with open(os.path.join(man_dir, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+        elif f.endswith(".crc"):
+            os.remove(os.path.join(man_dir, f))
+    with pytest.raises(Exception) as ei:
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+    assert not isinstance(ei.value, SimulatedCrash)
+    assert sorted(os.listdir(f"{out}/data")) == ["chunk=0"]  # nothing re-ran
 
 
 def test_checkpoint_dataframe_fallback(spark, pages, tmp_path):

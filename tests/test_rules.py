@@ -320,33 +320,87 @@ def test_preexisting_original_name_attr_is_overwritten(spark):
     assert row["name_original"] == "old_name"
 
 
-def test_pre_project_keys_output_identical(spark):
-    """The attr-key pre-projection hook (measured slower on the reference
-    rule set, kept for key-heavy rule sets) must be output-identical to the
-    default lazy path."""
+def test_schema_url_keyed_dispatch(spark):
+    """A versioned rule applies only to spans of its schema version; the
+    wildcard rule catches the rest."""
+    old_rule = OTTLRule(
+        id="old_http", priority=100, schema_url="1.21.0",
+        condition='attributes["http.method"] != nil',
+        operation_name='Concat(["OLD", attributes["http.method"]], " ")',
+        operation_type='"http"',
+    )
+    new_rule = OTTLRule(
+        id="new_http", priority=100, schema_url="1.26.0",
+        condition='attributes["http.request.method"] != nil',
+        operation_name='Concat(["NEW", attributes["http.request.method"]], " ")',
+        operation_type='"http"',
+    )
+    wildcard = OTTLRule(
+        id="fallback", priority=999,
+        condition='attributes["x"] != nil',
+        operation_name='"FALLBACK"',
+    )
+    cfg = _cfg([old_rule, new_rule, wildcard])
+    df = spark.createDataFrame(
+        [
+            (1, "s1", "server", {"http.method": "GET", "x": "1"}, "1.21.0"),
+            (2, "s2", "server", {"http.request.method": "GET", "x": "1"}, "1.26.0"),
+            # old-convention attrs under the NEW schema: versioned old rule
+            # must NOT apply; wildcard catches it
+            (3, "s3", "server", {"http.method": "GET", "x": "1"}, "1.26.0"),
+            (4, "s4", "server", {"x": "1"}, None),
+        ],
+        "doc_id long, name string, kind string, attrs map<string,string>, schema_url string",
+    )
+    out = apply_rules(df, cfg)
+    assert out.columns == df.columns + ["rule_id", "operation_name", "operation_type", "name_original"]
+    got = {r["doc_id"]: (r["rule_id"], r["name"]) for r in out.collect()}
+    assert got[1] == ("old_http", "OLD GET")
+    assert got[2] == ("new_http", "NEW GET")
+    assert got[3] == ("fallback", "FALLBACK")
+    assert got[4] == ("fallback", "FALLBACK")
+
+
+def test_versioned_rules_missing_schema_col_raises(spark):
+    """A versioned rule set + a frame without the schema_url column is a
+    caller error: silent wildcard-only degradation would be invisible."""
+    rule = OTTLRule(
+        id="v", priority=1, schema_url="1.21.0",
+        condition='attributes["x"] != nil', operation_name='"V"',
+    )
+    wild = OTTLRule(
+        id="w", priority=2, condition='attributes["x"] != nil', operation_name='"W"',
+    )
+    df = _spans(spark, [("s", "server", {"x": "1"})])
+    with pytest.raises(ValueError, match="schema_url"):
+        apply_rules(df, _cfg([rule, wild]))
+
+
+def test_broadcast_plan_shape(spark, sf_dir):
+    """Plan gates: (1) with an all-wildcard rule set (the reference config)
+    apply_rules adds NO join and NO shuffle to its input's plan; (2) with
+    versioned rules the dispatch table attaches via a broadcast hash join on
+    schema_url and the span side still never shuffles."""
     from otel_semconvprocessor_spark.config import reference_config
-    from otel_semconvprocessor_spark.operators.rules import apply_rules
-    from otel_semconvprocessor_spark.sources.docspans import doc_spans_sql
+    from otel_semconvprocessor_spark.sources.docspans import doc_spans
 
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    spans = spark.sql(doc_spans_sql("documents"))
-    from otel_semconvprocessor_spark.sources.docspans import ATTR_COLS
-    from pyspark.sql import functions as F
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    entries = [
-        F.struct(F.lit(k).alias("k"), F.col(c).alias("v"))
-        for c, k in ATTR_COLS.items()
-    ]
-    df = spans.select(
-        "doc_id", "kind", "name",
-        F.map_from_entries(
-            F.filter(F.array(*entries), lambda e: e["v"].isNotNull())
-        ).alias("attrs"),
+    spans = doc_spans(spark, sf_dir)
+    out = plan(apply_rules(spans, reference_config()))
+    assert "Exchange" not in out
+    assert out.count("Join") == plan(spans).count("Join")
+
+    versioned_cfg = reference_config()
+    for r in versioned_cfg.span_processing.rules[:3]:
+        r.schema_url = "1.26.0"
+    # non-foldable schema_url column: a literal would constant-fold away the
+    # equi-join key and degrade the test to a nested-loop artifact
+    spans_v = spans.withColumn(
+        "schema_url",
+        F.when(F.col("doc_id") % 2 == 0, F.lit("1.26.0")).otherwise(F.lit("1.21.0")),
     )
-    cfg = reference_config()
-    cols = ["doc_id", "rule_id", "operation_name", "operation_type", "name", "name_original"]
-    a = sorted(map(tuple, apply_rules(df, cfg, pre_project_keys=False).select(*cols).collect()))
-    b = sorted(map(tuple, apply_rules(df, cfg, pre_project_keys=True).select(*cols).collect()))
-    assert a == b and len(a) > 0
+    out_v = plan(apply_rules(spans_v, versioned_cfg))
+    assert "BroadcastHashJoin" in out_v
+    assert "Exchange hashpartitioning" not in out_v

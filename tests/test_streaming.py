@@ -106,3 +106,26 @@ def test_windowed_rule_counts_stream(spark, staged_pages):
     # staged_pages may have been appended to by the previous test (module
     # fixture is shared) — compare against the current directory content
     assert stream_counts == batch_counts
+
+
+def test_streaming_versioned_rules(spark, staged_pages, tmp_path):
+    """The stream-static dispatch join: a 1.26.0-only rule set matches only
+    1.26.0 spans in the streaming sink, exactly as the batch chain does."""
+    from otel_semconvprocessor_spark.config import reference_config, reference_rules
+
+    cfg = reference_config()
+    cfg.span_processing.rules = reference_rules(schema_url="1.26.0")
+    cfg.validate()
+    out = str(tmp_path / "out-versioned")
+    q = start_streaming_pipeline(spark, staged_pages, out, cfg)
+    q.awaitTermination(300)
+
+    def matched(df):
+        return {
+            r["url"]: (r["schema_url"], r["rule_id"])
+            for r in df.filter(F.col("rule_id").isNotNull()).select("url", "schema_url", "rule_id").collect()
+        }
+
+    got = matched(spark.read.parquet(f"{out}/sinks"))
+    assert got and {v for v, _ in got.values()} == {"1.26.0"}
+    assert got == matched(build_normalized(spark, spark.read.parquet(staged_pages), cfg))
