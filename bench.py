@@ -470,10 +470,9 @@ def run_operator_benches(cores: int, sf_dir: str, out_dir: str) -> dict:
         queries = emb.filter(F.col("vec_id") < 10)
         bench("topk_brute_force", lambda: topk_brute_force(emb, queries, k=10).count())
         bench("topk_lsh", lambda: topk_lsh(emb, queries, k=10, bits=4, tables=8).count())
-        # ANN crossover evidence: at 5x corpus x 100 queries LSH wins ~4x
-        # over brute (measured 63.2s vs 8.9s at local[8]; full matrix in
-        # operators/similarity.py TOPK_CROSSOVER_PAIRS).  Brute at this scale
-        # is too slow to re-run per round, so only the winning path is timed.
+        # ANN evidence: at 5x corpus x 100 queries LSH wins ~4x over brute
+        # (measured 63.2s vs 8.9s at local[8]).  Brute at this scale is too
+        # slow to re-run per round, so only the winning path is timed.
         reps = 5
         big = (
             emb.crossJoin(spark.range(reps).select(F.col("id").alias("rep")))
@@ -738,14 +737,14 @@ def write_baseline_md(
         "wall parity with byte-identical results, but no task ever holds a",
         "query's full candidate set (the window form OOMs at 10^9+ corpora).",
         "Precomputing vector norms once per vector (instead of 3 dots per pair",
-        "inside cosine()) took the same query from 31.0s to 5.9s (5.2x).",
-        "Crossover re-measured after both changes (topk_crossover.py harness,",
+        "inside an inline cosine) took the same query from 31.0s to 5.9s (5.2x).",
+        "Brute/LSH re-measured after both changes (topk_crossover.py harness,",
         "commit 980a121):",
-        "expr-brute/LSH = 12.4/5.6s at 2e6 pairs, 69.5/20.4s at 1e7.  The",
-        "Arrow numpy-matmul brute twin measured 1.79s at 2e6 and 5.06s at 1e7",
-        "— EXACT results 4x faster than approximate LSH — so topk_auto now",
-        "picks three ways: JVM brute < 1e6 pairs < exact matmul < ~3e7 < LSH",
-        "(LSH also covers query sets too large to collect to the driver).",
+        "expr-brute/LSH = 12.4/5.6s at 2e6 pairs, 69.5/20.4s at 1e7.  An",
+        "Arrow numpy-matmul brute twin measured 1.79s at 2e6 and 5.06s at 1e7,",
+        "but no bench key or pipeline stage ran through it or through the",
+        "size-based topk_auto router, so both were deleted: each top-k",
+        "algorithm now has one implementation and the caller picks it.",
     ]
     lines.append("")
     with open(f"{REPO}/BENCH/BASELINE.md", "w") as f:

@@ -44,8 +44,11 @@ def main() -> None:
     )
     cfg = reference_config(mode=args.mode)
     if args.checkpoint:
+        # the input path (not the frame) selects file chunking: each chunk
+        # reads only its own files instead of re-filtering the whole input
         done = run_with_checkpoints(
-            spark, pages, args.output, cfg, n_chunks=args.chunks, run_id=args.run_id
+            spark, args.input or pages, args.output, cfg,
+            n_chunks=args.chunks, run_id=args.run_id,
         )
         print(json.dumps({"run_id": args.run_id, "chunks_processed": done}))
     else:

@@ -413,9 +413,6 @@ def typeof_is(col: Column | str, spark_types: tuple[str, ...],
 # path.Match grammar), translated to an anchored Java regex at COMPILE time
 # ---------------------------------------------------------------------------
 
-_GLOB_CLASS_CHARS = set("abcdefghijklmnopqrstuvwxyz"
-                        "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-^")
-
 
 def glob_to_regex(pattern: str) -> str:
     """Translate a Go ``path.Match`` glob to an anchored Java regex:

@@ -8,10 +8,10 @@
               salted_repartition
   metrics     rule_effectiveness, cardinality_summary, metrics_manifest
   exporters   debug_sample, write_with_rotation, duration_histogram
-  dedup       exact_dedup_groups, dedup_exact, minhash_lsh_pairs,
+  dedup       exact_dedup_groups, minhash_lsh_pairs,
               simhash64/simhash_pairs, ngram_jaccard_pairs
-  similarity  topk_brute_force(_pandas), topk_lsh, cosine
-  text        ws/regex token counts, quality_features, lang_id,
-              word_shingles, minhash_signature, doc_fingerprint
+  similarity  topk_brute_force, topk_lsh, topk_ivf, embedding_near_dup_pairs
+  text        ws/regex token counts, stopword_ratio, mean_token_len,
+              lang_id, word_shingles, minhash_signature
   multimodal  synthetic_media, decode_and_featurize, frame_sample_plan
 """

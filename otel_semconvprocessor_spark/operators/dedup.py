@@ -29,7 +29,6 @@ from ..tuning import ensure_jit_codegen
 __all__ = [
     "normalize_text",
     "exact_dedup_groups",
-    "dedup_exact",
     "minhash_lsh_pairs",
     "simhash64",
     "simhash_chunk_bounds",
@@ -80,18 +79,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
         .groupBy("text_hash")
         .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
     )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                normalized: bool = False) -> DataFrame:
-    """Keep exactly one row (min id) per distinct content."""
-    key = normalize_text(text_col) if normalized else _as_col(text_col)
-    keepers = (
-        df.select(F.md5(key).alias("__h"), F.col(id_col))
-        .groupBy("__h")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return df.join(keepers, on=id_col, how="leftsemi")
 
 
 def _pair_join(left: DataFrame, right: DataFrame, on, id_col: str) -> DataFrame:

@@ -43,9 +43,12 @@ from ..tuning import ensure_jit_codegen
 
 __all__ = ["extract_pages", "extract_pages_native", "EXTRACTED_FIELDS"]
 
-ATTR_LINE_PATTERN = r"(?m)^([a-z][a-z0-9._]*): (.*)$"
-SERVER_PATTERN = r"(?m)^Server: (.*)$"
-TRACEPARENT_PATTERN = r"(?m)^traceparent: (00-[0-9a-f]{32}-[0-9a-f]{16}-[0-9a-f]{2})$"
+# Java regexes: (?d) UNIX_LINES makes '\n' the only line terminator for ^, $
+# and '.', as in Python's re.MULTILINE — without it Java also ends lines at
+# '\r', NEL and U+2028, and the twins disagree on CRLF text.
+ATTR_LINE_PATTERN = r"(?md)^([a-z][a-z0-9._]*): (.*)$"
+SERVER_PATTERN = r"(?md)^Server: (.*)$"
+TRACEPARENT_PATTERN = r"(?md)^traceparent: (00-[0-9a-f]{32}-[0-9a-f]{16}-[0-9a-f]{2})$"
 
 EXTRACTED_FIELDS = T.StructType(
     [
@@ -98,7 +101,10 @@ def _finish(df: DataFrame, ext: Column) -> Column | DataFrame:
 def extract_pages_native(df: DataFrame, text_col: str = "text", html_col: str = "html") -> DataFrame:
     ensure_jit_codegen(df.sparkSession)
     text = F.col(text_col)
-    html_text = F.decode(F.col(html_col), "UTF-8")
+    # a binary->string cast never raises: malformed UTF-8 reads as U+FFFD
+    # when the regex decodes it, like the pandas twin's decode(errors=
+    # "replace"); F.decode raises MALFORMED_CHARACTER_CODING under ANSI
+    html_text = F.col(html_col).cast("string")
 
     keys = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 1)
     vals = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 2)

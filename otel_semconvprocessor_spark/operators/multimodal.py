@@ -8,60 +8,36 @@ Formats that genuinely need external codec libraries (JPEG, MP4) keep the
 honest ``NotImplementedError`` stub; payloads are routed by sniffing their
 magic bytes, as real decoders do.
 
-MEDIA_SCHEMA is the canonical lakehouse layout for binary payloads:
-content-addressed id, modality kind, raw bytes, and a typed metadata struct
-(so pruning/filtering never touches the blob column — at 100 TB the planner
-must be able to select metadata without reading bytes).
+``synthetic_media`` rows use the canonical lakehouse layout for binary
+payloads: content-addressed ``media_id``, modality ``kind``, raw ``bytes``,
+and a typed ``meta`` struct (mime, width, height, duration_ms), so
+pruning/filtering never touches the blob column — at 100 TB the planner must
+be able to select metadata without reading bytes.
 """
 
 from __future__ import annotations
 
 import sys as _sys
 
+from pyspark import cloudpickle as _cp
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import media_codecs
 
 # ship the codec functions by value with any UDF closure (same
 # worker-independence contract as sources/otlp_proto.py: executors may not
 # have the package importable in local no---py-files runs)
-try:  # pragma: no cover - non-pyspark import contexts
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(media_codecs)
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+_cp.register_pickle_by_value(media_codecs)
+_cp.register_pickle_by_value(_sys.modules[__name__])
 
 __all__ = [
-    "MEDIA_SCHEMA",
     "FEATURE_SCHEMA",
     "synthetic_media",
     "media_from_ids",
     "decode_and_featurize",
     "frame_sample_plan",
 ]
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),  # content hash
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes long, feature array<float>, "

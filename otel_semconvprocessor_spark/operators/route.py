@@ -32,9 +32,7 @@ from ..tuning import ensure_jit_codegen
 
 __all__ = [
     "SINKS",
-    "SINK_REDUNDANT_ATTR_KEYS",
     "assign_sink",
-    "route_predicates",
     "salt_expr",
     "routed_schema",
     "salted_repartition",
@@ -61,12 +59,6 @@ def sink_expr(op_type: Column, rule_id: Column) -> Column:
 
 def assign_sink(df: DataFrame) -> DataFrame:
     return df.withColumn("sink", sink_expr(F.col("operation_type"), F.col("rule_id")))
-
-
-def route_predicates() -> dict[str, Column]:
-    """Per-sink filter predicates for the separate-tables strategy."""
-    s = sink_expr(F.col("operation_type"), F.col("rule_id"))
-    return {sink: s == sink for sink in SINKS}
 
 
 def salt_expr(source: Column, salt_buckets: int, hash_fn: str = "xxhash64") -> Column:
@@ -97,18 +89,10 @@ def _with_day(df: DataFrame) -> DataFrame:
 #: attr-map keys that duplicate top-level sink columns (the enforce mode
 #: materializes operation.* / name.original as columns; schema.url duplicates
 #: schema_url; traceparent = "00-{trace_id}-{span_id}-01" duplicates the id
-#: columns).  ``slim_for_sink`` drops an entry only when its value is EXACTLY
-#: reconstructible from those columns on that row, so the projection is
-#: lossless on any data (a preset operation.name with no matching column, or
-#: a traceparent with unusual flags, is kept).
-SINK_REDUNDANT_ATTR_KEYS = [
-    "traceparent",
-    "operation.name",
-    "operation.type",
-    "name.original",
-    "schema.url",
-]
-
+#: columns and is handled separately).  ``slim_for_sink`` drops an entry only
+#: when its value is EXACTLY reconstructible from those columns on that row,
+#: so the projection is lossless on any data (a preset operation.name with no
+#: matching column, or a traceparent with unusual flags, is kept).
 _ATTR_TO_COLUMN = {
     "operation.name": "operation_name",
     "operation.type": "operation_type",

@@ -6,12 +6,13 @@
     right plan when |queries| is small: the corpus is scanned ONCE, never
     shuffled; ranking is the two-phase ``_rank_topk`` below, whose only
     shuffle is ~k rows per (query, Arrow batch).
-  * ``topk_brute_force_pandas`` — same semantics via an Arrow-batched
-    numpy matmul (vectorized; faster for wide vectors / many queries).
-  * ``lsh_hyperplane_buckets`` / ``topk_lsh`` — the scale path: deterministic
-    random-hyperplane signatures (hash-seeded, no rand()) bucket the corpus;
-    queries probe their own bucket (+ optional 1-bit flips), so each query
-    scores ~corpus/2^bits candidates instead of everything.
+  * ``topk_lsh`` — the scale path: deterministic random-hyperplane
+    signatures (hash-seeded, no rand()) bucket the corpus; queries probe
+    their own bucket (+ optional 1-bit flips), so each query scores
+    ~corpus/2^bits candidates instead of everything.
+  * ``topk_ivf`` — coarse-quantizer cells + nprobe search.
+
+Each top-k algorithm has exactly one implementation; the caller picks it.
 
 Determinism: scores are computed in float64 and ties broken by id; the
 hyperplane matrix derives from md5, so every run and engine sees the same
@@ -30,45 +31,14 @@ from ..tuning import ensure_jit_codegen
 __all__ = [
     "dot",
     "l2_norm",
-    "cosine",
     "topk_brute_force",
-    "topk_brute_force_pandas",
     "hyperplanes",
     "lsh_signature",
     "topk_lsh",
-    "topk_auto",
-    "choose_topk_path",
     "embedding_near_dup_pairs",
     "seed_centroids",
-    "kmeans_refine",
     "topk_ivf",
-    "TOPK_CROSSOVER_PAIRS",
 ]
-
-# Measured crossover (dim=64, bits=8, tables=4, multiprobe=1).  Round-3
-# re-measure at local[32] AFTER the norm-precompute (5.2x brute speedup) and
-# two-phase rank — the boundary barely moved because LSH's candidate scoring
-# sped up the same way:
-#   corpus x queries   pairs   brute     lsh      winner
-#   100k x 10          1e6     5.9s      ~19s*    brute   (*sig map dominates)
-#   20k  x 100         2e6     12.4s     5.6s     lsh (2.2x)
-#   100k x 100         1e7     69.5s     20.4s    lsh (3.4x)
-# (round-2 local[8] matrix with the old scorer: 2k x 10 brute 1.4 / lsh 5.8;
-#  20k x 100 brute 63.2 / lsh 8.9; 100k x 100 brute 312 / lsh 21.1.)
-# Brute cost ~ |C|x|Q| scores; LSH pays a fixed |C| x tables x bits signature
-# map plus ~|C|x|Q| x tables/2^bits candidate scores, so the boundary sits
-# near |C| x |Q| ~= 1e6 pairs for these defaults.
-TOPK_CROSSOVER_PAIRS = 1_000_000
-
-# The Arrow-batched numpy-matmul brute twin dominates BOTH in its regime —
-# measured (same r3 conditions): 0.59s at 2e5 pairs, 1.79s at 2e6 (expr
-# brute 12.4s, LSH 5.6s), 5.06s at 1e7 (expr 69.5s, LSH 20.4s) — EXACT
-# results 4x faster than approximate LSH.  Matmul cost is linear in pairs
-# (~0.5s / 1e6 here); LSH's is corpus-bound (signature map), so the lines
-# cross near 3e7 pairs for these defaults.  The matmul path requires the
-# query set on the driver (its documented contract), hence the query cap.
-TOPK_PANDAS_LSH_CROSSOVER_PAIRS = 30_000_000
-TOPK_MAX_DRIVER_QUERIES = 10_000
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -81,11 +51,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
 def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFrame:
@@ -160,7 +125,6 @@ def topk_brute_force(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "query_id",
-    metric: str = "cosine",
 ) -> DataFrame:
     """Exact top-k: corpus x broadcast(queries); returns
     (query_id, vec_id, score, rank) with deterministic id tie-breaks."""
@@ -171,75 +135,15 @@ def topk_brute_force(
         l2_norm(F.col(vec_col)).alias("__qn"),
     )
     # norms precomputed ONCE per vector (corpus side in the scan projection,
-    # query side in the broadcast): cosine() inline would recompute the
+    # query side in the broadcast): an inline cosine would recompute the
     # corpus norm per query and the query norm per corpus row — 3 dots per
     # pair instead of 1 (measured 5.2x end-to-end at 100k x 10: 31.0s -> 5.9s)
     c = corpus.select(id_col, vec_col, l2_norm(F.col(vec_col)).alias("__cn"))
-    if metric == "cosine":
-        denom = F.col("__cn") * F.col("__qn")
-        score = F.when(denom > 0, dot(F.col(vec_col), F.col("__qvec")) / denom).otherwise(
-            F.lit(0.0)
-        )
-    else:
-        score = dot(F.col(vec_col), F.col("__qvec"))
+    denom = F.col("__cn") * F.col("__qn")
+    score = F.when(denom > 0, dot(F.col(vec_col), F.col("__qvec")) / denom).otherwise(
+        F.lit(0.0)
+    )
     scored = c.crossJoin(F.broadcast(q)).select(query_id, id_col, score.alias("score"))
-    return _rank_topk(scored, k, query_id, id_col)
-
-
-def topk_brute_force_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Same result via one numpy matmul per Arrow batch: queries are collected
-    to the driver (small by contract) and closed over; the corpus streams
-    through mapInPandas without shuffle."""
-    import numpy as _np
-
-    ensure_jit_codegen(corpus.sparkSession)
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = [r[id_col] for r in qrows]
-    # one C-level stack, same as the corpus side (driver-side and small by
-    # contract, but symmetric with the batch path)
-    q_mat = _np.array([r[vec_col] for r in qrows], dtype=_np.float64)
-
-    # id dtypes derived from the INPUT schemas (string doc ids etc. must
-    # round-trip — hardcoding 'long' mis-casts or fails in Arrow when
-    # topk_auto routes a non-integer-id frame here)
-    c_id_type = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}[id_col]
-    q_id_type = {f.name: f.dataType.simpleString() for f in queries.schema.fields}[id_col]
-    out_schema = f"{query_id} {q_id_type}, {id_col} {c_id_type}, score double"
-
-    def score_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        qm = np.asarray(q_mat, dtype=np.float64)  # (Q, D)
-        qn = np.linalg.norm(qm, axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # one C-level stack per Arrow batch (each element arrives as a
-            # numpy array already) — no per-row Python float loop in the
-            # hot path
-            cm = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            cn = np.linalg.norm(cm, axis=1)
-            denom = np.outer(cn, qn)
-            sims = np.divide(cm @ qm.T, denom, out=np.zeros_like(denom), where=denom > 0)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(q_ids, n),
-                    id_col: list(pdf[id_col]) * len(q_ids),
-                    "score": sims.T.reshape(-1),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score_batches, schema=out_schema)
     return _rank_topk(scored, k, query_id, id_col)
 
 
@@ -262,29 +166,6 @@ def seed_centroids(
         .collect()
     )
     return [[float(x) for x in r[vec_col]] for r in rows]
-
-
-def kmeans_refine(
-    corpus_sample: list[list[float]], centroids: list[list[float]], iters: int = 10
-) -> list[list[float]]:
-    """Optional Lloyd refinement of the seed centroids on a driver-side
-    sample (numpy, deterministic: fixed init + iteration count, no RNG).
-    Better cell balance / recall than raw seeds; NOT SQL-reproducible, so
-    the oracle path uses the raw seeds and this is recall-tested in pytest."""
-    import numpy as np
-
-    x = np.asarray(corpus_sample, dtype=np.float64)
-    c = np.asarray(centroids, dtype=np.float64)
-    for _ in range(iters):
-        # cosine assignment (normalize both sides)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-        assign = (xn @ cn.T).argmax(axis=1)
-        for j in range(len(c)):
-            members = x[assign == j]
-            if len(members):
-                c[j] = members.mean(axis=0)
-    return [[float(v) for v in row] for row in c]
 
 
 def _cell_dots(vec: Column, centroids: list[list[float]]) -> Column:
@@ -315,7 +196,6 @@ def topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "query_id",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed into ``n_cells``
     coarse-quantizer cells (argmax centroid cosine, a pure expression over
@@ -323,12 +203,10 @@ def topk_ivf(
     shuffled for the index); each query probes its ``nprobe`` closest cells
     and scores only those cells' members.
 
-    Per-query cost ~ |corpus| x nprobe / n_cells.  Pass ``centroids`` (e.g.
-    kmeans_refine output) for better recall; default = seed_centroids, which
-    the DuckDB oracle reproduces exactly."""
+    Per-query cost ~ |corpus| x nprobe / n_cells.  The cells are
+    seed_centroids, which the DuckDB oracle reproduces exactly."""
     ensure_jit_codegen(corpus.sparkSession)
-    if centroids is None:
-        centroids = seed_centroids(corpus, n_cells, id_col=id_col, vec_col=vec_col)
+    centroids = seed_centroids(corpus, n_cells, id_col=id_col, vec_col=vec_col)
     c = corpus.select(
         F.col(id_col),
         F.col(vec_col),
@@ -361,67 +239,6 @@ def topk_ivf(
         .alias("score"),
     )
     return _rank_topk(cand, k, query_id, id_col)
-
-
-def choose_topk_path(
-    n_corpus: int,
-    n_queries: int,
-    crossover: int = TOPK_CROSSOVER_PAIRS,
-    *,
-    allow_pandas: bool = True,
-    pandas_crossover: int = TOPK_PANDAS_LSH_CROSSOVER_PAIRS,
-    max_driver_queries: int = TOPK_MAX_DRIVER_QUERIES,
-) -> str:
-    """Three-way pick by the measured crossovers: 'brute' (pure-JVM
-    expressions) for tiny jobs, 'pandas' (exact Arrow/numpy matmul) through
-    the mid range whenever the query set fits the driver, 'lsh'
-    (approximate) only beyond the matmul/LSH crossover or when the query set
-    itself is too big to collect."""
-    pairs = n_corpus * n_queries
-    if pairs < crossover:
-        return "brute"
-    if allow_pandas and n_queries <= max_driver_queries and pairs < pandas_crossover:
-        return "pandas"
-    return "lsh"
-
-
-def topk_auto(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    n_corpus: int | None = None,
-    n_queries: int | None = None,
-    crossover: int = TOPK_CROSSOVER_PAIRS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    bits: int = 8,
-    tables: int = 4,
-    multiprobe: int = 1,
-    dim: int | None = None,
-) -> DataFrame:
-    """Auto-pick expression-brute vs numpy-matmul-brute vs hyperplane-LSH by
-    the measured |corpus| x |queries| crossovers (TOPK_CROSSOVER_PAIRS /
-    TOPK_PANDAS_LSH_CROSSOVER_PAIRS).  Pass ``n_corpus`` / ``n_queries``
-    when known to skip the count() scans (parquet counts are footer-stat
-    cheap, but a known cardinality is free)."""
-    n_c = n_corpus if n_corpus is not None else corpus.count()
-    n_q = n_queries if n_queries is not None else queries.count()
-    path = choose_topk_path(n_c, n_q, crossover)
-    if path == "lsh":
-        return topk_lsh(
-            corpus, queries, k,
-            bits=bits, tables=tables, multiprobe=multiprobe, dim=dim,
-            id_col=id_col, vec_col=vec_col, query_id=query_id,
-        )
-    if path == "pandas":
-        return topk_brute_force_pandas(
-            corpus, queries, k, id_col=id_col, vec_col=vec_col, query_id=query_id
-        )
-    return topk_brute_force(
-        corpus, queries, k, id_col=id_col, vec_col=vec_col, query_id=query_id
-    )
 
 
 def embedding_near_dup_pairs(

@@ -10,7 +10,7 @@ here is DuckDB-oracle checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -19,12 +19,9 @@ __all__ = [
     "regex_token_count",
     "stopword_ratio",
     "mean_token_len",
-    "quality_features",
     "lang_id",
-    "lang_id_staged",
     "word_shingles",
     "minhash_signature",
-    "doc_fingerprint",
     "STOPWORDS",
     "LANG_MARKERS",
 ]
@@ -97,41 +94,6 @@ def mean_token_len(
     return F.when(n > 0, total.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def punct_ratio(text: Column | str) -> Column:
-    t = _as_col(text)
-    n = F.length(t)
-    punct = F.length(F.regexp_replace(t, r"[^.,;:!?'\"()\[\]{}-]", ""))
-    return F.when(n > 0, punct.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def quality_features(
-    text: Column | str, *, tokens: Column | None = None
-) -> Column:
-    """Quality-scoring struct: the usual pretraining heuristics."""
-    t = _as_col(text)
-    toks = _tokens_or(t, tokens)
-    return F.struct(
-        F.length(t).alias("n_chars"),
-        ws_token_count(tokens=toks).alias("n_tokens"),
-        stopword_ratio(tokens=toks).alias("stopword_ratio"),
-        mean_token_len(tokens=toks).alias("mean_token_len"),
-        punct_ratio(t).alias("punct_ratio"),
-    )
-
-
-def _lang_id_from_scores(
-    scores: dict[str, Column], markers: dict[str, list[str]]
-) -> Column:
-    """argmax of per-language marker counts; deterministic tie-break by the
-    fixed language order; no hits -> 'und'."""
-    best = F.greatest(*scores.values()) if len(scores) > 1 else next(iter(scores.values()))
-    expr = F.lit("und")
-    # reversed so the FIRST language in dict order wins ties
-    for lang in reversed(list(markers)):
-        expr = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def _marker_hits(words: Column, ms: list[str]) -> Column:
     # NB: bind the marker list via a factory, NOT a lambda default argument —
     # pyspark treats a 2-arg lambda in F.filter as (element, index) and would
@@ -145,44 +107,24 @@ def lang_id(
     *,
     tokens: Column | None = None,
 ) -> Column:
-    """Stopword-hit language heuristic as a single Column expression.
+    """Stopword-hit language heuristic as a single Column expression: argmax
+    of per-language marker counts, deterministic tie-break by the fixed
+    language order, no hits -> 'und'.
 
-    The argmax references each score ~3x and each score re-tokenizes, so in
-    hot paths prefer ``lang_id_staged`` (tokens + scores staged as projected
-    columns, each evaluated once)."""
+    The argmax references each score ~3x; codegen subexpression elimination
+    shares the token/score subtrees within this one expression tree, so a
+    single lang_id column needs no staging (measured at 400k rows: 2.1s vs
+    2.8s for scores staged as projected columns).  Pass ``tokens=`` when
+    other token metrics already stage ``ws_tokens``."""
     words = _tokens_or(text, tokens)
     markers = markers or LANG_MARKERS
     scores = {lang: _marker_hits(words, ms) for lang, ms in markers.items()}
-    return _lang_id_from_scores(scores, markers)
-
-
-def lang_id_staged(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "lang_guess",
-    markers: dict[str, list[str]] | None = None,
-) -> DataFrame:
-    """lang_id with tokens and per-language scores staged as projections.
-    Output is identical to ``lang_id`` (parity-tested).
-
-    When to use which (measured at 400k rows): as a SINGLE expression (one
-    groupBy key / one projected column), plain ``lang_id`` is faster (2.1s vs
-    2.8s) because codegen subexpression elimination already shares the
-    token/score subtrees within one expression tree.  Staging wins when the
-    scores feed MULTIPLE separate expressions (e.g. several aggregate
-    expressions, which are NOT cross-CSE'd — see the 1.5x quality-scoring
-    win from staging tokens across aggs)."""
-    markers = markers or LANG_MARKERS
-    staged = df.withColumn("__toks", ws_tokens(text_col)).withColumn(
-        "__scores",
-        F.struct(
-            *[_marker_hits(F.col("__toks"), ms).alias(lang) for lang, ms in markers.items()]
-        ),
-    )
-    scores = {lang: F.col("__scores")[lang] for lang in markers}
-    return staged.withColumn(out_col, _lang_id_from_scores(scores, markers)).drop(
-        "__toks", "__scores"
-    )
+    best = F.greatest(*scores.values()) if len(scores) > 1 else next(iter(scores.values()))
+    expr = F.lit("und")
+    # reversed so the FIRST language in dict order wins ties
+    for lang in reversed(list(markers)):
+        expr = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(expr)
+    return expr
 
 
 def word_shingles(text: Column | str, k: int = 3) -> Column:
@@ -211,10 +153,3 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
         return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(s, F.lit(salt)))))
 
     return F.array(*[salted_min(f"#{i}") for i in range(num_hashes)])
-
-
-def doc_fingerprint(text: Column | str, k: int = 3) -> Column:
-    """Single-value document fingerprint: min-hash of the shingle set (the
-    1-permutation case of minhash_signature) — equal fingerprints <=> very
-    likely near-identical shingle streams."""
-    return F.array_min(F.transform(word_shingles(text, k), F.md5))

@@ -38,6 +38,7 @@ import re
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,19 +138,9 @@ def _is_path_not_found(e: Exception) -> bool:
     silently regenerate the plan: if the input listing drifted meanwhile,
     chunk ids already marked done in the manifest would map to different
     files, duplicating or dropping rows on resume."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # pragma: no cover - very old pyspark
-        return "Path does not exist" in str(e)
     if not isinstance(e, AnalysisException):
         return False
-    ec = ""
-    try:
-        getter = getattr(e, "getCondition", None) or e.getErrorClass
-        ec = getter() or ""
-    except Exception:
-        pass
-    return "PATH_NOT_FOUND" in ec or "Path does not exist" in str(e)
+    return "PATH_NOT_FOUND" in (e.getCondition() or "") or "Path does not exist" in str(e)
 
 
 def _load_or_create_plan(
@@ -180,32 +171,17 @@ def _load_or_create_plan(
             "chunk int, file string, label string",
         ).write.mode("overwrite").parquet(f"{out_path}/_plan")
         return chunks, labels
-    if "file" not in plan_df.columns:
-        if "files" in plan_df.columns:
-            # legacy (pre-r3) plan format: one row per chunk, files ';'-joined.
-            # The listing it froze is still authoritative — migrate in place.
-            plan = {}
-            lbl = {}
-            for r in rows:
-                for f in r["files"].split(";"):
-                    plan.setdefault(r["chunk"], []).append(f)
-                lbl[r["chunk"]] = ""
-            spark.createDataFrame(
-                [(c, f, "") for c, fs in plan.items() for f in fs],
-                "chunk int, file string, label string",
-            ).write.mode("overwrite").parquet(f"{out_path}/_plan")
-            return [sorted(plan[i]) for i in range(len(plan))], [lbl[i] for i in range(len(plan))]
+    if not {"chunk", "file", "label"} <= set(plan_df.columns):
         raise ValueError(
             f"{out_path}/_plan has columns {plan_df.columns} — not a recognized "
-            "chunk-plan format (expected 'chunk, file, label' or the legacy "
-            "'chunk, files'); reprocess from a fresh out_path"
+            "chunk-plan format (expected 'chunk, file, label'); reprocess from "
+            "a fresh out_path"
         )
-    has_label = "label" in plan_df.columns
     plan: dict[int, list[str]] = {}
     lbl: dict[int, str] = {}
     for r in rows:
         plan.setdefault(r["chunk"], []).append(r["file"])
-        lbl[r["chunk"]] = r["label"] if has_label else ""
+        lbl[r["chunk"]] = r["label"]
     chunks = [sorted(plan[i]) for i in range(len(plan))]
     labels = [lbl[i] for i in range(len(plan))]
     # Late-arriving days: under day-chunking the persisted plan is immutable

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,7 +38,7 @@ def _value_fields(df: DataFrame, attr_path: str) -> list[str]:
     spark.read.json only materializes fields present in the data."""
     try:
         struct = df.select(F.explode(F.col(attr_path)).alias("kv")).select("kv.value.*").columns
-    except Exception:
+    except AnalysisException:
         return ["stringValue"]
     return [f for f in _VALUE_FIELDS if f in struct] or ["stringValue"]
 

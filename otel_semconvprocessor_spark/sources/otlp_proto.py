@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import sys as _sys
 
+from pyspark import cloudpickle as _cp
 from pyspark.sql import DataFrame
 
 # Any UDF closure referencing this module's codec functions (the decode
@@ -46,12 +47,7 @@ from pyspark.sql import DataFrame
 # instead of an import reference — the same worker-independence contract
 # extract.py keeps via a self-contained closure.  Idempotent; import-time so
 # it precedes any UDF serialization (which happens at plan build).
-try:
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover - non-pyspark import contexts
-    pass
+_cp.register_pickle_by_value(_sys.modules[__name__])
 
 __all__ = [
     "encode_export_request",

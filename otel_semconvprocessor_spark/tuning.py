@@ -50,9 +50,6 @@ def ensure_jit_codegen(spark: SparkSession) -> None:
     user value — even one equal to Spark's default), so user settings are
     never overridden.  One cheap conf RPC per call; no driver-side cache
     keyed on session identity (CPython recycles ids)."""
-    try:
-        conf = spark.conf
-        if conf.get("spark.sql.codegen.hugeMethodLimit", None) is None:
-            conf.set("spark.sql.codegen.hugeMethodLimit", str(JIT_HUGE_METHOD_LIMIT))
-    except Exception:  # pragma: no cover - conf API unavailable (mocked session)
-        pass
+    conf = spark.conf
+    if conf.get("spark.sql.codegen.hugeMethodLimit", None) is None:
+        conf.set("spark.sql.codegen.hugeMethodLimit", str(JIT_HUGE_METHOD_LIMIT))

@@ -144,3 +144,45 @@ def test_dedup_fast_path_mixed_rows(spark):
     p = {r["url"]: dict(r["attrs"]) for r in extract_pages(df).select("url", "attrs").collect()}
     n = {u: dict(r["attrs"]) for u, r in rows.items()}
     assert p == n
+
+
+_TP = "00-" + "ab" * 16 + "-" + "cd" * 8 + "-01"
+_ADVERSARIAL = [
+    # invalid UTF-8 bytes inside the Server value
+    ("https://ex.com/bad-bytes", "span.name: GET /a\nspan.kind: server\nhttp.method: GET",
+     b"<html>\nServer: ngi\xffnx\xfe\ntraceparent: " + _TP.encode() + b"\n</html>"),
+    # truncated multibyte sequences (mid-line and at the end of the payload)
+    ("https://ex.com/truncated", "span.name: GET /b\nhttp.route: /café",
+     b"Server: caf\xc3\ntraceparent: " + _TP.encode() + b"\n\xe2\x82"),
+    # CRLF line ends: '\r' stays in the value and breaks the anchored grep
+    ("https://ex.com/crlf", "span.name: GET /y\r\nspan.kind: server\r\nhttp.method: GET\r\n",
+     b"Server: nginx\r\ntraceparent: " + _TP.encode() + b"\r\n"),
+    # lone CR is not a line end
+    ("https://ex.com/cr", "span.name: a\rspan.kind: client\nhttp.method: PUT",
+     b"Server: x\rtraceparent: " + _TP.encode()),
+    # NEL and U+2028 are not line ends either
+    ("https://ex.com/nel", "span.name: b\u0085span.kind: server \nhttp.route: /r",
+     ("Server: y\u0085\ntraceparent: " + _TP + " ").encode()),
+    ("https://ex.com/null-html", "span.name: c\nspan.kind: server", None),
+    ("https://ex.com/null-text", None, b"Server: z\ntraceparent: " + _TP.encode()),
+]
+
+
+def test_adversarial_rows_native_matches_pandas(spark):
+    """Under the default (ANSI) session the native twin neither raises on
+    malformed UTF-8 html nor treats '\\r', NEL or U+2028 as line ends: it
+    equals the pandas twin row for row."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(_ADVERSARIAL, "url string, text string, html binary")
+    cols = ["url", "domain", "name", "kind", "schema_url", "trace_id", "span_id"]
+
+    def rows(out):
+        return {r["url"]: (tuple(r[c] for c in cols), dict(r["attrs"]))
+                for r in out.select(*cols, "attrs").collect()}
+
+    pandas_rows = rows(extract_pages(df))
+    assert rows(extract_pages_native(df)) == pandas_rows
+    assert len(pandas_rows) == len(_ADVERSARIAL)
+    crlf = pandas_rows["https://ex.com/crlf"]
+    assert crlf[0][cols.index("name")] == "GET /y\r"
+    assert "traceparent" not in crlf[1]

@@ -502,16 +502,16 @@ def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
     assert late_lineage and late_lineage[0].startswith(f"day={late}")
 
 
-def test_checkpoint_legacy_plan_format_migrates(spark, pages_path, tmp_path):
-    """A _plan written by the pre-r3 format (one row per chunk, files
-    ';'-joined) must still resume — it is migrated in place, not crashed on."""
+def test_checkpoint_legacy_plan_format_rejected(spark, pages_path, tmp_path):
+    """A _plan in the pre-r3 shape (one row per chunk, files ';'-joined) is
+    not a recognized chunk plan: resume raises before touching any chunk or
+    lineage, so the manifest is left exactly as the crashed run wrote it."""
     import os
 
     out = str(tmp_path / "ckpt-legacy")
     with pytest.raises(SimulatedCrash):
         run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=1)
 
-    # rewrite the plan in the legacy shape
     plan = spark.read.parquet(f"{out}/_plan").collect()
     by_chunk = {}
     for r in plan:
@@ -521,12 +521,52 @@ def test_checkpoint_legacy_plan_format_migrates(spark, pages_path, tmp_path):
         "overwrite"
     ).parquet(f"{out}/_plan")
 
-    done = run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
-    assert sorted(done) == [2, 3]
+    def manifest_state():
+        files = sorted(os.listdir(f"{out}/_manifest"))
+        rows = sorted(tuple(r) for r in spark.read.parquet(f"{out}/_manifest").collect())
+        return files, rows
+
+    before = manifest_state()
+    with pytest.raises(ValueError, match="not a recognized chunk-plan format"):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+    assert manifest_state() == before
+    assert sorted(os.listdir(f"{out}/data")) == ["chunk=0", "chunk=1"]
+
+
+def test_job_checkpoint_reads_input_by_file(spark, pages_path, tmp_path, monkeypatch, capsys):
+    """``jobs/run_pipeline.py --checkpoint --input`` chunks by input file:
+    the manifest lineage lists the chunk's parquet files, not the
+    ``hash:i/n`` tag of the whole-input re-filter fallback."""
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
+
+    job_path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "run_pipeline.py")
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", job_path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    out = str(tmp_path / "job-ckpt")
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["run_pipeline.py", "--input", pages_path, "--output", out,
+         "--checkpoint", "--chunks", "2", "--run-id", "job"],
+    )
+    job.main()
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["chunks_processed"] == [0, 1]
+
+    lineage = [r["files"] for r in read_manifest(spark, out).collect()]
+    assert len(lineage) == 2
+    listed = [f for entry in lineage for f in entry.split(";")]
+    assert not any(f.startswith("hash:") for f in listed)
+    assert sorted(listed) == sorted(spark.read.parquet(pages_path).inputFiles())
     assert read_all_output(spark, out).count() == N
-    # and the plan is now the current one-row-per-file format
-    migrated = spark.read.parquet(f"{out}/_plan")
-    assert set(migrated.columns) == {"chunk", "file", "label"}
 
 
 def test_slim_for_sink_is_lossless(spark):

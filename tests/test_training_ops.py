@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from otel_semconvprocessor_spark.operators.dedup import (
-    dedup_exact,
     exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -16,16 +15,13 @@ from otel_semconvprocessor_spark.operators.dedup import (
 )
 from otel_semconvprocessor_spark.operators.similarity import (
     topk_brute_force,
-    topk_brute_force_pandas,
     topk_lsh,
 )
 from otel_semconvprocessor_spark.operators.text import (
-    doc_fingerprint,
     lang_id,
-    lang_id_staged,
     minhash_signature,
-    quality_features,
     regex_token_count,
+    stopword_ratio,
     word_shingles,
     ws_token_count,
 )
@@ -56,11 +52,14 @@ def test_token_counts(spark, docs):
 
 
 def test_quality_features(spark, docs):
-    r = docs.filter("doc_id = 0").select(quality_features("text").alias("q")).collect()[0]["q"]
+    r = docs.filter("doc_id = 0").select(
+        F.length("text").alias("n_chars"),
+        ws_token_count("text").alias("n_tokens"),
+        stopword_ratio("text").alias("stopword_ratio"),
+    ).collect()[0]
     assert r["n_chars"] == 43
     assert r["n_tokens"] == 9
     assert r["stopword_ratio"] == pytest.approx(2 / 9)  # two 'the' hits
-    assert r["punct_ratio"] == 0.0
 
 
 def test_lang_id(spark, docs):
@@ -71,16 +70,9 @@ def test_lang_id(spark, docs):
 
 
 def test_shingles_and_fingerprint(spark, docs):
-    r = docs.filter("doc_id = 0").select(
-        word_shingles("text", 3).alias("sh"), doc_fingerprint("text").alias("fp")
-    ).collect()[0]
-    assert r["sh"][0] == "the quick brown"
-    assert len(r["sh"]) == 7
-    assert len(r["fp"]) == 32  # md5 hex
-    # identical docs -> identical fingerprints
-    fps = {r["doc_id"]: r["fp"] for r in docs.select("doc_id", doc_fingerprint("text").alias("fp")).collect()}
-    assert fps[0] == fps[1]
-    assert fps[0] != fps[4]
+    sh = docs.filter("doc_id = 0").select(word_shingles("text", 3).alias("sh")).collect()[0]["sh"]
+    assert sh[0] == "the quick brown"
+    assert len(sh) == 7
 
 
 def test_minhash_signature_shape(spark, docs):
@@ -97,9 +89,6 @@ def test_exact_dedup(spark, docs):
     groups = exact_dedup_groups(docs).collect()
     dup_group = [g for g in groups if g["n_docs"] > 1]
     assert len(dup_group) == 1 and dup_group[0]["keeper_id"] == 0 and dup_group[0]["n_docs"] == 2
-    kept = dedup_exact(docs)
-    assert kept.count() == len(DOCS) - 1
-    assert kept.filter("doc_id = 1").count() == 0
 
 
 def test_normalized_dedup(spark, docs):
@@ -140,18 +129,6 @@ def test_simhash(spark, docs):
     assert all(h <= 16 for h in pairs.values())
 
 
-def test_topk_brute_force_vs_pandas(spark, sf01_dir):
-    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    a = topk_brute_force(emb, queries, k=5)
-    b = topk_brute_force_pandas(emb, queries, k=5)
-    ra = [(r["query_id"], r["rank"], r["vec_id"], r["score"]) for r in a.orderBy("query_id", "rank").collect()]
-    rb = [(r["query_id"], r["rank"], r["vec_id"], r["score"]) for r in b.orderBy("query_id", "rank").collect()]
-    assert ra == rb
-    # self-similarity first
-    assert all(q == v for q, rank, v, _ in ra if rank == 1)
-
-
 def test_topk_lsh_recall(spark, sf01_dir):
     emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet").cache()
     queries = emb.filter(F.col("vec_id") < 10)
@@ -161,8 +138,11 @@ def test_topk_lsh_recall(spark, sf01_dir):
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.7, recall  # L-table union keeps most true neighbors
-    # every query at least finds itself
+    # every query at least finds itself, and still returns a full k
     assert all((q, q) in a for q in range(10))
+    counts = {r["query_id"]: r["n"] for r in
+              approx.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert counts == {q: 5 for q in range(10)}
 
 
 def test_simhash_chunk_bounds_cover_all_bits():
@@ -193,49 +173,13 @@ def test_simhash_rejects_incomplete_banding(spark, docs):
         simhash_pairs(docs, max_hamming=4, chunks=4)
 
 
-def test_lang_id_staged_parity(spark, docs):
-    plain = {r["doc_id"]: r["g"]
-             for r in docs.select("doc_id", lang_id("text").alias("g")).collect()}
-    staged = {r["doc_id"]: r["lang_guess"]
-              for r in lang_id_staged(docs).select("doc_id", "lang_guess").collect()}
-    assert plain == staged
-
-
 def test_quality_tokens_staging_parity(spark, docs):
-    from otel_semconvprocessor_spark.operators.text import stopword_ratio, ws_tokens
+    from otel_semconvprocessor_spark.operators.text import ws_tokens
 
     unstaged = docs.select("doc_id", stopword_ratio("text").alias("r")).collect()
     d = docs.select("doc_id", ws_tokens("text").alias("__toks"))
     staged = d.select("doc_id", stopword_ratio(tokens=F.col("__toks")).alias("r")).collect()
     assert {r["doc_id"]: r["r"] for r in unstaged} == {r["doc_id"]: r["r"] for r in staged}
-
-
-def test_topk_auto_picks_by_crossover(spark, sf01_dir):
-    from otel_semconvprocessor_spark.operators.similarity import (
-        choose_topk_path,
-        topk_auto,
-        topk_brute_force,
-    )
-
-    assert choose_topk_path(2_000, 10) == "brute"
-    # mid range: exact numpy matmul beats approximate LSH (measured 4x at 1e7)
-    assert choose_topk_path(20_000, 100) == "pandas"
-    assert choose_topk_path(100_000, 10) == "pandas"
-    # matmul/LSH crossover, and the driver-side query-set cap
-    assert choose_topk_path(1_000_000, 100) == "lsh"
-    assert choose_topk_path(100_000, 20_000) == "lsh"
-    assert choose_topk_path(100_000, 20_000, allow_pandas=False) == "lsh"
-    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3)
-    # small regime: auto == exact brute force
-    auto = {(r["query_id"], r["rank"]): r["vec_id"] for r in topk_auto(emb, q, k=5).collect()}
-    brute = {(r["query_id"], r["rank"]): r["vec_id"] for r in topk_brute_force(emb, q, k=5).collect()}
-    assert auto == brute
-    # forced-lsh regime still returns k rows per query
-    lsh = topk_auto(emb, q, k=5, crossover=1, dim=64)
-    counts = {r["query_id"]: r["n"] for r in
-              lsh.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(n == 5 for n in counts.values())
 
 
 def test_embedding_near_dup_pairs(spark):
@@ -254,11 +198,7 @@ def test_embedding_near_dup_pairs(spark):
 
 
 def test_topk_ivf_recall_and_refine(spark, sf01_dir):
-    from otel_semconvprocessor_spark.operators.similarity import (
-        kmeans_refine,
-        seed_centroids,
-        topk_ivf,
-    )
+    from otel_semconvprocessor_spark.operators.similarity import topk_ivf
 
     emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
@@ -274,16 +214,6 @@ def test_topk_ivf_recall_and_refine(spark, sf01_dir):
     counts = {r["query_id"]: r["n"] for r in
               ivf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert all(n == 10 for n in counts.values())
-
-    # kmeans-refined centroids: better or equal recall at same nprobe
-    sample = [[float(x) for x in r["embedding"]]
-              for r in emb.limit(256).collect()]
-    seeds = seed_centroids(emb, 16)
-    refined = kmeans_refine(sample, seeds, iters=5)
-    ivf2 = topk_ivf(emb, q, k=10, n_cells=16, nprobe=8, centroids=refined)
-    got2 = {(r["query_id"], r["vec_id"]) for r in ivf2.collect()}
-    recall2 = len(got2 & truth) / len(truth)
-    assert recall2 >= recall - 0.1, (recall, recall2)
 
 
 def test_topk_ivf_plan_shape(spark, sf01_dir):
@@ -340,27 +270,21 @@ def test_embedding_near_dup_degenerate_bucket_guard(spark):
 
 
 def test_topk_pandas_string_ids(spark):
-    """topk_auto routes the mid range to the Arrow matmul path; string doc
-    ids must round-trip (the output schema is derived from the input schema,
-    not hardcoded long)."""
-    from otel_semconvprocessor_spark.operators.similarity import topk_auto
-
+    """String doc ids must round-trip through the two-phase rank (its Arrow
+    output schema is derived from the input schema, not hardcoded long)."""
     import math
 
     rows = [(f"doc-{i}", [math.sin(i * 7.3 + j) for j in range(8)]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     q = df.filter(F.col("vec_id").isin("doc-0", "doc-1"))
 
-    brute = {(r["query_id"], r["rank"]): r["vec_id"]
-             for r in topk_brute_force(df, q, k=5).collect()}
-    pandas_path = {(r["query_id"], r["rank"]): r["vec_id"]
-                   for r in topk_brute_force_pandas(df, q, k=5).collect()}
-    assert brute == pandas_path
-    # and the auto-router's pandas regime (forced via crossover=1 + small
-    # pandas range) returns the same ids
-    auto = {(r["query_id"], r["rank"]): r["vec_id"]
-            for r in topk_auto(df, q, k=5, crossover=1, bits=4, dim=8).collect()}
-    assert set(auto) == set(brute)
+    got = topk_brute_force(df, q, k=5).collect()
+    ids = {r[0] for r in rows}
+    for qid in ("doc-0", "doc-1"):
+        mine = [r for r in got if r["query_id"] == qid]
+        assert sorted(r["rank"] for r in mine) == [1, 2, 3, 4, 5]
+        assert all(isinstance(r["vec_id"], str) and r["vec_id"] in ids for r in mine)
+        assert next(r["vec_id"] for r in mine if r["rank"] == 1) == qid  # self first
 
 
 def test_release_cached_unpersists_intermediates(spark, docs):
