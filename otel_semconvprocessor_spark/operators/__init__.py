@@ -5,7 +5,7 @@
   extract     extract_pages (pandas/Arrow), extract_pages_native
   enrich      insert_attrs_if_absent, apply_semconv_mappings, join_dims
   route       assign_sink, write_routed_single_pass, write_per_sink_tables,
-              salted_repartition
+              rebalanced_writer, salted_repartition
   metrics     rule_effectiveness, cardinality_summary, metrics_manifest
   exporters   debug_sample, write_with_rotation, duration_histogram
   dedup       exact_dedup_groups, minhash_lsh_pairs,

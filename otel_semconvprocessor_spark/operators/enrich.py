@@ -41,7 +41,13 @@ def insert_attrs_if_absent(df: DataFrame, values: dict[str, str], attrs_col: str
     span attrs, so the common row appends one CONSTANT map instead of
     filtering a per-row additions array through the interpreted HOF path —
     output-identical (same keys in the same order), measured ~0.9s -> ~0.5s
-    per 1M rows in the pipeline chain."""
+    per 1M rows in the pipeline chain.
+
+    A None value inserts nothing; with no value left the frame is returned
+    unchanged."""
+    values = {k: v for k, v in values.items() if v is not None}
+    if not values:
+        return df
     attrs = F.col(attrs_col)
     additions = F.map_from_entries(
         F.filter(

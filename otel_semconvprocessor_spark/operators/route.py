@@ -4,7 +4,7 @@ Reference analogue: the collector service wiring one processed stream into
 multiple exporters (config.yaml:218-232, S4) and the batch processor sizing
 batches (config.yaml:12-14, S5).
 
-Two write strategies:
+Two write strategies, one write shape (``rebalanced_writer``):
 
   * ``write_routed_single_pass`` (default): ONE job writes every sink —
     ``partitionBy(sink, warc_day, lang)`` — so the expensive upstream
@@ -12,19 +12,25 @@ Two write strategies:
     100 TB this is the only sane plan: no persist of the full dataset, no
     per-sink recompute; each sink is a partition subtree (≡ an Iceberg table
     partitioned by days(warc_ts), lang).
-  * ``write_per_sink_tables``: persist + one filtered write per sink, for
-    genuinely separate destination tables (Iceberg ``writeTo`` in prod).
+  * ``write_per_sink_tables``: persist + one filtered ``create_or_replace``
+    per sink through a SinkCatalog, for genuinely separate destination
+    tables (Iceberg ``writeTo`` in prod).
 
-Skew: domains are Zipf-distributed (one hot domain ~50% of rows), so any
-repartition keyed by domain alone would put half the data in one task.
-``salted_repartition`` adds a deterministic salt derived from xxhash64(url) —
-reproducible across runs, unlike rand() — bounding the largest task at
-~1/salt_buckets of the hot key (SURVEY.md §2.5).
+Skew: domains are Zipf-distributed (one hot domain ~50% of rows), so a hot
+(sink, warc_day, lang) combo can outgrow one writer.  The partitioned writes
+put a ``rebalance`` hint on the partition columns: with AQE on, a combo
+stays one file until its shuffle partition passes
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``, and above that AQE
+splits it over several writers — the split follows the sizes measured at run
+time, not a static salt count.  ``salted_repartition`` stays as the explicit
+deterministic primitive for keyed repartitions: a salt derived from
+xxhash64(url), reproducible across runs unlike rand(), bounding the largest
+task at ~1/salt_buckets of the hot key (SURVEY.md §2.5).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -35,6 +41,7 @@ __all__ = [
     "assign_sink",
     "salt_expr",
     "routed_schema",
+    "rebalanced_writer",
     "salted_repartition",
     "slim_for_sink",
     "write_routed_single_pass",
@@ -153,75 +160,43 @@ def routed_schema(df: DataFrame) -> StructType:
     return _with_day(assign_sink(df)).schema
 
 
-def write_routed_single_pass(
-    df: DataFrame,
-    base_path: str,
-    mode: str = "overwrite",
-    *,
-    files_per_partition: int = 1,
-    salt_source: str = "url",
-) -> None:
+def rebalanced_writer(df: DataFrame, partition_cols: list[str]) -> DataFrameWriter:
+    """The one partitioned-write shape: an overwrite writer partitioned by
+    ``partition_cols`` over a ``rebalance`` shuffle on those columns.
+
+    The shuffle is load-bearing: a naive ``partitionBy`` write makes EVERY
+    task open a writer for every combo it sees — O(tasks x combos) tiny
+    files plus a per-task sort (measured 5x slower and 30x more files at
+    local[32]).  Hashing on the partition columns brings it to one file per
+    combo; AQE then splits any combo whose shuffle partition exceeds the
+    advisory partition size over several writers."""
+    rebalanced = df.hint("rebalance", *[F.col(c) for c in partition_cols])
+    return rebalanced.write.mode("overwrite").partitionBy(*partition_cols)
+
+
+def write_routed_single_pass(df: DataFrame, base_path: str) -> None:
     """One job, all sinks: partition layout sink=/warc_day=/lang=.
 
     Equivalent Iceberg DDL (prod): CREATE TABLE sink_x ... PARTITIONED BY
-    (days(warc_ts), lang); here each sink subtree is one such table.
-
-    The explicit repartition on the partition columns is load-bearing: a
-    naive ``partitionBy`` write makes EVERY task open a writer for every
-    (sink, day, lang) combo it sees — O(tasks x combos) tiny files plus a
-    per-task sort (measured 5x slower and 30x more files at local[32]).
-    One hash shuffle on the partition key brings it to O(combos x
-    files_per_partition) right-sized files.  Raise ``files_per_partition``
-    when single partitions exceed executor-friendly sizes (the hot-domain /
-    hot-day skew case): the deterministic url-hash salt spreads each combo
-    over that many writers.
-    """
+    (days(warc_ts), lang); here each sink subtree is one such table."""
     ensure_jit_codegen(df.sparkSession)
     routed = _with_day(assign_sink(df))
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(max(1, files_per_partition)))
-    routed = routed.repartition(
-        F.col("sink"), F.col("warc_day"), F.col("lang"), salt
-    )
-    routed.write.mode(mode).partitionBy("sink", "warc_day", "lang").parquet(base_path)
+    rebalanced_writer(routed, ["sink", "warc_day", "lang"]).parquet(base_path)
 
 
-def write_per_sink_tables(
-    df: DataFrame,
-    base_path: str | None = None,
-    mode: str = "overwrite",
-    *,
-    catalog=None,
-) -> dict[str, str]:
+def write_per_sink_tables(df: DataFrame, catalog) -> dict[str, str]:
     """Separate-tables strategy: persist the normalized frame once, then one
-    filtered write per sink table — the Iceberg ``df.filter(pred).writeTo``
-    shape, routed through the SinkCatalog abstraction (sources/catalog.py):
-    pass an ``IcebergCatalog`` in prod, default ``ParquetDirCatalog`` here.
-    Avoids recomputing the extraction UDF per sink (SURVEY.md §4 'the one
-    place naive Spark recomputes').
-
-    ``mode``: ``overwrite`` (create_or_replace) or ``append`` only — catalog
-    table semantics have no non-destructive 'error'/'ignore' analogue, so any
-    other mode raises instead of silently overwriting.  Returns {sink:
-    catalog table name} (since the catalog refactor; was {sink: path})."""
-    from ..sources.catalog import ParquetDirCatalog
-
-    if mode not in ("overwrite", "append"):
-        raise ValueError(
-            f"unsupported mode {mode!r}: write_per_sink_tables supports "
-            "'overwrite' or 'append' (catalog tables have no error/ignore mode)"
-        )
-    if catalog is None:
-        assert base_path is not None, "pass base_path or a catalog"
-        catalog = ParquetDirCatalog(base_path)
+    filtered ``create_or_replace`` per sink table — the Iceberg
+    ``df.filter(pred).writeTo`` shape, routed through the SinkCatalog
+    abstraction (sources/catalog.py).  Avoids recomputing the extraction UDF
+    per sink (SURVEY.md §4 'the one place naive Spark recomputes').
+    Returns {sink: catalog table name}."""
     routed = _with_day(assign_sink(df)).persist()
     tables = {}
     try:
         for sink in SINKS:
             sub = routed.filter(F.col("sink") == sink).drop("sink")
-            if mode == "append":
-                catalog.append(sub, sink, ["warc_day", "lang"])
-            else:
-                catalog.create_or_replace(sub, sink, ["warc_day", "lang"])
+            catalog.create_or_replace(sub, sink, ["warc_day", "lang"])
             tables[sink] = sink
     finally:
         routed.unpersist()

@@ -24,7 +24,7 @@ write's hash partitioning.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,7 +119,7 @@ def run_pipeline(
     normalized = slim_for_sink(build_normalized(spark, pages, cfg).drop("html", "text"))
     sink_path = f"{out_path}/sinks"
     if catalog is not None:
-        tables = write_per_sink_tables(normalized, catalog=catalog)
+        tables = write_per_sink_tables(normalized, catalog)
         routed = None
         for sink in SINKS:
             sub = catalog.read(spark, tables[sink]).withColumn("sink", F.lit(sink))
@@ -137,7 +137,11 @@ def run_pipeline(
     metrics = metrics_manifest(
         routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct
     )
-    rows = metrics.summary.select("spans_processed").collect()[0][0]
+    # the one-row summary is aggregated once: the collected row gives the
+    # row count and is written back as a local one-row frame
+    summary = metrics.summary.collect()[0]
+    metrics = replace(metrics, summary=spark.createDataFrame([summary], metrics.summary.schema))
+    rows = summary["spans_processed"]
     metrics.summary.write.mode("overwrite").parquet(f"{out_path}/metrics/summary")
     metrics.rule_effectiveness.write.mode("overwrite").parquet(f"{out_path}/metrics/rule_effectiveness")
     metrics.sink_counts.write.mode("overwrite").parquet(f"{out_path}/metrics/sink_counts")

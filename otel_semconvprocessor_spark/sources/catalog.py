@@ -12,19 +12,17 @@ pipeline change:
     are engine-verified in-sandbox against a real V2 TableCatalog — the
     Derby-backed JDBCTableCatalog that ships inside pyspark's jars
     (tests/test_catalog.py::test_iceberg_catalog_verbs_against_real_v2_catalog
-    runs create_or_replace / append / read through the genuine CatalogManager
-    path).  Only the ``days()`` hidden-partition transform still requires the
+    runs create_or_replace / read through the genuine CatalogManager path).
+    Only the ``days()`` hidden-partition transform still requires the
     iceberg-spark-runtime jar (JDBC tables are unpartitioned); that remains a
     first-use-on-cluster smoke.
-  * ``ParquetDirCatalog`` — this sandbox: one directory per table,
+  * ``ParquetDirCatalog`` — the test double: one directory per table,
     identity-partitioned subdirs (``warc_day`` standing in for
-    ``days(warc_ts)``).  Semantics matched to the V2 verbs: createOrReplace
-    = overwrite the tree, append = append files, overwritePartitions =
-    dynamic partition overwrite.
+    ``days(warc_ts)``); createOrReplace = overwrite the tree.  It writes
+    through ``route.rebalanced_writer``, the same shape as the single-pass
+    route, so file counts stay O(partitions), not O(tasks x partitions).
 
-Both run the same explicit repartition-before-write (see
-operators/route.py) so file counts stay O(partitions), not O(tasks x
-partitions).
+The verbs are the two the pipeline uses: ``create_or_replace`` and ``read``.
 """
 
 from __future__ import annotations
@@ -34,33 +32,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.route import rebalanced_writer
+
 __all__ = ["SinkCatalog", "ParquetDirCatalog", "IcebergCatalog"]
 
 
 class SinkCatalog:
-    """DataFrameWriterV2-shaped sink interface (create_or_replace / append /
-    overwrite_partitions / read)."""
+    """DataFrameWriterV2-shaped sink interface (create_or_replace / read)."""
 
     def create_or_replace(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
         raise NotImplementedError
 
-    def append(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
-        raise NotImplementedError
-
-    def overwrite_partitions(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
-        raise NotImplementedError
-
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         raise NotImplementedError
-
-
-def _spread(df: DataFrame, partition_cols: list[str], files_per_partition: int, salt_source: str) -> DataFrame:
-    """The load-bearing repartition before a partitioned write (route.py):
-    O(combos x files_per_partition) files instead of O(tasks x combos)."""
-    cols = [F.col(c) for c in partition_cols]
-    if salt_source in df.columns and files_per_partition >= 1:
-        cols.append(F.pmod(F.xxhash64(F.col(salt_source)), F.lit(max(1, files_per_partition))))
-    return df.repartition(*cols) if cols else df
 
 
 @dataclass
@@ -68,34 +52,12 @@ class ParquetDirCatalog(SinkCatalog):
     """table -> ``{base_path}/{table}`` partitioned-parquet directory."""
 
     base_path: str
-    files_per_partition: int = 1
-    salt_source: str = "url"
 
     def _path(self, table: str) -> str:
         return f"{self.base_path}/{table}"
 
-    def _write(self, df: DataFrame, table: str, partition_cols: list[str], mode: str) -> None:
-        out = _spread(df, partition_cols, self.files_per_partition, self.salt_source)
-        w = out.write.mode(mode)
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(self._path(table))
-
     def create_or_replace(self, df, table, partition_cols):
-        self._write(df, table, partition_cols, "overwrite")
-
-    def append(self, df, table, partition_cols):
-        self._write(df, table, partition_cols, "append")
-
-    def overwrite_partitions(self, df, table, partition_cols):
-        # dynamic partition overwrite: replace only the partitions present in df
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._write(df, table, partition_cols, "overwrite")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        rebalanced_writer(df, partition_cols).parquet(self._path(table))
 
     def read(self, spark, table):
         return spark.read.parquet(self._path(table))
@@ -109,8 +71,6 @@ class IcebergCatalog(SinkCatalog):
 
     catalog: str = "local"
     namespace: str = "sinks"
-    files_per_partition: int = 1
-    salt_source: str = "url"
 
     def _ident(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"
@@ -127,21 +87,12 @@ class IcebergCatalog(SinkCatalog):
                 out.append(F.col(c))
         return out
 
-    def _writer(self, df: DataFrame, table: str):
-        return df.writeTo(self._ident(table))
-
     def create_or_replace(self, df, table, partition_cols):
         t = self._transforms(partition_cols)
-        w = self._writer(df, table)
+        w = df.writeTo(self._ident(table))
         if t:
             w = w.partitionedBy(t[0], *t[1:])
         w.createOrReplace()
-
-    def append(self, df, table, partition_cols):
-        self._writer(df, table).append()
-
-    def overwrite_partitions(self, df, table, partition_cols):
-        self._writer(df, table).overwritePartitions()
 
     def read(self, spark, table):
         return spark.table(self._ident(table))

@@ -26,22 +26,11 @@ from ..operators.route import assign_sink, slim_for_sink
 from ..plans.pipeline import build_normalized
 from ..sources.pages import PAGES_SCHEMA
 
-__all__ = ["stream_pages", "streaming_normalized", "start_streaming_pipeline", "windowed_rule_counts"]
+__all__ = ["stream_pages", "start_streaming_pipeline", "windowed_rule_counts"]
 
 
-def stream_pages(spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
-
-
-def streaming_normalized(spark: SparkSession, pages: DataFrame, cfg: Config | None = None) -> DataFrame:
-    """The batch transform chain (plans/pipeline.build_normalized) over a
-    streaming source: every stage is stateless or stream-static, so the one
-    definition serves both (tested column-for-column equal in
-    tests/test_streaming.py)."""
-    return build_normalized(spark, pages, cfg)
+def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def start_streaming_pipeline(
@@ -54,8 +43,11 @@ def start_streaming_pipeline(
 ) -> StreamingQuery:
     """File-source -> partitioned file-sink with checkpointed exactly-once;
     ``available_now`` drains the current backlog then stops (batch-like runs,
-    incremental across restarts)."""
-    normalized = streaming_normalized(spark, stream_pages(spark, input_dir), cfg)
+    incremental across restarts).  The transform chain is the batch one
+    (plans/pipeline.build_normalized): every stage is stateless or
+    stream-static, so one definition serves both (tested column-for-column
+    equal in tests/test_streaming.py)."""
+    normalized = build_normalized(spark, stream_pages(spark, input_dir), cfg)
     routed = (
         # same sink projection as the batch path (drop raw payloads, binary
         # ids, per-row attr dedup) so stream and batch sinks stay row-identical

@@ -1,11 +1,18 @@
 """SinkCatalog (the Iceberg-shaped write surface): verb semantics on the
-parquet implementation, and the per-sink route strategy through it."""
+parquet implementation, the per-sink route strategy through it, and the
+rebalanced write shape both partitioned writers share."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from otel_semconvprocessor_spark.config import reference_config
-from otel_semconvprocessor_spark.operators.route import SINKS, write_per_sink_tables
+from otel_semconvprocessor_spark.operators.route import (
+    SINKS,
+    write_per_sink_tables,
+    write_routed_single_pass,
+)
 from otel_semconvprocessor_spark.operators.rules import apply_rules
 from otel_semconvprocessor_spark.operators.extract import extract_pages_native
 from otel_semconvprocessor_spark.sources.catalog import IcebergCatalog, ParquetDirCatalog
@@ -31,43 +38,61 @@ def test_create_or_replace_and_read(spark, cat):
     assert {r["lang"] for r in cat.read(spark, "t1").collect()} == {"fr"}
 
 
-def test_append(spark, cat):
-    cat.create_or_replace(_df(spark, ["en"]), "t2", ["lang"])
-    cat.append(_df(spark, ["de"]), "t2", ["lang"])
-    assert cat.read(spark, "t2").count() == 2
-
-
-def test_overwrite_partitions_is_dynamic(spark, cat):
-    cat.create_or_replace(_df(spark, ["en", "de"]), "t3", ["lang"])
-    # overwrite only the 'en' partition; 'de' must survive
-    cat.overwrite_partitions(_df(spark, ["en", "en"]), "t3", ["lang"])
-    rows = cat.read(spark, "t3").groupBy("lang").count().collect()
-    counts = {r["lang"]: r["count"] for r in rows}
-    assert counts == {"en": 2, "de": 1}
-
-
 def test_write_per_sink_tables_through_catalog(spark, cat):
     pages = generate_pages(spark, 300)
     normalized = apply_rules(extract_pages_native(pages), reference_config()).drop("html", "text")
-    tables = write_per_sink_tables(normalized, catalog=cat)
+    tables = write_per_sink_tables(normalized, cat)
     assert set(tables) == set(SINKS)
     total = sum(cat.read(spark, s).count() for s in SINKS)
     assert total == 300  # routed-row equality: disjoint + exhaustive
     # partition layout present (warc_day= / lang= subdirs)
-    import os
-
     sink_dir = f"{cat.base_path}/sink_http"
     assert any(d.startswith("warc_day=") for d in os.listdir(sink_dir))
 
 
-def test_write_per_sink_tables_rejects_unsupported_mode(spark, cat):
-    """'error'/'ignore' must not silently become a full overwrite."""
-    df = _df(spark, ["en"]).withColumn(
-        "warc_ts", F.lit("2024-01-01 00:00:00").cast("timestamp")
-    ).withColumn("operation_type", F.lit("http")).withColumn("rule_id", F.lit("r"))
-    for bad in ("error", "errorifexists", "ignore"):
-        with pytest.raises(ValueError, match="unsupported mode"):
-            write_per_sink_tables(df, catalog=cat, mode=bad)
+def _files_per_combo(base):
+    combos = {}
+    for dirpath, _, names in os.walk(base):
+        n = sum(1 for f in names if f.endswith(".parquet"))
+        if n:
+            combos[os.path.relpath(dirpath, base)] = n
+    return combos
+
+
+def test_routed_write_splits_only_a_hot_combo(spark, tmp_path):
+    """One file per (sink, warc_day, lang) combo at the default advisory
+    partition size; below the hot combo's size AQE spreads that combo alone
+    over several writers, and every row is still written once."""
+    n = 100_000
+    hot = F.col("id") % 100 < 90
+    df = (
+        spark.range(n, numPartitions=4)
+        # an incompressible payload, so the hot combo's shuffle block passes 256 KB
+        .withColumn("url", F.concat(F.lit("https://e.com/"), F.sha2(F.col("id").cast("string"), 256)))
+        .withColumn("operation_type", F.when(hot, "http").otherwise(
+            F.element_at(F.array(F.lit("grpc"), F.lit("messaging"), F.lit("other")),
+                         (F.col("id") % 3 + 1).cast("int"))))
+        .withColumn("rule_id", F.lit("r"))
+        .withColumn("warc_ts", F.lit("2024-01-01 12:00:00").cast("timestamp"))
+        .withColumn("lang", F.when(hot, "en").otherwise("de"))
+    )
+    hot_combo = "sink=sink_http/warc_day=2024-01-01/lang=en"
+
+    write_routed_single_pass(df, str(tmp_path / "default"))
+    default = _files_per_combo(str(tmp_path / "default"))
+    assert len(default) == 4 and set(default.values()) == {1}
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "256k")
+    try:
+        write_routed_single_pass(df, str(tmp_path / "small"))
+    finally:
+        spark.conf.unset(key)
+    small = _files_per_combo(str(tmp_path / "small"))
+    assert small.keys() == default.keys()
+    assert small[hot_combo] > 1
+    assert all(v == 1 for k, v in small.items() if k != hot_combo)
+    assert spark.read.parquet(str(tmp_path / "small")).count() == n
 
 
 def test_run_pipeline_through_catalog(spark, cat, tmp_path):
@@ -101,8 +126,8 @@ def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
     """Round-5 judge task #5: engine-verify the DataFrameWriterV2 verbs
     against a REAL V2 TableCatalog that ships with Spark — the Derby-backed
     JDBCTableCatalog (pyspark bundles derby*.jar).  IcebergCatalog's
-    create_or_replace / append / read run the genuine V2 catalog path
-    (createTable / append through CatalogManager), not the parquet-dir twin.
+    create_or_replace / read run the genuine V2 catalog path (createTable
+    through CatalogManager), not the parquet-dir twin.
     Only the days() hidden-partition transform still needs the Iceberg
     runtime jar (JDBC tables are unpartitioned) — that stays a prod smoke.
     """
@@ -121,8 +146,6 @@ def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
         )
         ic.create_or_replace(df, "t_verbs", [])
         assert ic.read(spark, "t_verbs").count() == 10
-        ic.append(df, "t_verbs", [])
-        assert ic.read(spark, "t_verbs").count() == 20
         # createOrReplace must drop + recreate, not append
         ic.create_or_replace(df.limit(4), "t_verbs", [])
         assert ic.read(spark, "t_verbs").count() == 4

@@ -36,6 +36,17 @@ def test_insert_attrs_if_absent(spark):
     assert attrs["telemetry.source"] == "internal"
     assert attrs["other"] == "x"
 
+    # a None value inserts nothing, on the constant-map rows (null attrs,
+    # no key present) as on the per-row path (one key present)
+    df = _df(spark, [("a", None), ("b", {"other": "x"}), ("c", {"z": "mine"})])
+    out = insert_attrs_if_absent(df, {"k": None, "z": "v"})
+    rows = {r["schema_url"]: dict(r["attrs"]) for r in out.collect()}
+    assert rows == {"a": {"z": "v"}, "b": {"other": "x", "z": "v"}, "c": {"z": "mine"}}
+
+    # an empty config (or one of only None values) leaves the frame as it is
+    for values in ({}, {"k": None}):
+        assert insert_attrs_if_absent(df, values).collect() == df.collect()
+
 
 def test_mapping_rename(spark):
     maps = mappings_table(spark, [SemconvMapping("1.21.0", "rename", "http.method", "http.request.method")])

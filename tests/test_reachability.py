@@ -32,6 +32,7 @@ ALLOWED = {
     "read_otlp_proto_stream": "OTLP protobuf streaming reader",
     "start_streaming_pipeline": "streaming start (documented production entry point)",
     "IcebergCatalog": "Iceberg sink catalog (documented production entry point)",
+    "ParquetDirCatalog": "test double for the SinkCatalog verbs",
     "load_collector_yaml": "collector config loader (documented production entry point)",
     "read_all_output": "read side of run_with_checkpoints' chunked output",
     "SUPPORTED_FUNCTIONS": "OTTL function inventory documented in the README",

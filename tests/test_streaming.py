@@ -8,7 +8,6 @@ from otel_semconvprocessor_spark.plans.pipeline import build_normalized
 from otel_semconvprocessor_spark.sources.pages import generate_pages
 from otel_semconvprocessor_spark.streaming.pipeline import (
     start_streaming_pipeline,
-    streaming_normalized,
     stream_pages,
     windowed_rule_counts,
 )
@@ -80,7 +79,7 @@ def test_streaming_incremental_exactly_once(spark, staged_pages, tmp_path):
 
 
 def test_windowed_rule_counts_stream(spark, staged_pages):
-    normalized = streaming_normalized(spark, stream_pages(spark, staged_pages))
+    normalized = build_normalized(spark, stream_pages(spark, staged_pages))
     agg = windowed_rule_counts(normalized)
     q = (
         agg.writeStream.format("memory")
