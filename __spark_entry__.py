@@ -38,13 +38,9 @@ from otel_semconvprocessor_spark.operators.dedup import (
     normalize_text,
     simhash_pairs,
 )
-from otel_semconvprocessor_spark.operators.enrich import (
-    SemconvMapping,
-    apply_semconv_mappings,
-    mappings_table,
-)
-from otel_semconvprocessor_spark.operators.metrics import cardinality_summary, rule_effectiveness
-from otel_semconvprocessor_spark.operators.route import sink_expr
+from otel_semconvprocessor_spark.operators.enrich import SemconvMapping, apply_semconv_mappings
+from otel_semconvprocessor_spark.operators.metrics import metrics_manifest
+from otel_semconvprocessor_spark.operators.route import assign_sink, sink_expr
 from otel_semconvprocessor_spark.operators.rules import apply_rules
 from otel_semconvprocessor_spark.operators.similarity import (
     embedding_near_dup_pairs,
@@ -374,24 +370,25 @@ def _q_grok_apache_rows(spark, sf_dir):
     )
 
 
+def _metrics(spark, sf_dir):
+    """The pipeline's aggregate stage over the routed cascade output."""
+    n = assign_sink(_normalized(spark, sf_dir))
+    return metrics_manifest(n, reference_config(), run_id="oracle")
+
+
 def _q_rule_effectiveness(spark, sf_dir):
     """M2: span_names_enforced by (rule_id, operation_type, mode)."""
-    n = _normalized(spark, sf_dir)
-    return rule_effectiveness(n, reference_config())
+    return _metrics(spark, sf_dir).rule_effectiveness.drop("run_id")
 
 
 def _q_sink_route_counts(spark, sf_dir):
     """S4: per-sink fan-out counts (routed-row equality)."""
-    n = _normalized(spark, sf_dir)
-    return n.groupBy(
-        sink_expr(F.col("operation_type"), F.col("rule_id")).alias("sink")
-    ).agg(F.count(F.lit(1)).alias("row_count"))
+    return _metrics(spark, sf_dir).sink_counts.select("sink", "row_count")
 
 
 def _q_cardinality_metrics(spark, sf_dir):
     """M1,M4-M7: spans processed, original/reduced distinct names, reduction."""
-    n = _normalized(spark, sf_dir)
-    out = cardinality_summary(n, reference_config())
+    out = _metrics(spark, sf_dir).summary
     return out.select(
         "spans_processed",
         "original_name_count",
@@ -458,15 +455,15 @@ def _q_span_kind_counts(spark, sf_dir):
 
 
 def _q_semconv_mapping_rows(spark, sf_dir):
-    """Graft enrich: schema-version-keyed rename via broadcast-joined table."""
+    """Graft enrich: schema-version-keyed rename, compiled from the mapping
+    list into one CASE on schema_url."""
     w = doc_spans(spark, sf_dir).withColumn(
         "schema_url",
         F.when(F.col("doc_id") % 2 == 1, F.lit("1.21.0")).otherwise(F.lit("1.26.0")),
     )
-    maps = mappings_table(
-        spark, [SemconvMapping("1.21.0", "rename", "http.method", "http.request.method")]
+    mapped = apply_semconv_mappings(
+        w, [SemconvMapping("1.21.0", "rename", "http.method", "http.request.method")]
     )
-    mapped = apply_semconv_mappings(w, maps)
     return mapped.select(
         "doc_id",
         "schema_url",
@@ -1193,12 +1190,13 @@ def _q_disabled_gate_rows(spark, sf_dir):
 
 
 def _q_lookup_dims_rows(spark, sf_dir):
-    """§2.5 lookup dims: broadcast left-join of the lang dimension — row
-    level, so the join semantics (not just counts) are oracle-checked."""
-    from otel_semconvprocessor_spark.operators.enrich import join_dims, lang_dim
+    """§2.5 lookup dims: the lang dimension as the pipeline resolves it (a
+    literal-map lookup) — row level, so the left-join semantics (NULL for
+    an unknown code) are oracle-checked."""
+    from otel_semconvprocessor_spark.operators.enrich import lookup_lang_name
 
     d = _docs(spark, sf_dir).select("doc_id", "lang")
-    return join_dims(d, (lang_dim(spark), "lang")).select("doc_id", "lang", "lang_name")
+    return d.select("doc_id", "lang", lookup_lang_name(F.col("lang")).alias("lang_name"))
 
 
 def _q_salted_bucket_distribution(spark, sf_dir):

@@ -235,15 +235,10 @@ def run_pipeline_level(cores: int, rows: int, out_dir: str) -> dict:
     throughput measurement: the first run pays one-off costs a long-lived
     100TB job amortizes to zero — Janino codegen compilation (~5-8s/JVM),
     Python-worker spin-up, JIT warmup, page-cache fill.  Likewise the plan is
-    BUILT ONCE per session (analysis of the 18-rule cascade expression tree
-    and the tiny broadcast-table constructions are per-job driver costs a
-    long-lived job pays once); per-run physical planning, scheduling, and all
+    BUILT ONCE per session (analysis of the 18-rule cascade and the compiled
+    mapping expression trees is a per-job planning cost a long-lived job pays
+    once); per-run physical planning, scheduling, and all
     data movement stay inside the timed region.  Both walls are reported."""
-    from otel_semconvprocessor_spark.operators.enrich import (
-        default_semconv_mappings,
-        lang_dim,
-        mappings_table,
-    )
     from otel_semconvprocessor_spark.plans.pipeline import build_normalized
     from otel_semconvprocessor_spark.operators.route import (
         slim_for_sink,
@@ -256,18 +251,10 @@ def run_pipeline_level(cores: int, rows: int, out_dir: str) -> dict:
         # input pre-staged by the generate worker (the 100TB case reads
         # pre-existing Iceberg data); nothing here but the pipeline is timed
         pages_df = spark.read.parquet(f"{out_dir}/pages")
-        mappings_df = mappings_table(spark, default_semconv_mappings()).persist()
-        mappings_df.count()
-        dim = lang_dim(spark).persist()
-        dim.count()
         # slim_for_sink = the production sink projection (run_pipeline uses
         # the same): lossless per-row dedup + binary ids, 45% fewer sink
         # bytes -> less memory-bus traffic in shuffle + encode + tmpfs write
-        normalized = slim_for_sink(
-            build_normalized(
-                spark, pages_df, mappings_df=mappings_df, dims=[(dim, "lang")]
-            ).drop("html", "text")
-        )
+        normalized = slim_for_sink(build_normalized(spark, pages_df).drop("html", "text"))
         normalized.schema  # force analysis once, outside the timed region
 
         def once() -> float:
@@ -642,11 +629,11 @@ def write_baseline_md(
         " too expensive to sample more than ONE host window per driver run"
         " (BENCH_r03: single loaded window, 0.643).  2M keeps the cap"
         " >= 0.9 and fits 2-3 probe-gated windows in the same budget."
-        "  The tiny broadcast mapping/dim tables are built ONCE per session"
-        " (the bench passes mappings_df=/dims= into build_normalized), so"
-        " their createDataFrame cost sits outside per-run S — the r3 review"
-        " asked for this contribution to be priced: it is ~0.3-0.5s once"
-        " per session, zero per run.",
+        "  The semconv mappings and the lang dimension compile to literal"
+        " expressions inside build_normalized, so no mapping or dimension"
+        " table is built or broadcast: they add nothing to S, per session"
+        " or per run (the tables they replace cost ~0.3-0.5s once per"
+        " session).",
         "",
         "## Why the scaling pair is 2 -> 8 cores on this box",
         "",

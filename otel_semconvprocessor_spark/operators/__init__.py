@@ -3,10 +3,11 @@
   rules       apply_rules (the one cascade; schema_url-versioned rules
               dispatch through a broadcast rule table), compile_rule_columns
   extract     extract_pages (pandas/Arrow), extract_pages_native
-  enrich      insert_attrs_if_absent, apply_semconv_mappings, join_dims
+  enrich      insert_attrs_if_absent, apply_semconv_mappings, lookup_lang_name,
+              join_dims
   route       assign_sink, write_routed_single_pass, write_per_sink_tables,
               rebalanced_writer, salted_repartition
-  metrics     rule_effectiveness, cardinality_summary, metrics_manifest
+  metrics     metrics_manifest (one pass: metrics_pass), local_frame
   exporters   debug_sample, write_with_rotation, duration_histogram
   dedup       exact_dedup_groups, minhash_lsh_pairs,
               simhash64/simhash_pairs, ngram_jaccard_pairs

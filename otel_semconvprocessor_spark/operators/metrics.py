@@ -1,10 +1,13 @@
 """Aggregate stage: the reference's observability metrics (M1-M8,
-metadata.yaml:32-90) as distributed aggregations over the normalized frame.
+metadata.yaml:32-90) from one distributed aggregation over the routed frame.
 
 The reference keeps process-global ``map[string]int64`` counters filled
-per-span (processor.go:32-33,193-200,312-319); here every metric is a groupBy
-/ agg over columns, so it distributes and is exact at any scale (with
-``approx_count_distinct`` available as the 10^12-cardinality escape hatch).
+per-span (processor.go:32-33,193-200,312-319).  Here ONE action computes
+them all: a GROUPING SETS aggregate over the pruned columns — per (sink,
+rule_id, operation_type) counts, and the distinct original and matched
+names — folded by a second groupBy to at most (combos + 1) rows.  Those rows
+are collected, and the three metrics tables are built from them as local
+frames, so writing each is one single-task job and collecting it runs none.
 
 Original-name recovery: in enforce+preserve mode the pre-rule name is
 ``coalesce(name_original, name)`` — name_original is only written when the
@@ -16,15 +19,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import MODE_ENFORCE, Config
 
 __all__ = [
     "original_name_col",
-    "rule_effectiveness",
-    "cardinality_summary",
+    "local_frame",
+    "metrics_pass",
     "metrics_manifest",
     "sliding_window_counts",
 ]
@@ -70,46 +74,50 @@ def original_name_col(cfg: Config) -> Column:
     return F.col("name")
 
 
-def rule_effectiveness(normalized: DataFrame, cfg: Config) -> DataFrame:
-    """M2: ``span_names_enforced`` counter by (rule_id, operation_type, mode)
-    (processor.go:277-282,304-309) — the BENCHMARK.md:62-73 table.
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A frame of in-memory rows, built from an Arrow table: its plan is a
+    ``LocalTableScan``, so collecting it runs no job and writing it runs one
+    single-task job (``createDataFrame`` over a list is instead a Python RDD
+    scan — a job of one task per core that starts Python workers).  The
+    names, types and nullability (``NOT NULL``) of the ``ddl`` schema are
+    kept."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    Label parity: the reference records operation_type as "" when the type
-    expression was absent or errored (processor.go:256-262)."""
+    arrow = to_arrow_schema(StructType.fromDDL(ddl))
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow)
+    )
+
+
+def metrics_pass(routed: DataFrame, cfg: Config) -> DataFrame:
+    """The aggregate stage's one action, unexecuted.  ``routed`` carries a
+    ``sink`` column.  Rows with ``names == 0`` are the (sink, rule_id,
+    operation_type) combos with their row counts; the one row with
+    ``names == 1`` holds the distinct original and matched name counts.
+
+    M5 parity: a matched name counts ONLY for rule-matched spans
+    (operationCount is filled after a match, processor.go:312-319); the
+    reference records operation_type as "" when the type expression was
+    absent or errored (processor.go:256-262)."""
+    pruned = routed.select(
+        "sink",
+        "rule_id",
+        F.coalesce(F.col("operation_type"), F.lit("")).alias("operation_type"),
+        original_name_col(cfg).alias("original_name"),
+        F.when(F.col("rule_id").isNotNull(), F.col("operation_name")).alias("matched_name"),
+    )
+    combo = ["sink", "rule_id", "operation_type"]
     return (
-        normalized.filter(F.col("rule_id").isNotNull())
-        .groupBy(
-            F.col("rule_id"),
-            F.coalesce(F.col("operation_type"), F.lit("")).alias("operation_type"),
+        pruned.groupingSets([combo, ["original_name"], ["matched_name"]], *combo, "original_name", "matched_name")
+        .agg(F.count(F.lit(1)).alias("n"), F.grouping("sink").alias("names"))
+        .groupBy("names", *combo)
+        .agg(
+            F.sum("n").alias("rows"),
+            F.count("original_name").alias("original_names"),
+            F.count("matched_name").alias("matched_names"),
         )
-        .agg(F.count(F.lit(1)).alias("enforced_count"))
-        .withColumn("mode", F.lit(cfg.span_processing.mode))
-    )
-
-
-def cardinality_summary(normalized: DataFrame, cfg: Config, *, approx: bool = False) -> DataFrame:
-    """M1 + M4-M7: spans processed, original/reduced unique name counts and
-    the reduction percentage (processor.go:154-157,378-395).
-
-    M5 parity: reduced counts ONLY rule-matched spans (operationCount is
-    filled after a match, processor.go:312-319).
-    """
-    orig = original_name_col(cfg)
-    matched_op = F.when(F.col("rule_id").isNotNull(), F.col("operation_name"))
-    cd = F.approx_count_distinct if approx else F.countDistinct
-    out = normalized.agg(
-        F.count(F.lit(1)).alias("spans_processed"),
-        cd(orig).alias("original_name_count"),
-        cd(matched_op).alias("reduced_name_count"),
-    )
-    return out.withColumn(
-        "reduction_pct",
-        F.when(
-            F.col("original_name_count") > 0,
-            (F.col("original_name_count") - F.col("reduced_name_count"))
-            / F.col("original_name_count")
-            * 100.0,
-        ).otherwise(F.lit(0.0)),
     )
 
 
@@ -118,30 +126,59 @@ class MetricsManifest:
     summary: DataFrame  # one row
     rule_effectiveness: DataFrame
     sink_counts: DataFrame
+    spans_processed: int
 
 
 def metrics_manifest(
-    normalized: DataFrame,
+    routed: DataFrame,
     cfg: Config,
     *,
     run_id: str,
     duration_ms: float | None = None,
-    approx: bool = False,
 ) -> MetricsManifest:
-    """The aggregate-stage output bundle (FIXTURES.md §6).  ``normalized``
-    should be the routed frame (with ``sink``) read back from the sink write —
-    metrics then re-scan only the few columns they need (column pruning)
-    instead of caching the full dataset."""
-    summary = (
-        cardinality_summary(normalized, cfg, approx=approx)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("duration_ms", F.lit(duration_ms).cast("double"))
+    """The aggregate-stage output bundle (FIXTURES.md §6): M1 + M4-M7 in
+    ``summary`` (spans processed, original/reduced unique name counts and
+    the reduction percentage, processor.go:154-157,378-395), M2's
+    ``span_names_enforced`` counter by (rule_id, operation_type, mode) in
+    ``rule_effectiveness`` (processor.go:277-282,304-309), and per-sink row
+    counts.  ``routed`` is the routed frame (with ``sink``) read back from
+    the sink write; ``metrics_pass`` re-scans only the columns it needs and
+    runs once.  The tables are local frames; ``sink`` and ``rule_id`` keep
+    the nullability they have in ``routed``."""
+    spark = routed.sparkSession
+    not_null = {f.name: "" if f.nullable else " NOT NULL" for f in routed.schema.fields}
+    combos, names = [], (0, 0)
+    for r in metrics_pass(routed, cfg).collect():
+        if r["names"]:
+            names = (r["original_names"], r["matched_names"])
+        else:
+            combos.append((r["sink"], r["rule_id"], r["operation_type"], r["rows"]))
+    spans = sum(n for *_, n in combos)
+    original, reduced = names
+    pct = (original - reduced) / original * 100.0 if original > 0 else 0.0
+    summary = local_frame(
+        spark,
+        [(spans, original, reduced, pct, run_id, duration_ms)],
+        "spans_processed bigint NOT NULL, original_name_count bigint NOT NULL, "
+        "reduced_name_count bigint NOT NULL, reduction_pct double, run_id string NOT NULL, "
+        f"duration_ms double{'' if duration_ms is None else ' NOT NULL'}",
     )
-    effectiveness = rule_effectiveness(normalized, cfg).withColumn("run_id", F.lit(run_id))
-    sink_col = F.col("sink") if "sink" in normalized.columns else F.lit("all")
-    sink_counts = (
-        normalized.groupBy(sink_col.alias("sink"))
-        .agg(F.count(F.lit(1)).alias("row_count"))
-        .withColumn("run_id", F.lit(run_id))
+    enforced: dict[tuple[str, str], int] = {}
+    per_sink: dict[str, int] = {}
+    for sink, rule_id, op_type, n in combos:
+        if rule_id is not None:
+            enforced[rule_id, op_type] = enforced.get((rule_id, op_type), 0) + n
+        per_sink[sink] = per_sink.get(sink, 0) + n
+    effectiveness = local_frame(
+        spark,
+        [(rule_id, op_type, n, cfg.span_processing.mode, run_id)
+         for (rule_id, op_type), n in sorted(enforced.items())],
+        f"rule_id string{not_null['rule_id']}, operation_type string NOT NULL, "
+        "enforced_count bigint NOT NULL, mode string NOT NULL, run_id string NOT NULL",
     )
-    return MetricsManifest(summary, effectiveness, sink_counts)
+    sink_counts = local_frame(
+        spark,
+        [(sink, n, run_id) for sink, n in sorted(per_sink.items(), key=lambda kv: kv[0] or "")],
+        f"sink string{not_null['sink']}, row_count bigint NOT NULL, run_id string NOT NULL",
+    )
+    return MetricsManifest(summary, effectiveness, sink_counts, spans)

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import Config
 from ..plans.pipeline import build_normalized
+from ..operators.metrics import local_frame
 from ..operators.route import assign_sink, slim_for_sink
 
 __all__ = [
@@ -60,6 +61,7 @@ MANIFEST_SCHEMA = (
     "run_id string, chunk int, row_count long, wall_sec double, "
     "finished_at double, files string"
 )
+PLAN_SCHEMA = "chunk int, file string, label string"
 
 
 class SimulatedCrash(RuntimeError):
@@ -166,9 +168,8 @@ def _load_or_create_plan(
             labels = ["" for _ in chunks]
         else:
             raise ValueError(f"chunk_by must be 'files' or 'day', got {chunk_by!r}")
-        spark.createDataFrame(
-            [(i, f, labels[i]) for i, fs in enumerate(chunks) for f in fs],
-            "chunk int, file string, label string",
+        local_frame(
+            spark, [(i, f, labels[i]) for i, fs in enumerate(chunks) for f in fs], PLAN_SCHEMA
         ).write.mode("overwrite").parquet(f"{out_path}/_plan")
         return chunks, labels
     if not {"chunk", "file", "label"} <= set(plan_df.columns):
@@ -202,9 +203,9 @@ def _load_or_create_plan(
                     for i, d in enumerate(new_days)
                     for f in grouped[d]
                 ]
-                spark.createDataFrame(
-                    new_rows, "chunk int, file string, label string"
-                ).write.mode("append").parquet(f"{out_path}/_plan")
+                local_frame(spark, new_rows, PLAN_SCHEMA).write.mode("append").parquet(
+                    f"{out_path}/_plan"
+                )
                 for d in new_days:
                     chunks.append(sorted(grouped[d]))
                     labels.append(d)
@@ -280,7 +281,8 @@ def run_with_checkpoints(
             f"{out_path}/data/chunk={chunk}"
         )
         n = obs.get["rows"]
-        manifest_row = spark.createDataFrame(
+        manifest_row = local_frame(
+            spark,
             [(run_id, chunk, n, time.time() - t0, float(time.time()), chunk_lineage[chunk])],
             MANIFEST_SCHEMA,
         )

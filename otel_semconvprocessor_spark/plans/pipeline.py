@@ -5,26 +5,28 @@ Mirrors the reference's receiver -> [semconv, batch] -> exporters pipeline
 
     pages (Iceberg/parquet scan)
       -> extract_pages            (Arrow-batched pandas UDF, one pass)
-      -> apply_semconv_mappings   (broadcast-joined rename/move/copy/delete)
+      -> apply_semconv_mappings   (rename/move/copy/delete compiled to one
+                                   CASE on schema_url)
       -> insert_attrs_if_absent   (resource processor, config.yaml:17-27)
-      -> join_dims                (broadcast lookups)
+      -> lookup_lang_name         (lang dimension as a literal-map lookup)
       -> apply_rules              (compiled CASE cascade — processor.go parity;
                                    schema_url-versioned rules via a broadcast
                                    dispatch table)
       -> write single-pass, partitioned by (sink, warc_day, lang)
-      -> metrics from a pruned re-scan of the written sinks
+      -> metrics from one pruned aggregation over the written sinks
 
 Design for 100 TB: exactly ONE pass over the raw bytes (the pandas UDF runs
-once — the sink fan-out happens inside the same write job); metrics re-scan
-the written columnar output reading only 5 narrow columns (no persist of the
-full dataset); all joins are broadcast; the only wide operation is the
-write's hash partitioning.
+once — the sink fan-out happens inside the same write job); the transform
+chain has no join and no shuffle, so the write's rebalance is the only wide
+operation; the metrics stage re-scans the written columnar output reading
+only 5 narrow columns (no persist of the full dataset), in one action whose
+few result rows become the three metrics tables.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,9 +36,7 @@ from ..operators.enrich import (
     apply_semconv_mappings,
     default_semconv_mappings,
     insert_attrs_if_absent,
-    join_dims,
-    lang_dim,
-    mappings_table,
+    lookup_lang_name,
 )
 from ..operators.extract import extract_pages
 from ..operators.metrics import MetricsManifest, metrics_manifest
@@ -68,28 +68,17 @@ class PipelineResult:
     duration_sec: float
 
 
-def build_normalized(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: Config | None = None,
-    *,
-    mappings_df: DataFrame | None = None,
-    dims: list[tuple[DataFrame, str]] | None = None,
-) -> DataFrame:
+def build_normalized(spark: SparkSession, pages: DataFrame, cfg: Config | None = None) -> DataFrame:
     """The full transform plan, unexecuted (lazy).  Every stage is stateless
-    or stream-static, so the same chain serves batch and streaming sources.
-
-    ``mappings_df`` / ``dims`` let a long-lived driver (or the bench's timed
-    region) build the tiny broadcast tables ONCE and reuse them across runs —
-    their createDataFrame + local aggregation is a fixed per-plan driver cost
-    otherwise."""
+    or stream-static, so the same chain serves batch and streaming sources."""
     cfg = cfg or reference_config()
     ensure_jit_codegen(spark)
-    if mappings_df is None:
-        mappings_df = mappings_table(spark, default_semconv_mappings())
-    df = apply_semconv_mappings(extract_pages(pages), mappings_df)
+    df = apply_semconv_mappings(extract_pages(pages), default_semconv_mappings())
     df = insert_attrs_if_absent(df, RESOURCE_ATTRS)
-    df = join_dims(df, *(dims if dims is not None else [(lang_dim(spark), "lang")]))
+    # the column order the dimension joins gave: join keys first, the
+    # dimension's value last
+    rest = [c for c in df.columns if c not in ("lang", "schema_url")]
+    df = df.select("lang", "schema_url", *rest, lookup_lang_name(F.col("lang")).alias("lang_name"))
     return apply_rules(df, cfg)
 
 
@@ -100,7 +89,6 @@ def run_pipeline(
     cfg: Config | None = None,
     *,
     run_id: str = "run-0",
-    approx_distinct: bool = False,
     catalog=None,
 ) -> PipelineResult:
     """End-to-end run.  Default sink = the single-pass partitioned parquet
@@ -134,15 +122,9 @@ def run_pipeline(
         write_routed_single_pass(normalized, sink_path)
         routed = spark.read.schema(routed_schema(normalized)).parquet(sink_path)
     duration = time.time() - start
-    metrics = metrics_manifest(
-        routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct
-    )
-    # the one-row summary is aggregated once: the collected row gives the
-    # row count and is written back as a local one-row frame
-    summary = metrics.summary.collect()[0]
-    metrics = replace(metrics, summary=spark.createDataFrame([summary], metrics.summary.schema))
-    rows = summary["spans_processed"]
-    metrics.summary.write.mode("overwrite").parquet(f"{out_path}/metrics/summary")
-    metrics.rule_effectiveness.write.mode("overwrite").parquet(f"{out_path}/metrics/rule_effectiveness")
-    metrics.sink_counts.write.mode("overwrite").parquet(f"{out_path}/metrics/sink_counts")
-    return PipelineResult(sink_path, metrics, rows, time.time() - start)
+    metrics = metrics_manifest(routed, cfg, run_id=run_id, duration_ms=duration * 1000.0)
+    # a local frame of n rows scans as min(n, cores) partitions: coalesce
+    # so each table is written by one task as one file
+    for name in ("summary", "rule_effectiveness", "sink_counts"):
+        getattr(metrics, name).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/metrics/{name}")
+    return PipelineResult(sink_path, metrics, metrics.spans_processed, time.time() - start)

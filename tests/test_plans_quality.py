@@ -1,50 +1,92 @@
 """Physical-plan quality gates: the properties that keep the pipeline viable
-at 100 TB — column pruning on the metrics re-scan, broadcast-only joins in the
-transform chain, bounded file counts from the routed write."""
+at 100 TB — column pruning on the metrics re-scan, no sort-merge join in the
+transform chain, bounded file counts from the routed write, and the number of
+Spark jobs one run launches."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from otel_semconvprocessor_spark.config import reference_config
-from otel_semconvprocessor_spark.operators.metrics import cardinality_summary, rule_effectiveness
+from otel_semconvprocessor_spark.operators.metrics import metrics_pass
 from otel_semconvprocessor_spark.plans.pipeline import build_normalized, run_pipeline
 from otel_semconvprocessor_spark.sources.pages import generate_pages
 
 
 @pytest.fixture(scope="module")
-def sink_path(spark, tmp_path_factory):
+def pipeline_run(spark, tmp_path_factory):
+    """One run_pipeline call on 400 generated pages, under its own job group:
+    (result, number of Spark jobs it launched)."""
     out = str(tmp_path_factory.mktemp("plans") / "out")
-    run_pipeline(spark, generate_pages(spark, 400), out, run_id="plans")
-    return f"{out}/sinks"
+    pages = generate_pages(spark, 400)
+    sc = spark.sparkContext
+    sc.setJobGroup("plans-quality-run", "run_pipeline job budget")
+    try:
+        res = run_pipeline(spark, pages, out, run_id="plans")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup("plans-quality-run"))
+
+
+@pytest.fixture(scope="module")
+def sink_path(pipeline_run):
+    return pipeline_run[0].sink_path
 
 
 def test_metrics_scan_prunes_columns(spark, sink_path):
     """The aggregate stage must read only the narrow columns it needs — at
     10^12 rows re-scanning html/text for a count would be catastrophic."""
     routed = spark.read.parquet(sink_path)
-    cfg = reference_config()
-    plan = rule_effectiveness(routed, cfg)._jdf.queryExecution().executedPlan().toString()
-    schema_line = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert schema_line, plan
-    assert "html" not in schema_line[0] and "text" not in schema_line[0]
-    assert "attrs" not in schema_line[0]
+    plan = metrics_pass(routed, reference_config())._jdf.queryExecution().executedPlan().toString()
+    schema_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert len(schema_lines) == 1, plan  # one scan for every metric
+    for col in ("attrs", "html", "text"):
+        assert col not in schema_lines[0], schema_lines[0]
 
-    plan2 = cardinality_summary(routed, cfg)._jdf.queryExecution().executedPlan().toString()
-    schema_line2 = [ln for ln in plan2.splitlines() if "ReadSchema" in ln]
-    assert "html" not in schema_line2[0] and "attrs" not in schema_line2[0]
+
+def test_run_pipeline_job_budget(pipeline_run):
+    """The write (rebalance + write), the sink read-back, the one metrics
+    action and three single-task metrics-table writes: no job for the
+    mapping or dimension tables, none for a locally built row."""
+    _, jobs = pipeline_run
+    assert jobs <= 8, jobs
+
+
+def test_metrics_tables_schema(pipeline_run):
+    """The metrics tables keep their names, types and nullability."""
+    m = pipeline_run[0].metrics
+    assert m.summary.schema == StructType([
+        StructField("spans_processed", LongType(), False),
+        StructField("original_name_count", LongType(), False),
+        StructField("reduced_name_count", LongType(), False),
+        StructField("reduction_pct", DoubleType(), True),
+        StructField("run_id", StringType(), False),
+        StructField("duration_ms", DoubleType(), False),
+    ])
+    assert m.rule_effectiveness.schema == StructType([
+        StructField("rule_id", StringType(), True),
+        StructField("operation_type", StringType(), False),
+        StructField("enforced_count", LongType(), False),
+        StructField("mode", StringType(), False),
+        StructField("run_id", StringType(), False),
+    ])
+    assert m.sink_counts.schema == StructType([
+        StructField("sink", StringType(), True),
+        StructField("row_count", LongType(), False),
+        StructField("run_id", StringType(), False),
+    ])
 
 
 def test_transform_chain_has_no_sort_merge_join(spark):
-    """Every join in the normalize chain is small-side broadcast."""
+    """No join in the normalize chain may shuffle the fact side."""
     pages = generate_pages(spark, 200)
     plan = (
         build_normalized(spark, pages)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # mapping table + lang dim
 
 
 def test_routed_write_file_count_bounded(spark, sink_path):
