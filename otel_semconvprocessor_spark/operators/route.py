@@ -4,21 +4,24 @@ Reference analogue: the collector service wiring one processed stream into
 multiple exporters (config.yaml:218-232, S4) and the batch processor sizing
 batches (config.yaml:12-14, S5).
 
-Two write strategies, one write shape (``rebalanced_writer``):
+One sink-row format and one partitioned write serve every writer:
 
-  * ``write_routed_single_pass`` (default): ONE job writes every sink —
-    ``partitionBy(sink, warc_day, lang)`` — so the expensive upstream
-    (pandas-UDF extraction) runs exactly once and nothing is cached.  At
-    100 TB this is the only sane plan: no persist of the full dataset, no
-    per-sink recompute; each sink is a partition subtree (≡ an Iceberg table
-    partitioned by days(warc_ts), lang).
-  * ``write_per_sink_tables``: persist + one filtered ``create_or_replace``
-    per sink through a SinkCatalog, for genuinely separate destination
-    tables (Iceberg ``writeTo`` in prod).
+  * ``slim_for_sink`` — the lossless sink projection (raw payloads dropped,
+    binary ids, per-row attr dedup); ``routed_rows`` adds the ``sink`` and
+    ``warc_day`` columns; ``SINK_PARTITIONS`` is the partition layout
+    sink=/warc_day=/lang=.  Batch, checkpoint and streaming runs all write
+    these rows, so their sinks are row-identical.
+  * ``write_routed_single_pass``: ONE job writes every sink, partitioned by
+    ``SINK_PARTITIONS``, so the expensive upstream (pandas-UDF extraction)
+    runs exactly once and nothing is cached.  At 100 TB this is the only
+    sane plan: no persist of the full dataset, no per-sink recompute; each
+    sink is a partition subtree (≡ an Iceberg table partitioned by
+    days(warc_ts), lang).  ``run_pipeline`` writes through it, and
+    ``run_with_checkpoints`` writes each chunk through it under ``chunk=<i>``.
 
 Skew: domains are Zipf-distributed (one hot domain ~50% of rows), so a hot
-(sink, warc_day, lang) combo can outgrow one writer.  The partitioned writes
-put a ``rebalance`` hint on the partition columns: with AQE on, a combo
+(sink, warc_day, lang) combo can outgrow one writer.  ``rebalanced_writer``
+puts a ``rebalance`` hint on the partition columns: with AQE on, a combo
 stays one file until its shuffle partition passes
 ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, and above that AQE
 splits it over several writers — the split follows the sizes measured at run
@@ -32,23 +35,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..tuning import ensure_jit_codegen
 
 __all__ = [
     "SINKS",
+    "SINK_PARTITIONS",
     "assign_sink",
     "salt_expr",
-    "routed_schema",
     "rebalanced_writer",
+    "routed_rows",
     "salted_repartition",
     "slim_for_sink",
     "write_routed_single_pass",
-    "write_per_sink_tables",
 ]
 
 SINKS = ["sink_http", "sink_grpc", "sink_db", "sink_messaging", "sink_other"]
+#: the sink tree's partition layout: sink=/warc_day=/lang=
+SINK_PARTITIONS = ["sink", "warc_day", "lang"]
 
 
 def sink_expr(op_type: Column, rule_id: Column) -> Column:
@@ -89,8 +93,11 @@ def salted_repartition(
     )
 
 
-def _with_day(df: DataFrame) -> DataFrame:
-    return df.withColumn("warc_day", F.to_date(F.col("warc_ts")))
+def routed_rows(df: DataFrame) -> DataFrame:
+    """The sink rows of ``df``: its columns plus ``sink`` and ``warc_day``.
+    Readers of a sink tree pass ``routed_rows(df).schema`` instead of
+    inferring one (an empty input writes no data files to infer from)."""
+    return assign_sink(df).withColumn("warc_day", F.to_date(F.col("warc_ts")))
 
 
 #: attr-map keys that duplicate top-level sink columns (the enforce mode
@@ -112,6 +119,10 @@ def slim_for_sink(df: DataFrame) -> DataFrame:
     """Information-preserving sink projection, applied BEFORE the write-side
     repartition so the shuffle payload shrinks with the files.
 
+    Sinks carry NORMALIZED records, not raw payloads — the reference's
+    exporters write processed spans, not the original request bytes — so
+    ``html``/``text`` are dropped (a no-op when absent).
+
     At 10^12 rows the sink bytes/sec IS the pipeline's bandwidth bill:
 
       * ``trace_id``/``span_id`` hex strings -> raw BINARY (``unhex``) — the
@@ -130,6 +141,7 @@ def slim_for_sink(df: DataFrame) -> DataFrame:
     Measured together: 161 MB -> 89 MB sink bytes at 1M rows (45% less
     memory-bus traffic through shuffle + parquet encode + tmpfs write).
     """
+    df = df.drop("html", "text")
     out = df
     if "attrs" in out.columns:
         def entry_is_dup(k, v):
@@ -153,13 +165,6 @@ def slim_for_sink(df: DataFrame) -> DataFrame:
     return out
 
 
-def routed_schema(df: DataFrame) -> StructType:
-    """Schema of the rows ``write_routed_single_pass`` writes for ``df``,
-    partition columns included: readers of the sink tree pass it instead of
-    inferring one (an empty input writes no data files to infer from)."""
-    return _with_day(assign_sink(df)).schema
-
-
 def rebalanced_writer(df: DataFrame, partition_cols: list[str]) -> DataFrameWriter:
     """The one partitioned-write shape: an overwrite writer partitioned by
     ``partition_cols`` over a ``rebalance`` shuffle on those columns.
@@ -175,29 +180,10 @@ def rebalanced_writer(df: DataFrame, partition_cols: list[str]) -> DataFrameWrit
 
 
 def write_routed_single_pass(df: DataFrame, base_path: str) -> None:
-    """One job, all sinks: partition layout sink=/warc_day=/lang=.
+    """One job, all sinks: the rows of ``routed_rows(df)`` partitioned by
+    ``SINK_PARTITIONS``.
 
     Equivalent Iceberg DDL (prod): CREATE TABLE sink_x ... PARTITIONED BY
     (days(warc_ts), lang); here each sink subtree is one such table."""
     ensure_jit_codegen(df.sparkSession)
-    routed = _with_day(assign_sink(df))
-    rebalanced_writer(routed, ["sink", "warc_day", "lang"]).parquet(base_path)
-
-
-def write_per_sink_tables(df: DataFrame, catalog) -> dict[str, str]:
-    """Separate-tables strategy: persist the normalized frame once, then one
-    filtered ``create_or_replace`` per sink table — the Iceberg
-    ``df.filter(pred).writeTo`` shape, routed through the SinkCatalog
-    abstraction (sources/catalog.py).  Avoids recomputing the extraction UDF
-    per sink (SURVEY.md §4 'the one place naive Spark recomputes').
-    Returns {sink: catalog table name}."""
-    routed = _with_day(assign_sink(df)).persist()
-    tables = {}
-    try:
-        for sink in SINKS:
-            sub = routed.filter(F.col("sink") == sink).drop("sink")
-            catalog.create_or_replace(sub, sink, ["warc_day", "lang"])
-            tables[sink] = sink
-    finally:
-        routed.unpersist()
-    return tables
+    rebalanced_writer(routed_rows(df), SINK_PARTITIONS).parquet(base_path)

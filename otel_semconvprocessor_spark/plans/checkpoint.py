@@ -15,9 +15,11 @@ Design (single-scan resume):
   * per-chunk row counts come from a ``pyspark.sql.Observation`` attached to
     the written plan (the write action itself produces the metric) — no
     post-write re-read.
-  * each chunk is written to its own ``chunk=<id>`` subtree with
-    mode=overwrite — a crash mid-chunk leaves a subtree that the retry simply
-    overwrites, so restarts are idempotent (no dup, no missing rows).
+  * each chunk goes through the batch run's write, ``write_routed_single_pass``,
+    into its own ``data/chunk=<id>/sink=/warc_day=/lang=`` subtree with
+    mode=overwrite: the batch rows and layout under a ``chunk=`` prefix.  A
+    crash mid-chunk leaves a subtree that the retry simply overwrites, so
+    restarts are idempotent (no dup, no missing rows).
   * the chunk->files assignment is itself checkpoint state: it is written to
     ``_plan`` once at first run and resumed runs read it back, so resume is
     immune to file-listing drift (a file that disappeared after its chunk
@@ -29,7 +31,8 @@ Design (single-scan resume):
   * an in-memory (non-file-backed) input DataFrame falls back to
     deterministic hash chunking by ``pmod(xxhash64(url), n_chunks)`` — that
     path re-filters the input per chunk and is intended for tests / small
-    inputs only; production inputs are tables on storage.
+    inputs only; production inputs are tables on storage.  Resuming it with
+    another ``n_chunks`` than the manifest's ``hash:<i>/<n>`` raises.
 """
 
 from __future__ import annotations
@@ -45,7 +48,7 @@ from pyspark.sql import functions as F
 from ..config import Config
 from ..plans.pipeline import build_normalized
 from ..operators.metrics import local_frame
-from ..operators.route import assign_sink, slim_for_sink
+from ..operators.route import slim_for_sink, write_routed_single_pass
 
 __all__ = [
     "SimulatedCrash",
@@ -79,13 +82,6 @@ def read_manifest(spark: SparkSession, out_path: str) -> DataFrame | None:
         if not _is_path_not_found(e):
             raise
         return None
-
-
-def completed_chunks(spark: SparkSession, out_path: str) -> set[int]:
-    m = read_manifest(spark, out_path)
-    if m is None:
-        return set()
-    return {r["chunk"] for r in m.select("chunk").distinct().collect()}
 
 
 def deal_files(files: list[str], n_chunks: int) -> list[list[str]]:
@@ -235,7 +231,10 @@ def run_with_checkpoints(
     run), overwrites any partial chunk output, and appends one manifest row
     per completed chunk.
     """
-    done = completed_chunks(spark, out_path)
+    manifest = read_manifest(spark, out_path)
+    done = set() if manifest is None else {
+        r[0] for r in manifest.select("chunk").distinct().collect()
+    }
     processed: list[int] = []
 
     if isinstance(pages, str):
@@ -254,7 +253,18 @@ def run_with_checkpoints(
         }
         chunk_ids = range(len(chunks))
     else:
-        # fallback: n_chunks filtered passes over the in-memory frame
+        # fallback: n_chunks filtered passes over the in-memory frame; chunk
+        # ids only mean something under the n they were hashed with
+        hashed = set() if manifest is None else {
+            r[0] for r in manifest.filter(F.col("files").startswith("hash:"))
+            .select(F.substring_index("files", "/", -1)).distinct().collect()
+        }
+        if hashed - {str(n_chunks)}:
+            raise ValueError(
+                f"{out_path} was hash-chunked with n_chunks={'/'.join(sorted(hashed))}, not "
+                f"n_chunks={n_chunks}: its chunk ids would map to other rows (duplicated "
+                "and dropped output); resume with the recorded count or a fresh out_path"
+            )
         chunk_of = F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks))
 
         def chunk_df(i: int) -> DataFrame:
@@ -267,18 +277,14 @@ def run_with_checkpoints(
         if chunk in done:
             continue
         t0 = time.time()
-        normalized = assign_sink(build_normalized(spark, chunk_df(chunk), cfg))
-        # same lossless sink projection as run_pipeline (binary ids, attr
-        # dedup) — resumed chunks must match fresh chunks byte-for-byte
-        normalized = slim_for_sink(normalized.drop("html", "text")).withColumn(
-            "warc_day", F.to_date(F.col("warc_ts"))
-        )
         # row count observed on the write plan itself — no post-write re-read
         obs = Observation(f"ckpt-{run_id}-{chunk}-{uuid.uuid4().hex[:8]}")
-        normalized = normalized.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # idempotent per-chunk commit: overwrite this chunk's subtree only
-        normalized.write.mode("overwrite").partitionBy("sink").parquet(
-            f"{out_path}/data/chunk={chunk}"
+        normalized = slim_for_sink(build_normalized(spark, chunk_df(chunk), cfg))
+        # idempotent per-chunk commit: overwrite this chunk's subtree only,
+        # with the batch run's write
+        write_routed_single_pass(
+            normalized.observe(obs, F.count(F.lit(1)).alias("rows")),
+            f"{out_path}/data/chunk={chunk}",
         )
         n = obs.get["rows"]
         manifest_row = local_frame(

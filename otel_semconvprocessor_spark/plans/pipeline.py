@@ -41,10 +41,10 @@ from ..operators.enrich import (
 from ..operators.extract import extract_pages
 from ..operators.metrics import MetricsManifest, metrics_manifest
 from ..operators.route import (
+    SINK_PARTITIONS,
     SINKS,
-    routed_schema,
+    routed_rows,
     slim_for_sink,
-    write_per_sink_tables,
     write_routed_single_pass,
 )
 from ..operators.rules import apply_rules
@@ -94,24 +94,29 @@ def run_pipeline(
     """End-to-end run.  Default sink = the single-pass partitioned parquet
     tree under ``out_path/sinks``; pass a SinkCatalog (``IcebergCatalog`` in
     prod, ``ParquetDirCatalog`` in tests) to write one catalog TABLE per sink
-    through the writeTo-verb interface instead — the metrics stage then
-    re-reads the catalog tables (same pruned columns)."""
+    through the writeTo-verb interface instead — the routed rows are then
+    persisted once, written with one filtered ``create_or_replace`` per sink,
+    and the metrics stage aggregates that same persisted frame."""
     cfg = cfg or reference_config()
     start = time.time()
-    # sinks carry NORMALIZED records, not raw payloads — the reference's
-    # exporters write processed spans, not the original request bytes.
-    # At 10^12 rows the raw html/text would dominate shuffle + sink IO.
-    # slim_for_sink then removes per-row redundancy losslessly (binary
-    # ids, attr entries that duplicate columns) — measured 45% fewer
+    # slim_for_sink drops the raw html/text (at 10^12 rows they would
+    # dominate shuffle + sink IO) and removes per-row redundancy losslessly
+    # (binary ids, attr entries that duplicate columns) — measured 45% fewer
     # sink bytes, which is the pipeline's bandwidth bill at scale.
-    normalized = slim_for_sink(build_normalized(spark, pages, cfg).drop("html", "text"))
+    normalized = slim_for_sink(build_normalized(spark, pages, cfg))
     sink_path = f"{out_path}/sinks"
     if catalog is not None:
-        tables = write_per_sink_tables(normalized, catalog)
-        routed = None
-        for sink in SINKS:
-            sub = catalog.read(spark, tables[sink]).withColumn("sink", F.lit(sink))
-            routed = sub if routed is None else routed.unionByName(sub)
+        # one persist, so the extraction UDF is not recomputed per sink
+        # (SURVEY.md §4 'the one place naive Spark recomputes')
+        routed = routed_rows(normalized).persist()
+        try:
+            for sink in SINKS:
+                sub = routed.filter(F.col("sink") == sink).drop("sink")
+                catalog.create_or_replace(sub, sink, SINK_PARTITIONS[1:])
+            duration = time.time() - start
+            metrics = metrics_manifest(routed, cfg, run_id=run_id, duration_ms=duration * 1000.0)
+        finally:
+            routed.unpersist()
         sink_path = getattr(catalog, "base_path", sink_path)
     else:
         # aggregate stage over the written, partitioned output: reads only
@@ -120,9 +125,9 @@ def run_pipeline(
         # at 10^12 rows.  The written schema is passed explicitly, so an
         # empty input (partitionBy writes no files) reads as an empty frame.
         write_routed_single_pass(normalized, sink_path)
-        routed = spark.read.schema(routed_schema(normalized)).parquet(sink_path)
-    duration = time.time() - start
-    metrics = metrics_manifest(routed, cfg, run_id=run_id, duration_ms=duration * 1000.0)
+        routed = spark.read.schema(routed_rows(normalized).schema).parquet(sink_path)
+        duration = time.time() - start
+        metrics = metrics_manifest(routed, cfg, run_id=run_id, duration_ms=duration * 1000.0)
     # a local frame of n rows scans as min(n, cores) partitions: coalesce
     # so each table is written by one task as one file
     for name in ("summary", "rule_effectiveness", "sink_counts"):

@@ -3,8 +3,9 @@
 The reference is a push-based stream (OTLP receiver -> processor -> exporters,
 config.yaml:215-232); the graft's primary mode is batch, but the same
 declarative plan runs unchanged as a stream: file-source pages -> extraction
-UDF -> broadcast mapping/dims (stream-static joins) -> rule cascade ->
-partitioned file sink.  The parquet file source + file sink pair gives
+UDF -> mapping rewrite and lang lookup (expressions, no join) -> rule cascade
+(versioned rules through a stream-static broadcast join) -> the batch run's
+sink rows in a sink=/warc_day=/lang= partitioned file sink.  The parquet file source + file sink pair gives
 exactly-once per-file processing through the checkpoint, which is the
 streaming twin of plans/checkpoint.py's per-chunk manifest resume.
 
@@ -22,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
-from ..operators.route import assign_sink, slim_for_sink
+from ..operators.route import SINK_PARTITIONS, routed_rows, slim_for_sink
 from ..plans.pipeline import build_normalized
 from ..sources.pages import PAGES_SCHEMA
 
@@ -45,20 +46,15 @@ def start_streaming_pipeline(
     ``available_now`` drains the current backlog then stops (batch-like runs,
     incremental across restarts).  The transform chain is the batch one
     (plans/pipeline.build_normalized): every stage is stateless or
-    stream-static, so one definition serves both (tested column-for-column
-    equal in tests/test_streaming.py)."""
+    stream-static, so one definition serves both, and the sink rows are the
+    batch ones (``route.routed_rows``; tested column-for-column equal in
+    tests/test_streaming.py)."""
     normalized = build_normalized(spark, stream_pages(spark, input_dir), cfg)
-    routed = (
-        # same sink projection as the batch path (drop raw payloads, binary
-        # ids, per-row attr dedup) so stream and batch sinks stay row-identical
-        slim_for_sink(assign_sink(normalized).drop("html", "text"))
-        .withColumn("warc_day", F.to_date("warc_ts"))
-    )
     writer = (
-        routed.writeStream.format("parquet")
+        routed_rows(slim_for_sink(normalized)).writeStream.format("parquet")
         .option("path", f"{out_dir}/sinks")
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .partitionBy("sink", "warc_day", "lang")
+        .partitionBy(*SINK_PARTITIONS)
         .outputMode("append")
     )
     if available_now:

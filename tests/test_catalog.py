@@ -1,5 +1,5 @@
 """SinkCatalog (the Iceberg-shaped write surface): verb semantics on the
-parquet implementation, the per-sink route strategy through it, and the
+parquet implementation, run_pipeline's per-sink tables through it, and the
 rebalanced write shape both partitioned writers share."""
 
 import os
@@ -7,14 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from otel_semconvprocessor_spark.config import reference_config
-from otel_semconvprocessor_spark.operators.route import (
-    SINKS,
-    write_per_sink_tables,
-    write_routed_single_pass,
-)
-from otel_semconvprocessor_spark.operators.rules import apply_rules
-from otel_semconvprocessor_spark.operators.extract import extract_pages_native
+from otel_semconvprocessor_spark.operators.route import SINKS, write_routed_single_pass
 from otel_semconvprocessor_spark.sources.catalog import IcebergCatalog, ParquetDirCatalog
 from otel_semconvprocessor_spark.sources.pages import generate_pages
 
@@ -36,18 +29,6 @@ def test_create_or_replace_and_read(spark, cat):
     assert cat.read(spark, "t1").count() == 2
     cat.create_or_replace(_df(spark, ["fr"]), "t1", ["lang"])
     assert {r["lang"] for r in cat.read(spark, "t1").collect()} == {"fr"}
-
-
-def test_write_per_sink_tables_through_catalog(spark, cat):
-    pages = generate_pages(spark, 300)
-    normalized = apply_rules(extract_pages_native(pages), reference_config()).drop("html", "text")
-    tables = write_per_sink_tables(normalized, cat)
-    assert set(tables) == set(SINKS)
-    total = sum(cat.read(spark, s).count() for s in SINKS)
-    assert total == 300  # routed-row equality: disjoint + exhaustive
-    # partition layout present (warc_day= / lang= subdirs)
-    sink_dir = f"{cat.base_path}/sink_http"
-    assert any(d.startswith("warc_day=") for d in os.listdir(sink_dir))
 
 
 def _files_per_combo(base):
@@ -96,14 +77,19 @@ def test_routed_write_splits_only_a_hot_combo(spark, tmp_path):
 
 
 def test_run_pipeline_through_catalog(spark, cat, tmp_path):
-    """run_pipeline(catalog=...) writes one catalog table per sink and its
-    metrics equal the default parquet-tree path's."""
+    """run_pipeline(catalog=...) writes one catalog table per sink, with the
+    warc_day/lang partition layout, and its metrics equal the default
+    parquet-tree path's."""
     from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
 
     pages = generate_pages(spark, 300)
     res_cat = run_pipeline(spark, pages, str(tmp_path / "a"), run_id="cat", catalog=cat)
     res_def = run_pipeline(spark, pages, str(tmp_path / "b"), run_id="def")
     assert res_cat.rows == res_def.rows == 300
+    assert res_cat.sink_path == cat.base_path
+    # routed-row equality: disjoint + exhaustive over the five tables
+    assert sum(cat.read(spark, s).count() for s in SINKS) == 300
+    assert any(d.startswith("warc_day=") for d in os.listdir(f"{cat.base_path}/sink_http"))
     by_sink_cat = {r["sink"]: r["row_count"] for r in res_cat.metrics.sink_counts.collect()}
     by_sink_def = {r["sink"]: r["row_count"] for r in res_def.metrics.sink_counts.collect()}
     assert by_sink_cat == by_sink_def

@@ -467,6 +467,60 @@ def test_checkpoint_dataframe_fallback(spark, pages, tmp_path):
     assert read_all_output(spark, out).select("url").distinct().count() == N
 
 
+def test_checkpoint_dataframe_fallback_rejects_other_n_chunks(spark, pages, tmp_path):
+    """Hash chunk ids only mean something under the n they were hashed with:
+    resuming with another n_chunks raises before any chunk runs, instead of
+    duplicating some rows and dropping others."""
+    import os
+
+    out = str(tmp_path / "ckpt-rechunk")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages, out, n_chunks=2, fail_after_chunk=0)
+    with pytest.raises(ValueError, match=r"n_chunks=2, not n_chunks=3"):
+        run_with_checkpoints(spark, pages, out, n_chunks=3, run_id="resume")
+    assert sorted(os.listdir(f"{out}/data")) == ["chunk=0"]
+    assert run_with_checkpoints(spark, pages, out, n_chunks=2, run_id="resume") == [1]
+    final = read_all_output(spark, out)
+    assert final.count() == final.select("url").distinct().count() == N
+
+
+def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path):
+    """A crashed-and-resumed checkpoint run writes the batch run's sink rows,
+    column for column (chunk aside), in the batch layout under a chunk=
+    prefix: data/chunk=<i>/sink=/warc_day=/lang=."""
+    import os
+
+    out = str(tmp_path / "ckpt-vs-batch")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=1)
+    run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+    res = run_pipeline(spark, spark.read.parquet(pages_path), str(tmp_path / "batch"))
+
+    layout = re.compile(r"chunk=\d+/sink=[^/]+/warc_day=[^/]+/lang=[^/]+$")
+    data_dirs = {
+        os.path.relpath(d, f"{out}/data")
+        for d, _, names in os.walk(f"{out}/data")
+        if any(n.endswith(".parquet") for n in names)
+    }
+    assert data_dirs and all(layout.match(d) for d in data_dirs), sorted(data_dirs)
+
+    ckpt = read_all_output(spark, out).drop("chunk")
+    batch = spark.read.parquet(res.sink_path)
+    assert sorted(ckpt.columns) == sorted(batch.columns)
+
+    def by_url(df):
+        rows = {}
+        for r in df.collect():
+            d = r.asDict()
+            d["attrs"] = sorted((d["attrs"] or {}).items())
+            rows[d["url"]] = d
+        return rows
+
+    got, want = by_url(ckpt), by_url(batch)
+    assert len(got) == ckpt.count() == N
+    assert got == want
+
+
 def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
     """A day that lands in the input AFTER the first run appends as a NEW
     chunk (fresh id, plan row appended) and is processed on the next resume;

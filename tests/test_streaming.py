@@ -24,9 +24,9 @@ def staged_pages(spark, tmp_path_factory):
 
 def test_streaming_matches_batch(spark, staged_pages, tmp_path):
     """Full-row parity: every output column the batch pipeline produces
-    (including the dims join's lang_name and the attrs map) must come out of
-    the stream identically."""
-    from otel_semconvprocessor_spark.operators.route import assign_sink
+    (including the lang lookup's lang_name and the attrs map) must come out
+    of the stream identically."""
+    from otel_semconvprocessor_spark.operators.route import routed_rows, slim_for_sink
 
     out = str(tmp_path / "out")
     q = start_streaming_pipeline(spark, staged_pages, out)
@@ -34,15 +34,7 @@ def test_streaming_matches_batch(spark, staged_pages, tmp_path):
     got = spark.read.parquet(f"{out}/sinks")
     assert got.count() == N
 
-    from otel_semconvprocessor_spark.operators.route import slim_for_sink
-
-    batch = (
-        slim_for_sink(
-            assign_sink(build_normalized(spark, spark.read.parquet(staged_pages)))
-            .drop("html", "text")
-        )
-        .withColumn("warc_day", F.to_date("warc_ts"))
-    )
+    batch = routed_rows(slim_for_sink(build_normalized(spark, spark.read.parquet(staged_pages))))
     assert set(batch.columns) == set(got.columns)
     cols = sorted(batch.columns)
 
