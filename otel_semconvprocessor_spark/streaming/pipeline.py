@@ -5,9 +5,10 @@ config.yaml:215-232); the graft's primary mode is batch, but the same
 declarative plan runs unchanged as a stream: file-source pages -> extraction
 UDF -> mapping rewrite and lang lookup (expressions, no join) -> rule cascade
 (versioned rules through a stream-static broadcast join) -> the batch run's
-sink rows in a sink=/warc_day=/lang= partitioned file sink.  The parquet file source + file sink pair gives
-exactly-once per-file processing through the checkpoint, which is the
-streaming twin of plans/checkpoint.py's per-chunk manifest resume.
+sink rows in a sink=/warc_day=/lang= partitioned file sink.  The parquet file
+source + file sink pair gives exactly-once per-file processing through the
+checkpoint, which is the streaming twin of plans/checkpoint.py's per-chunk
+manifest resume.
 
 Also provides the watermarked windowed metrics aggregation (the streaming
 form of the M1/M2 counters): counts per (event-time day window, rule_id) with
