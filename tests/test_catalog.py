@@ -31,6 +31,22 @@ def test_create_or_replace_and_read(spark, cat):
     assert {r["lang"] for r in cat.read(spark, "t1").collect()} == {"fr"}
 
 
+def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path):
+    """run_pipeline(catalog=...) writes one catalog table per sink, each with
+    the warc_day/lang partition layout, and together they hold every row."""
+    from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
+
+    pages = generate_pages(spark, 300)
+    res = run_pipeline(spark, pages, str(tmp_path / "out"), run_id="cat", catalog=cat)
+    assert res.sink_path == cat.base_path
+    assert set(os.listdir(cat.base_path)) == set(SINKS)
+    total = sum(cat.read(spark, s).count() for s in SINKS)
+    assert total == 300  # routed-row equality: disjoint + exhaustive
+    # partition layout present (warc_day= / lang= subdirs)
+    sink_dir = f"{cat.base_path}/sink_http"
+    assert any(d.startswith("warc_day=") for d in os.listdir(sink_dir))
+
+
 def _files_per_combo(base):
     combos = {}
     for dirpath, _, names in os.walk(base):
@@ -77,19 +93,14 @@ def test_routed_write_splits_only_a_hot_combo(spark, tmp_path):
 
 
 def test_run_pipeline_through_catalog(spark, cat, tmp_path):
-    """run_pipeline(catalog=...) writes one catalog table per sink, with the
-    warc_day/lang partition layout, and its metrics equal the default
-    parquet-tree path's."""
+    """run_pipeline(catalog=...) metrics equal the default parquet-tree
+    path's."""
     from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
 
     pages = generate_pages(spark, 300)
     res_cat = run_pipeline(spark, pages, str(tmp_path / "a"), run_id="cat", catalog=cat)
     res_def = run_pipeline(spark, pages, str(tmp_path / "b"), run_id="def")
     assert res_cat.rows == res_def.rows == 300
-    assert res_cat.sink_path == cat.base_path
-    # routed-row equality: disjoint + exhaustive over the five tables
-    assert sum(cat.read(spark, s).count() for s in SINKS) == 300
-    assert any(d.startswith("warc_day=") for d in os.listdir(f"{cat.base_path}/sink_http"))
     by_sink_cat = {r["sink"]: r["row_count"] for r in res_cat.metrics.sink_counts.collect()}
     by_sink_def = {r["sink"]: r["row_count"] for r in res_def.metrics.sink_counts.collect()}
     assert by_sink_cat == by_sink_def
