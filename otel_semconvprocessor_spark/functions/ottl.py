@@ -93,11 +93,11 @@ class AttrSource:
 
     ``lookup(key)`` returns the Column for one key; ``map_col`` is the raw
     map (used by whole-map converters like ReplaceAllPatterns).  The rule
-    engine passes one whose lookups hit a PRE-PROJECTED struct of all keys
-    the rule set references — each map probe then happens exactly once per
-    row instead of once per reference across a 18-rule CASE chain (lazy
-    CASE branches defeat Catalyst's subexpression elimination, so without
-    this the same ``try_element_at`` runs dozens of times per row)."""
+    engine passes one that returns the same ``try_element_at`` Column for
+    every reference to a key.  That shares the expression, not the probe:
+    lazy CASE branches defeat Catalyst's subexpression elimination, so each
+    reference still inlines its own map-key scan (105 scans for the 24 keys
+    of the reference rule set)."""
 
     def __init__(self, map_col: Column, lookup):
         self.map_col = map_col

@@ -23,6 +23,7 @@ expression into the rule predicate to reproduce skip-on-error.
 from __future__ import annotations
 
 from collections.abc import Iterable
+from string import ascii_lowercase, ascii_uppercase
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -52,6 +53,10 @@ SQL_SELECT_RE = r"(?i)^\s*SELECT\s+.*?\s+FROM\s+([^\s]+)"
 SQL_INSERT_RE = r"(?i)^\s*INSERT\s+INTO\s+(\S+)"
 SQL_UPDATE_RE = r"(?i)^\s*UPDATE\s+(\S+)"
 SQL_DELETE_RE = r"(?i)^\s*DELETE\s+FROM\s+(\S+)"
+
+# A whole string of code points U+0000-U+007F (``\z``: no final-line-terminator
+# leeway as with ``$``).  Invalid UTF-8 bytes decode to U+FFFD, so they fail it.
+_ASCII_ONLY_RE = r"^[\x00-\x7F]*\z"
 
 _QUOTE_CUTSET_LEAD = r"^[`\"'\[\]]+"
 _QUOTE_CUTSET_TRAIL = r"[`\"'\[\]]+$"
@@ -101,6 +106,19 @@ def normalize_path(path: Column | str) -> Column:
     return p
 
 
+def _upper(s: Column) -> Column:
+    """``upper(s)``, with plain-ASCII strings mapped a-z -> A-Z by
+    ``translate``.  Spark 4's ``upper`` goes through ICU, and the first call in
+    a JVM runs ``CollationAwareUTF8String``'s static initializer, which
+    title-cases all 1,114,112 code points (about 1.7 s of one task thread,
+    with the other tasks waiting on the class-init lock).  On ASCII input
+    both give the same string; any other string still takes ``upper``, so
+    ``straße`` -> ``STRASSE`` is kept."""
+    return F.when(
+        s.rlike(_ASCII_ONLY_RE), F.translate(s, ascii_lowercase, ascii_uppercase)
+    ).otherwise(F.upper(s))
+
+
 def _clean_table_name(table: Column) -> Column:
     """Strip quote chars and schema prefix (ottl_functions.go:145-157).
 
@@ -138,7 +156,7 @@ def parse_sql(stmt: Column | str) -> Column:
         .when(ins != "", F.concat(F.lit("INSERT "), _clean_table_name(ins)))
         .when(upd != "", F.concat(F.lit("UPDATE "), _clean_table_name(upd)))
         .when(dlt != "", F.concat(F.lit("DELETE "), _clean_table_name(dlt)))
-        .when(first_word != "", F.upper(first_word))
+        .when(first_word != "", _upper(first_word))
         .otherwise(F.lit("UNKNOWN"))
     )
 

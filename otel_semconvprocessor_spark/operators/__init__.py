@@ -6,7 +6,8 @@
   enrich      insert_attrs_if_absent, apply_semconv_mappings, lookup_lang_name,
               join_dims
   route       slim_for_sink + routed_rows (the sink rows), SINK_PARTITIONS,
-              write_routed_single_pass, rebalanced_writer, salted_repartition
+              SINK_CODEC, write_routed_single_pass, rebalanced_writer,
+              salted_repartition
   metrics     metrics_manifest (one pass: metrics_pass), local_frame
   exporters   debug_sample, write_with_rotation, duration_histogram
   dedup       exact_dedup_groups, minhash_lsh_pairs,

@@ -11,6 +11,13 @@ One sink-row format and one partitioned write serve every writer:
     ``warc_day`` columns; ``SINK_PARTITIONS`` is the partition layout
     sink=/warc_day=/lang=.  Batch, checkpoint and streaming runs all write
     these rows, so their sinks are row-identical.
+  * ``SINK_CODEC`` — the sink files' parquet page codec (zstd).
+    ``rebalanced_writer`` and the streaming file sink both apply it, so every
+    sink file has one format.  Against Spark's default snappy it cuts the
+    sink bytes from 102.6 to 76.5 B/doc on perfbench's crawl_mix and from
+    196.0 to 173.6 on big_pages, whose 3.3 KB parquet footer per file is a
+    third of its bytes.  The shuffle keeps lz4: zstd measured slower there
+    (bench.py).
   * ``write_routed_single_pass``: ONE job writes every sink, partitioned by
     ``SINK_PARTITIONS``, so the expensive upstream (pandas-UDF extraction)
     runs exactly once and nothing is cached.  At 100 TB this is the only
@@ -40,6 +47,7 @@ from ..tuning import ensure_jit_codegen
 
 __all__ = [
     "SINKS",
+    "SINK_CODEC",
     "SINK_PARTITIONS",
     "assign_sink",
     "salt_expr",
@@ -53,6 +61,8 @@ __all__ = [
 SINKS = ["sink_http", "sink_grpc", "sink_db", "sink_messaging", "sink_other"]
 #: the sink tree's partition layout: sink=/warc_day=/lang=
 SINK_PARTITIONS = ["sink", "warc_day", "lang"]
+#: the sink files' parquet page codec
+SINK_CODEC = "zstd"
 
 
 def sink_expr(op_type: Column, rule_id: Column) -> Column:
@@ -167,7 +177,8 @@ def slim_for_sink(df: DataFrame) -> DataFrame:
 
 def rebalanced_writer(df: DataFrame, partition_cols: list[str]) -> DataFrameWriter:
     """The one partitioned-write shape: an overwrite writer partitioned by
-    ``partition_cols`` over a ``rebalance`` shuffle on those columns.
+    ``partition_cols`` over a ``rebalance`` shuffle on those columns, with
+    ``SINK_CODEC`` pages.
 
     The shuffle is load-bearing: a naive ``partitionBy`` write makes EVERY
     task open a writer for every combo it sees — O(tasks x combos) tiny
@@ -176,7 +187,10 @@ def rebalanced_writer(df: DataFrame, partition_cols: list[str]) -> DataFrameWrit
     combo; AQE then splits any combo whose shuffle partition exceeds the
     advisory partition size over several writers."""
     rebalanced = df.hint("rebalance", *[F.col(c) for c in partition_cols])
-    return rebalanced.write.mode("overwrite").partitionBy(*partition_cols)
+    return (
+        rebalanced.write.mode("overwrite").option("compression", SINK_CODEC)
+        .partitionBy(*partition_cols)
+    )
 
 
 def write_routed_single_pass(df: DataFrame, base_path: str) -> None:

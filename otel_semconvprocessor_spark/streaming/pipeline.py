@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
-from ..operators.route import SINK_PARTITIONS, routed_rows, slim_for_sink
+from ..operators.route import SINK_CODEC, SINK_PARTITIONS, routed_rows, slim_for_sink
 from ..plans.pipeline import build_normalized
 from ..sources.pages import PAGES_SCHEMA
 
@@ -49,12 +49,13 @@ def start_streaming_pipeline(
     (plans/pipeline.build_normalized): every stage is stateless or
     stream-static, so one definition serves both, and the sink rows are the
     batch ones (``route.routed_rows``; tested column-for-column equal in
-    tests/test_streaming.py)."""
+    tests/test_streaming.py), written with the batch files' ``SINK_CODEC``."""
     normalized = build_normalized(spark, stream_pages(spark, input_dir), cfg)
     writer = (
         routed_rows(slim_for_sink(normalized)).writeStream.format("parquet")
         .option("path", f"{out_dir}/sinks")
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
+        .option("compression", SINK_CODEC)
         .partitionBy(*SINK_PARTITIONS)
         .outputMode("append")
     )

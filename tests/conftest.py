@@ -26,6 +26,25 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def chunk_codecs():
+    """``chunk_codecs(base)``: the codec of every column chunk of every
+    parquet data file under ``base``, as a set (empty when there is none)."""
+    import pyarrow.parquet as pq
+
+    def codecs(base):
+        found = set()
+        for dirpath, _, names in os.walk(base):
+            for n in names:
+                if n.endswith(".parquet"):
+                    meta = pq.read_metadata(os.path.join(dirpath, n))
+                    found |= {meta.row_group(g).column(c).compression
+                              for g in range(meta.num_row_groups) for c in range(meta.num_columns)}
+        return found
+
+    return codecs
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
 

@@ -31,9 +31,10 @@ def test_create_or_replace_and_read(spark, cat):
     assert {r["lang"] for r in cat.read(spark, "t1").collect()} == {"fr"}
 
 
-def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path):
+def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path, chunk_codecs):
     """run_pipeline(catalog=...) writes one catalog table per sink, each with
-    the warc_day/lang partition layout, and together they hold every row."""
+    the warc_day/lang partition layout and the sink codec, and together they
+    hold every row."""
     from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
 
     pages = generate_pages(spark, 300)
@@ -45,6 +46,7 @@ def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path):
     # partition layout present (warc_day= / lang= subdirs)
     sink_dir = f"{cat.base_path}/sink_http"
     assert any(d.startswith("warc_day=") for d in os.listdir(sink_dir))
+    assert chunk_codecs(cat.base_path) == {"ZSTD"}
 
 
 def _files_per_combo(base):

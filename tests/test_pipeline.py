@@ -484,10 +484,11 @@ def test_checkpoint_dataframe_fallback_rejects_other_n_chunks(spark, pages, tmp_
     assert final.count() == final.select("url").distinct().count() == N
 
 
-def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path):
+def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path, chunk_codecs):
     """A crashed-and-resumed checkpoint run writes the batch run's sink rows,
     column for column (chunk aside), in the batch layout under a chunk=
-    prefix: data/chunk=<i>/sink=/warc_day=/lang=."""
+    prefix: data/chunk=<i>/sink=/warc_day=/lang=, and both write every
+    column chunk with the sink codec."""
     import os
 
     out = str(tmp_path / "ckpt-vs-batch")
@@ -503,6 +504,7 @@ def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path):
         if any(n.endswith(".parquet") for n in names)
     }
     assert data_dirs and all(layout.match(d) for d in data_dirs), sorted(data_dirs)
+    assert chunk_codecs(f"{out}/data") == chunk_codecs(res.sink_path) == {"ZSTD"}
 
     ckpt = read_all_output(spark, out).drop("chunk")
     batch = spark.read.parquet(res.sink_path)

@@ -56,6 +56,9 @@ PARSE_SQL_GOLDENS = [
     ("", "UNKNOWN"),
     ("   ", "UNKNOWN"),
     ("select 1", "SELECT"),  # no FROM: falls through to first-word fallback
+    ("truncate table t", "TRUNCATE"),  # ASCII first word: translate, not ICU upper
+    ("ändere x", "ÄNDERE"),  # non-ASCII first word keeps upper()
+    ("straße x", "STRASSE"),  # full case mapping: ß -> SS
 ]
 
 

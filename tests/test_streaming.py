@@ -22,10 +22,10 @@ def staged_pages(spark, tmp_path_factory):
     return path
 
 
-def test_streaming_matches_batch(spark, staged_pages, tmp_path):
+def test_streaming_matches_batch(spark, staged_pages, tmp_path, chunk_codecs):
     """Full-row parity: every output column the batch pipeline produces
     (including the lang lookup's lang_name and the attrs map) must come out
-    of the stream identically."""
+    of the stream identically, in files with the batch sink codec."""
     from otel_semconvprocessor_spark.operators.route import routed_rows, slim_for_sink
 
     out = str(tmp_path / "out")
@@ -33,6 +33,7 @@ def test_streaming_matches_batch(spark, staged_pages, tmp_path):
     q.awaitTermination(300)
     got = spark.read.parquet(f"{out}/sinks")
     assert got.count() == N
+    assert chunk_codecs(f"{out}/sinks") == {"ZSTD"}
 
     batch = routed_rows(slim_for_sink(build_normalized(spark, spark.read.parquet(staged_pages))))
     assert set(batch.columns) == set(got.columns)
