@@ -9,7 +9,8 @@ Usage (local or cluster — the package ships via --py-files):
 
 With --rows and no --input, a deterministic synthetic pages table is
 generated (smoke/bench mode).  --checkpoint switches to the resumable
-per-chunk runner (plans/checkpoint.py).
+per-chunk runner (plans/checkpoint.py); its chunks are groups of input
+files, so it needs --input.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ def main() -> None:
     p.add_argument("--chunks", type=int, default=16)
     p.add_argument("--run-id", default=f"run-{int(time.time())}")
     args = p.parse_args()
+    if args.checkpoint and not args.input:
+        p.error("--checkpoint needs --input: checkpoint chunks are input files")
 
     from pyspark.sql import SparkSession
 
@@ -39,19 +42,16 @@ def main() -> None:
     from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
     from otel_semconvprocessor_spark.sources.pages import generate_pages
 
-    pages = (
-        spark.read.parquet(args.input) if args.input else generate_pages(spark, args.rows)
-    )
     cfg = reference_config(mode=args.mode)
     if args.checkpoint:
-        # the input path (not the frame) selects file chunking: each chunk
-        # reads only its own files instead of re-filtering the whole input
         done = run_with_checkpoints(
-            spark, args.input or pages, args.output, cfg,
-            n_chunks=args.chunks, run_id=args.run_id,
+            spark, args.input, args.output, cfg, n_chunks=args.chunks, run_id=args.run_id
         )
         print(json.dumps({"run_id": args.run_id, "chunks_processed": done}))
     else:
+        pages = (
+            spark.read.parquet(args.input) if args.input else generate_pages(spark, args.rows)
+        )
         res = run_pipeline(spark, pages, args.output, cfg, run_id=args.run_id)
         print(
             json.dumps(

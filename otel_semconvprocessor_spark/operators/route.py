@@ -23,7 +23,7 @@ One sink-row format and one partitioned write serve every writer:
     runs exactly once and nothing is cached.  At 100 TB this is the only
     sane plan: no persist of the full dataset, no per-sink recompute; each
     sink is a partition subtree (≡ an Iceberg table partitioned by
-    days(warc_ts), lang).  ``run_pipeline`` writes through it, and
+    warc_day, lang).  ``run_pipeline`` writes through it, and
     ``run_with_checkpoints`` writes each chunk through it under ``chunk=<i>``.
 
 Skew: domains are Zipf-distributed (one hot domain ~50% of rows), so a hot
@@ -198,6 +198,6 @@ def write_routed_single_pass(df: DataFrame, base_path: str) -> None:
     ``SINK_PARTITIONS``.
 
     Equivalent Iceberg DDL (prod): CREATE TABLE sink_x ... PARTITIONED BY
-    (days(warc_ts), lang); here each sink subtree is one such table."""
+    (warc_day, lang); here each sink subtree is one such table."""
     ensure_jit_codegen(df.sparkSession)
     rebalanced_writer(routed_rows(df), SINK_PARTITIONS).parquet(base_path)

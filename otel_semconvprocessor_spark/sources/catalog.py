@@ -8,17 +8,16 @@ pipeline change:
 
   * ``IcebergCatalog`` — the production implementation: genuine
     ``df.writeTo("<catalog>.<ns>.<table>")`` V2 calls with
-    ``partitionedBy(days(warc_ts), lang)`` hidden partitioning.  The VERBS
+    ``partitionedBy(warc_day, lang)`` identity partitioning.  The VERBS
     are engine-verified in-sandbox against a real V2 TableCatalog — the
     Derby-backed JDBCTableCatalog that ships inside pyspark's jars
     (tests/test_catalog.py::test_iceberg_catalog_verbs_against_real_v2_catalog
-    runs create_or_replace / read through the genuine CatalogManager path).
-    Only the ``days()`` hidden-partition transform still requires the
-    iceberg-spark-runtime jar (JDBC tables are unpartitioned); that remains a
-    first-use-on-cluster smoke.
+    runs create_or_replace / read through the genuine CatalogManager path;
+    JDBC tables are unpartitioned, so the partitioned create still needs
+    the iceberg-spark-runtime jar).
   * ``ParquetDirCatalog`` — the test double: one directory per table,
-    identity-partitioned subdirs (``warc_day`` standing in for
-    ``days(warc_ts)``); createOrReplace = overwrite the tree.  It writes
+    identity-partitioned subdirs (``warc_day``, ``lang``);
+    createOrReplace = overwrite the tree.  It writes
     through ``route.rebalanced_writer``, the same shape as the single-pass
     route, so file counts stay O(partitions), not O(tasks x partitions).
 
@@ -66,8 +65,7 @@ class ParquetDirCatalog(SinkCatalog):
 @dataclass
 class IcebergCatalog(SinkCatalog):
     """Production implementation: real DataFrameWriterV2 against an Iceberg
-    (or any V2) catalog.  ``partition_cols`` may name plain columns or the
-    special ``days(<ts_col>)`` transform."""
+    (or any V2) catalog, identity-partitioned by ``partition_cols``."""
 
     catalog: str = "local"
     namespace: str = "sinks"
@@ -75,20 +73,8 @@ class IcebergCatalog(SinkCatalog):
     def _ident(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"
 
-    @staticmethod
-    def _transforms(partition_cols: list[str]):
-        from pyspark.sql.functions import partitioning
-
-        out = []
-        for c in partition_cols:
-            if c.startswith("days(") and c.endswith(")"):
-                out.append(partitioning.days(F.col(c[5:-1])))
-            else:
-                out.append(F.col(c))
-        return out
-
     def create_or_replace(self, df, table, partition_cols):
-        t = self._transforms(partition_cols)
+        t = [F.col(c) for c in partition_cols]
         w = df.writeTo(self._ident(table))
         if t:
             w = w.partitionedBy(t[0], *t[1:])

@@ -279,7 +279,7 @@ def generate_pages(
     )
 
     lang = _pick_weighted(24, _LANGS)
-    # >= 3 distinct days for days(warc_ts) partitioning (FIXTURES.md §1)
+    # >= 3 distinct days for the warc_day partitioning (FIXTURES.md §1)
     warc_ts = F.timestamp_seconds(F.lit(1767225600) + F.abs(_bucket(25, 4 * 86400)))
 
     attr_lines = F.array_join(

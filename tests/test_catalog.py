@@ -116,9 +116,6 @@ def test_run_pipeline_through_catalog(spark, cat, tmp_path):
 def test_iceberg_catalog_identifiers(spark):
     ic = IcebergCatalog(catalog="prod", namespace="ns")
     assert ic._ident("sink_http") == "prod.ns.sink_http"
-    # days() transform recognized (construction only — no V2 catalog here)
-    t = ic._transforms(["days(warc_ts)", "lang"])
-    assert len(t) == 2
 
 
 def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
@@ -127,8 +124,8 @@ def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
     JDBCTableCatalog (pyspark bundles derby*.jar).  IcebergCatalog's
     create_or_replace / read run the genuine V2 catalog path (createTable
     through CatalogManager), not the parquet-dir twin.
-    Only the days() hidden-partition transform still needs the Iceberg
-    runtime jar (JDBC tables are unpartitioned) — that stays a prod smoke.
+    JDBC tables are unpartitioned, so the (warc_day, lang) partitioned
+    create still needs the Iceberg runtime jar — that stays a prod smoke.
     """
     spark.conf.set(
         "spark.sql.catalog.v2smoke",

@@ -337,7 +337,7 @@ def test_checkpoint_resume_scans_only_unfinished_input(spark, pages_path, tmp_pa
     import os
     import shutil
 
-    from otel_semconvprocessor_spark.plans.checkpoint import chunk_input_files, read_manifest
+    from otel_semconvprocessor_spark.plans.checkpoint import deal_files, read_manifest
 
     # private copy of the input (we mutate it)
     in_path = str(tmp_path / "pages-in")
@@ -345,7 +345,7 @@ def test_checkpoint_resume_scans_only_unfinished_input(spark, pages_path, tmp_pa
     out = str(tmp_path / "ckpt-io")
     with pytest.raises(SimulatedCrash):
         run_with_checkpoints(spark, in_path, out, n_chunks=4, fail_after_chunk=1)
-    chunks = chunk_input_files(spark, in_path, 4)
+    chunks = deal_files(spark.read.parquet(in_path).inputFiles(), 4)
     done = {r["chunk"] for r in read_manifest(spark, out).collect()}
     assert done == {0, 1}
     for c in done:
@@ -385,35 +385,32 @@ def test_deal_files_10k_listing():
 
 
 def test_checkpoint_day_chunking(spark, pages, tmp_path):
-    """chunk_by='day': one chunk per warc_day partition of a day-partitioned
-    input; lineage carries the day; crash/resume works per day."""
-    from pyspark.sql import functions as F
-
+    """A warc_day=-partitioned input (lang= under it) needs no chunking rule
+    of its own: its files are dealt into n_chunks, crash/resume gives every
+    url once, the lineage lists the warc_day= paths, and basePath keeps the
+    path-only partition columns (a lost lang would read back null)."""
     from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
 
     in_path = str(tmp_path / "by-day")
     staged = pages.withColumn("warc_day", F.to_date("warc_ts"))
-    staged.write.mode("overwrite").partitionBy("warc_day").parquet(in_path)
-    n_days = staged.select("warc_day").distinct().count()
-    assert n_days >= 3
+    staged.write.mode("overwrite").partitionBy("warc_day", "lang").parquet(in_path)
+    days = {str(r["warc_day"]) for r in staged.select("warc_day").distinct().collect()}
+    assert len(days) >= 3
 
     out = str(tmp_path / "ckpt-day")
     with pytest.raises(SimulatedCrash):
-        run_with_checkpoints(spark, in_path, out, chunk_by="day", fail_after_chunk=0)
-    done = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="resume")
-    assert len(done) == n_days - 1
-    assert read_all_output(spark, out).count() == N
-    manifest = read_manifest(spark, out)
-    assert manifest.count() == n_days
-    lineages = [r["files"] for r in manifest.collect()]
-    assert all(l.startswith("day=") for l in lineages)
-    days_in_lineage = {l.split(";")[0] for l in lineages}
-    assert len(days_in_lineage) == n_days
+        run_with_checkpoints(spark, in_path, out, n_chunks=3, fail_after_chunk=0)
+    assert run_with_checkpoints(spark, in_path, out, n_chunks=3, run_id="resume") == [1, 2]
+    final = read_all_output(spark, out)
+    assert final.count() == final.select("url").distinct().count() == N
+    lineage = [f for r in read_manifest(spark, out).collect() for f in r["files"].split(";")]
+    assert sorted(lineage) == sorted(spark.read.parquet(in_path).inputFiles())
+    assert {re.search(r"/warc_day=([^/]+)/", f).group(1) for f in lineage} == days
 
+    def by_url(df):
+        return {r["url"]: (str(r["warc_day"]), r["lang"]) for r in df.collect()}
 
-def test_checkpoint_day_chunking_requires_partitioned_input(spark, pages_path, tmp_path):
-    with pytest.raises(ValueError, match="not day-partitioned"):
-        run_with_checkpoints(spark, pages_path, str(tmp_path / "x"), chunk_by="day")
+    assert by_url(final) == by_url(staged)
 
 
 def test_checkpoint_corrupt_plan_raises_not_regenerates(spark, pages_path, tmp_path):
@@ -458,32 +455,6 @@ def test_checkpoint_corrupt_manifest_raises_not_reruns(spark, pages_path, tmp_pa
     assert sorted(os.listdir(f"{out}/data")) == ["chunk=0"]  # nothing re-ran
 
 
-def test_checkpoint_dataframe_fallback(spark, pages, tmp_path):
-    """In-memory (non-file-backed) inputs hash-chunk and still resume."""
-    out = str(tmp_path / "ckpt3")
-    with pytest.raises(SimulatedCrash):
-        run_with_checkpoints(spark, pages, out, n_chunks=2, fail_after_chunk=0)
-    assert run_with_checkpoints(spark, pages, out, n_chunks=2) == [1]
-    assert read_all_output(spark, out).select("url").distinct().count() == N
-
-
-def test_checkpoint_dataframe_fallback_rejects_other_n_chunks(spark, pages, tmp_path):
-    """Hash chunk ids only mean something under the n they were hashed with:
-    resuming with another n_chunks raises before any chunk runs, instead of
-    duplicating some rows and dropping others."""
-    import os
-
-    out = str(tmp_path / "ckpt-rechunk")
-    with pytest.raises(SimulatedCrash):
-        run_with_checkpoints(spark, pages, out, n_chunks=2, fail_after_chunk=0)
-    with pytest.raises(ValueError, match=r"n_chunks=2, not n_chunks=3"):
-        run_with_checkpoints(spark, pages, out, n_chunks=3, run_id="resume")
-    assert sorted(os.listdir(f"{out}/data")) == ["chunk=0"]
-    assert run_with_checkpoints(spark, pages, out, n_chunks=2, run_id="resume") == [1]
-    final = read_all_output(spark, out)
-    assert final.count() == final.select("url").distinct().count() == N
-
-
 def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path, chunk_codecs):
     """A crashed-and-resumed checkpoint run writes the batch run's sink rows,
     column for column (chunk aside), in the batch layout under a chunk=
@@ -523,41 +494,6 @@ def test_checkpoint_rows_equal_batch_rows(spark, pages_path, tmp_path, chunk_cod
     assert got == want
 
 
-def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
-    """A day that lands in the input AFTER the first run appends as a NEW
-    chunk (fresh id, plan row appended) and is processed on the next resume;
-    already-done days are not rescanned."""
-    from pyspark.sql import functions as F
-
-    from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
-
-    in_path = str(tmp_path / "late-day-in")
-    staged = pages.withColumn("warc_day", F.to_date("warc_ts"))
-    days = sorted(r["warc_day"] for r in staged.select("warc_day").distinct().collect())
-    first, late = days[:-1], days[-1]
-    staged.filter(F.col("warc_day").isin(first)).write.mode("overwrite").partitionBy(
-        "warc_day"
-    ).parquet(in_path)
-
-    out = str(tmp_path / "late-day-out")
-    done1 = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="r1")
-    assert len(done1) == len(first)
-    n1 = read_all_output(spark, out).count()
-
-    # the late day arrives (append to the same partitioned dir)
-    staged.filter(F.col("warc_day") == late).write.mode("append").partitionBy(
-        "warc_day"
-    ).parquet(in_path)
-    done2 = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="r2")
-    assert done2 == [len(first)]  # exactly one NEW chunk id, appended at the end
-    assert read_all_output(spark, out).count() == N
-    assert read_all_output(spark, out).count() > n1
-    man = read_manifest(spark, out)
-    assert man.count() == len(days)
-    late_lineage = [r["files"] for r in man.filter(F.col("chunk") == len(first)).collect()]
-    assert late_lineage and late_lineage[0].startswith(f"day={late}")
-
-
 def test_checkpoint_legacy_plan_format_rejected(spark, pages_path, tmp_path):
     """A _plan in the pre-r3 shape (one row per chunk, files ';'-joined) is
     not a recognized chunk plan: resume raises before touching any chunk or
@@ -589,23 +525,61 @@ def test_checkpoint_legacy_plan_format_rejected(spark, pages_path, tmp_path):
     assert sorted(os.listdir(f"{out}/data")) == ["chunk=0", "chunk=1"]
 
 
+def test_checkpoint_resumes_plan_with_label_column(spark, pages_path, tmp_path):
+    """A _plan in the earlier ``chunk, file, label`` shape (label "" for
+    file chunks) resumes unchanged: only its unfinished chunks run and every
+    url lands once, under the persisted plan even when the resume passes
+    another n_chunks."""
+    out = str(tmp_path / "ckpt-labelled")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=1)
+    plan = [(r["chunk"], r["file"], "") for r in spark.read.parquet(f"{out}/_plan").collect()]
+    spark.createDataFrame(plan, "chunk int, file string, label string").write.mode(
+        "overwrite"
+    ).parquet(f"{out}/_plan")
+
+    assert run_with_checkpoints(spark, pages_path, out, n_chunks=3, run_id="resume") == [2, 3]
+    final = read_all_output(spark, out)
+    assert final.count() == final.select("url").distinct().count() == N
+
+
+def _load_job():
+    """``jobs/run_pipeline.py`` as a module (it is a script, not a package)."""
+    import importlib.util
+    import os
+
+    job_path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "run_pipeline.py")
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", job_path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    return job
+
+
+def test_job_checkpoint_requires_input(tmp_path, monkeypatch, capsys):
+    """``--checkpoint`` without ``--input`` is a usage error, raised before
+    any SparkSession starts and before anything is written."""
+    import sys
+
+    out = tmp_path / "job-no-input"
+    monkeypatch.setattr(sys, "argv", ["run_pipeline.py", "--output", str(out), "--checkpoint"])
+    with pytest.raises(SystemExit) as ei:
+        _load_job().main()
+    assert ei.value.code == 2
+    assert "--checkpoint needs --input: checkpoint chunks are input files" in capsys.readouterr().err
+    assert not out.exists()
+
+
 def test_job_checkpoint_reads_input_by_file(spark, pages_path, tmp_path, monkeypatch, capsys):
     """``jobs/run_pipeline.py --checkpoint --input`` chunks by input file:
-    the manifest lineage lists the chunk's parquet files, not the
-    ``hash:i/n`` tag of the whole-input re-filter fallback."""
-    import importlib.util
+    the manifest lineage lists every input parquet file once."""
     import json
-    import os
     import sys
 
     from pyspark.sql import SparkSession
 
     from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
 
-    job_path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "run_pipeline.py")
-    spec = importlib.util.spec_from_file_location("run_pipeline_job", job_path)
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
+    job = _load_job()
 
     out = str(tmp_path / "job-ckpt")
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
@@ -620,7 +594,6 @@ def test_job_checkpoint_reads_input_by_file(spark, pages_path, tmp_path, monkeyp
     lineage = [r["files"] for r in read_manifest(spark, out).collect()]
     assert len(lineage) == 2
     listed = [f for entry in lineage for f in entry.split(";")]
-    assert not any(f.startswith("hash:") for f in listed)
     assert sorted(listed) == sorted(spark.read.parquet(pages_path).inputFiles())
     assert read_all_output(spark, out).count() == N
 
