@@ -409,8 +409,8 @@ def run_operator_benches(cores: int, sf_dir: str, out_dir: str) -> dict:
         bench("cascade_enrich_mode", lambda: apply_rules(ext, cfg_enrich).groupBy("rule_id").count().collect())
         bench("cascade_8_rules", lambda: apply_rules(ext, cfg8).groupBy("rule_id").count().collect())
         # the schema_url-keyed rule-table cascade at the same scale; the
-        # reference rules are version-wildcard, so apply_rules attaches no
-        # dispatch table and this times the zero-shuffle chain
+        # reference rules are version-wildcard, so this times the same
+        # join-free, zero-shuffle chain
         bench(
             "cascade_broadcast",
             lambda: apply_rules(ext, cfg).groupBy("rule_id").count().collect(),

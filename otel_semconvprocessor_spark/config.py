@@ -36,8 +36,8 @@ VALID_SPAN_KINDS = frozenset({"server", "client", "producer", "consumer", "inter
 class OTTLRule:
     """One rule (config.go:62-82). ``schema_url`` is the graft's addition: the
     semconv schema version this rule row belongs to ("" = every version);
-    ``apply_rules`` dispatches versioned rules through a broadcast-joined
-    rule table (BASELINE.json north_star)."""
+    ``apply_rules`` gates a versioned rule on a literal ``schema_url``
+    comparison inside its one ``CASE`` chain."""
 
     id: str
     priority: int
@@ -198,11 +198,11 @@ def reference_rules(schema_url: str = "") -> list[OTTLRule]:
     return r
 
 
-def reference_config(mode: str = MODE_ENFORCE, benchmark: bool = True) -> Config:
+def reference_config(mode: str = MODE_ENFORCE) -> Config:
     """The production processor config (config.yaml:30-195), validated."""
     cfg = Config(
         enabled=True,
-        benchmark=benchmark,
+        benchmark=True,
         span_processing=SpanProcessingConfig(
             enabled=True,
             mode=mode,

@@ -65,17 +65,16 @@ def load_semconv_mapping(d: dict) -> Config:
     return cfg
 
 
-def load_collector_yaml(text: str, *, compile_rules: bool = True) -> Config:
+def load_collector_yaml(text: str) -> Config:
     """Load a collector YAML document (or just the processor subtree) and
     return the validated Config.
 
     Accepts either a full collector file — the ``processors:`` section is
     searched for the ``semconv`` entry (type-name match, '/' alias suffixes
     allowed, as the collector resolves component IDs) — or a bare semconv
-    mapping.  With ``compile_rules`` (the default), every rule's condition /
-    operation_name / operation_type is compiled through the OTTL->Column
-    compiler so unsupported constructs fail HERE, with the rule id and field
-    named, not in an executor.
+    mapping.  Every rule's condition / operation_name / operation_type is
+    compiled through the OTTL->Column compiler so unsupported constructs fail
+    HERE, with the rule id and field named, not in an executor.
     """
     doc = yaml.safe_load(text)
     if not isinstance(doc, dict):
@@ -89,14 +88,13 @@ def load_collector_yaml(text: str, *, compile_rules: bool = True) -> Config:
         else:
             raise ValueError("no semconv processor found in 'processors:'")
     cfg = load_semconv_mapping(sub)
-    if compile_rules:
-        bad = [
-            f"rule {r.rule_id!r} field {r.field}: {r.error}"
-            for r in conformance_report(cfg)
-            if not r.compiled
-        ]
-        if bad:
-            raise OTTLSyntaxError("; ".join(bad))
+    bad = [
+        f"rule {r.rule_id!r} field {r.field}: {r.error}"
+        for r in conformance_report(cfg)
+        if not r.compiled
+    ]
+    if bad:
+        raise OTTLSyntaxError("; ".join(bad))
     return cfg
 
 

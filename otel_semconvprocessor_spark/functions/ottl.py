@@ -83,25 +83,7 @@ __all__ = [
     "compile_ottl",
     "OTTLSyntaxError",
     "SUPPORTED_FUNCTIONS",
-    "AttrSource",
-    "referenced_attr_keys",
 ]
-
-
-class AttrSource:
-    """Pluggable resolution for ``attributes[...]`` references.
-
-    ``lookup(key)`` returns the Column for one key; ``map_col`` is the raw
-    map (used by whole-map converters like ReplaceAllPatterns).  The rule
-    engine passes one that returns the same ``try_element_at`` Column for
-    every reference to a key.  That shares the expression, not the probe:
-    lazy CASE branches defeat Catalyst's subexpression elimination, so each
-    reference still inlines its own map-key scan (105 scans for the 24 keys
-    of the reference rule set)."""
-
-    def __init__(self, map_col: Column, lookup):
-        self.map_col = map_col
-        self.lookup = lookup
 
 
 class OTTLSyntaxError(ValueError):
@@ -486,15 +468,13 @@ def _compile_node(node, attrs_col: Column, name_col: Column, resource_col: Colum
         return F.lit(None)
     if isinstance(node, _AttrRef):
         if node.scope == "attributes":
-            if isinstance(attrs_col, AttrSource):
-                return attrs_col.lookup(node.key)
             return attr(attrs_col, node.key)
         if resource_col is None:
             raise OTTLSyntaxError("resource.attributes used but no resource column provided")
         return attr(resource_col, node.key)
     if isinstance(node, _MapRef):
         if node.scope == "attributes":
-            return attrs_col.map_col if isinstance(attrs_col, AttrSource) else attrs_col
+            return attrs_col
         if resource_col is None:
             raise OTTLSyntaxError("resource.attributes used but no resource column provided")
         return resource_col
@@ -1001,35 +981,6 @@ def compile_ottl(
     res_c = F.col(resource_col) if isinstance(resource_col, str) else resource_col
     ast = _Parser(_tokenize(expr), expr).parse()
     return _compile_node(ast, attrs_c, name_c, res_c)
-
-
-def referenced_attr_keys(expr: str) -> set[str]:
-    """The set of ``attributes["k"]`` keys one expression references
-    (span-scope only; resource keys resolve separately).  Drives the rule
-    engine's once-per-row key pre-projection."""
-    keys: set[str] = set()
-
-    def walk(node):
-        if isinstance(node, _AttrRef):
-            if node.scope == "attributes":
-                keys.add(node.key)
-        elif isinstance(node, _Cmp):
-            walk(node.left)
-            walk(node.right)
-        elif isinstance(node, _BoolOp):
-            for p in node.parts:
-                walk(p)
-        elif isinstance(node, _List):
-            for i in node.items:
-                walk(i)
-        elif isinstance(node, _Call):
-            for a in node.args:
-                walk(a)
-        elif isinstance(node, _Index):
-            walk(node.base)
-
-    walk(_Parser(_tokenize(expr), expr).parse())
-    return keys
 
 
 def value_expr_never_null(expr: str) -> bool:

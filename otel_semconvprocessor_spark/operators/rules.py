@@ -35,22 +35,19 @@ words), ``attrs:map<string,string>``.  Output adds:
 
 Versioned rules: a rule with a non-empty ``schema_url`` applies only to spans
 whose ``schema_url`` column equals it; a rule with ``schema_url == ""`` applies
-to every span.  When the rule set has versioned rules, the rule table becomes
-DATA keyed by schema_url (the north star's "schema-version keyed rule tables
-broadcast-joined"): one broadcast row per schema_url carries the ordered seqs
-of the rules that apply to it, a broadcast LEFT join on ``schema_url``
-attaches that set to each span (BroadcastHashJoin, the span side never
-shuffles), and each versioned rule's predicate is gated on membership.  The
-chain stays in validated priority order, so first-match is unchanged.
+to every span.  A versioned rule's predicate is gated on the literal
+comparison ``schema_url = '<its version>'``, so the rule table compiles into
+the same one ``CASE`` chain: no join, no lookup frame.  The chain stays in
+validated priority order, so first-match is unchanged.
 
-Scale note: with no versioned rule (the reference config) the cascade is pure
-expression work — no shuffle, no UDF, no join, no extra pass over the data.
-It does not fuse into the scan's whole-stage codegen: it is its own
-``Project`` above ``ArrowEvalPython`` and three lambda ``Project``s, and on
-the reference rule set its generated method (38,429 bytecode bytes) is over
-the 8,000 that ``tuning.ensure_jit_codegen`` sets as ``hugeMethodLimit``.  So
-Spark generates about 530 KB of whole-stage Java for that stage, discards
-it, and runs the ``Project`` per operator instead.
+Scale note: the cascade is pure expression work — no shuffle, no UDF, no
+join, no extra pass over the data.  It does not fuse into the scan's
+whole-stage codegen: it is its own ``Project`` above ``ArrowEvalPython`` and
+three lambda ``Project``s, and on the reference rule set its generated method
+(38,429 bytecode bytes) is over the 8,000 that ``tuning.ensure_jit_codegen``
+sets as ``hugeMethodLimit``.  So Spark generates about 530 KB of whole-stage
+Java for that stage, discards it, and runs the ``Project`` per operator
+instead.
 """
 
 from __future__ import annotations
@@ -61,12 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MODE_ENFORCE, Config
-from ..functions.ottl import (
-    AttrSource,
-    compile_ottl,
-    referenced_attr_keys,
-    value_expr_never_null,
-)
+from ..functions.ottl import compile_ottl, value_expr_never_null
 from ..functions.scalars import attr
 from ..tuning import ensure_jit_codegen
 
@@ -149,41 +141,13 @@ def apply_rules(
     name = F.col(name_col)
     kind = F.col(kind_col)
 
-    # Versioned dispatch DATA: one broadcast row per schema_url with the
-    # ordered applicable seq set.  Left join: a span whose version has no
-    # rule rows (or whose schema_url is NULL) gets NULL -> empty set.
-    by_url: dict[str, list[int]] = {}
-    for seq, rule in enumerate(sp.rules):
-        if rule.schema_url:
-            by_url.setdefault(rule.schema_url, []).append(seq)
-    applicable = None
-    if by_url:
-        if "schema_url" not in df.columns:
-            raise ValueError(
-                "rule set has schema_url-versioned rules but column "
-                f"'schema_url' is not in the input ({df.columns})"
-            )
-        vseqs = df.sparkSession.createDataFrame(
-            sorted(by_url.items()), "schema_url string, __vseqs array<int>"
+    if any(r.schema_url for r in sp.rules) and "schema_url" not in df.columns:
+        raise ValueError(
+            "rule set has schema_url-versioned rules but column "
+            f"'schema_url' is not in the input ({df.columns})"
         )
-        df = df.join(
-            F.broadcast(vseqs), on=df["schema_url"] == vseqs["schema_url"], how="left"
-        ).drop(vseqs["schema_url"])
-        applicable = F.coalesce(F.col("__vseqs"), F.array().cast("array<int>"))
 
-    # Every attr key the rule set references (plus the skip-guard key), one
-    # Column per key: the expressions are shared, the map probes are not
-    # (see AttrSource).
-    keys: set[str] = {sp.operation_name_attribute}
-    for rule in sp.rules:
-        keys |= referenced_attr_keys(rule.condition)
-        keys |= referenced_attr_keys(rule.operation_name)
-        if rule.operation_type:
-            keys |= referenced_attr_keys(rule.operation_type)
-    field = {k: attr(attrs, k) for k in sorted(keys)}
-    src = AttrSource(attrs, lambda key: field.get(key, attr(attrs, key)))
-
-    compiled = compile_rule_columns(cfg, src, name, kind)
+    compiled = compile_rule_columns(cfg, attrs, name, kind)
 
     # One struct-valued CASE chain => each rule predicate is evaluated at most
     # once per row and evaluation stops at the first match (lazy CASE WHEN),
@@ -200,10 +164,10 @@ def apply_rules(
             (c.operation_type if c.operation_type is not None else F.lit(None).cast("string")).alias("op_type"),
         )
         pred = c.predicate
-        if sp.rules[seq].schema_url:
-            # versioned rule: applies only when the broadcast table lists it
-            # for this span's schema version
-            pred = F.array_contains(applicable, F.lit(seq)) & pred
+        schema_url = sp.rules[seq].schema_url
+        if schema_url:
+            # versioned rule: applies only to spans of its schema version
+            pred = (F.col("schema_url") == F.lit(schema_url)) & pred
         if c.name_nullable:
             # name-expr error => skip THIS rule and continue the cascade
             # (processor.go:244-250): fold name_expr IS NOT NULL into the
@@ -219,10 +183,9 @@ def apply_rules(
 
     # Skip-guard (processor.go:202-206): pre-existing operation.name attribute
     # short-circuits the whole cascade.
-    guarded = F.when(field[sp.operation_name_attribute].isNull(), cascade)
+    guarded = F.when(attr(attrs, sp.operation_name_attribute).isNull(), cascade)
 
-    out = finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
-    return out.drop("__vseqs") if applicable is not None else out
+    return finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
 
 
 def finish_match(

@@ -10,8 +10,8 @@ Mirrors the reference's receiver -> [semconv, batch] -> exporters pipeline
       -> insert_attrs_if_absent   (resource processor, config.yaml:17-27)
       -> lookup_lang_name         (lang dimension as a literal-map lookup)
       -> apply_rules              (compiled CASE cascade — processor.go parity;
-                                   schema_url-versioned rules via a broadcast
-                                   dispatch table)
+                                   schema_url-versioned rules gated on a
+                                   literal schema_url comparison)
       -> write single-pass, partitioned by (sink, warc_day, lang)
       -> metrics from one pruned aggregation over the written sinks
 
