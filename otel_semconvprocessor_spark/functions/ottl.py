@@ -20,21 +20,10 @@ plus the constructs used in the reference's tests):
                | "[" expr ("," expr)* "]"    -- list literal
                | "(" expr ")"
 
-Functions: the 5 custom ones (NormalizePath, ParseSQL, RemoveQueryParams,
-FirstNonNil, Concat — ottl_functions.go:17-28) plus the high-frequency
-``ottlfuncs.StandardFuncs()`` converters (the reference merges the whole
-standard registry, ottl_functions.go:19): IsMatch, Substring, Len,
-ConvertCase (lower/upper/snake/camel), Format, ExtractPatterns, MD5, SHA1,
-SHA256, Split, Trim, ReplacePattern, ReplaceAllPatterns, Int, Double, String,
-Duration, Hours/Minutes/Seconds/Milliseconds/Microseconds/Nanoseconds,
-ParseJSON, Time, TruncateTime, UnixSeconds/UnixMilli/UnixMicro/UnixNano,
-ParseKeyValue, ToKeyValueString, Decode, Keys, Values, Hex, Log,
-IsString/IsInt/IsDouble/IsBool/IsMap/IsList, SHA512, Sort,
-Year/Month/Day/Hour/Minute/Second, ParseCSV, URL, ReplaceMatch,
-ReplaceAllMatches, TruncateAll — see ``SUPPORTED_FUNCTIONS`` and the README
-conformance table.
-``Concat(list, sep)`` requires its separator to be a string literal, as in
-every shipped rule.
+Functions: ``_FUNCTIONS`` is the one table — per function, its argument
+signature and its lowering — like the reference's one factory map
+(ottl_functions.go:17-28, which merges ``ottlfuncs.StandardFuncs()`` at :19).
+``SUPPORTED_FUNCTIONS`` is its key set; the README conformance table lists it.
 
 Null semantics map 1:1:
   * ``attributes["k"]`` on a missing key -> NULL (pcommon miss -> nil).
@@ -51,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .grok import grok_group_names, grok_to_java_regex
 from .scalars import (
     attr,
     first_non_nil,
@@ -170,60 +160,6 @@ def _extract_groups_map(
     return F.map_from_entries(
         F.filter(entries, lambda e: e["key"].isNotNull() & (e["value"] != ""))
     )
-
-
-# Duration(x) yields total nanoseconds (double); the converters divide/cast
-# with upstream ottlfuncs return types (Hours/Minutes/Seconds -> float64,
-# Milliseconds/Microseconds/Nanoseconds -> int64)
-_DURATION_CONVERTERS = {
-    "Hours": (3.6e12, "double"),
-    "Minutes": (6e10, "double"),
-    "Seconds": (1e9, "double"),
-    "Milliseconds": (1e6, "long"),
-    "Microseconds": (1e3, "long"),
-    "Nanoseconds": (1.0, "long"),
-}
-
-#: every function name ``_compile_call`` dispatches — the compile-or-reject
-#: contract surface (README conformance table, tests/test_conformance.py)
-SUPPORTED_FUNCTIONS = frozenset(
-    [
-        "NormalizePath", "ParseSQL", "RemoveQueryParams", "FirstNonNil", "Concat",
-        "IsMatch", "Substring", "Len", "ConvertCase", "Format", "ExtractPatterns",
-        "MD5", "SHA256", "SHA1", "Split", "Trim", "ReplacePattern",
-        "ReplaceAllPatterns", "Int", "Double", "String", "Duration", "ParseJSON",
-        "Time", "TruncateTime", "UnixSeconds", "UnixMilli", "UnixMicro",
-        "UnixNano", "ParseKeyValue", "ToKeyValueString", "Decode", "Keys",
-        "Values", "Hex", "Log",
-        "IsString", "IsInt", "IsDouble", "IsBool", "IsMap", "IsList",
-        "SHA512", "Sort", "Year", "Month", "Day", "Hour", "Minute", "Second",
-        "ParseCSV", "URL", "ReplaceMatch", "ReplaceAllMatches", "TruncateAll",
-        "ExtractGrokPatterns",
-        *_DURATION_CONVERTERS,
-    ]
-)
-
-# ottlfuncs Is<Type> -> the compiled expression's Catalyst type(s); prefix
-# entries match typeof()'s parameterized renderings (map<...>, array<...>)
-_TYPE_PREDICATES = {
-    "IsString": (("string",), False),
-    "IsInt": (("bigint", "int", "smallint", "tinyint"), False),
-    "IsDouble": (("double", "float"), False),
-    "IsBool": (("boolean",), False),
-    "IsMap": (("map<",), True),
-    "IsList": (("array<",), True),
-}
-
-# ottlfuncs calendar accessors (Year/Month/Day/... on a time value) -> the
-# matching JVM datetime extractor; all return int64 upstream
-_CALENDAR_ACCESSORS = {
-    "Year": F.year,
-    "Month": F.month,
-    "Day": F.dayofmonth,
-    "Hour": F.hour,
-    "Minute": F.minute,
-    "Second": F.second,
-}
 
 
 def _validate_regex(pattern: str) -> None:
@@ -521,447 +457,337 @@ def _compile_node(node, attrs_col: Column, name_col: Column, resource_col: Colum
     raise OTTLSyntaxError(f"unsupported node {node!r}")
 
 
-def _unary(node: _Call):
-    if len(node.args) != 1:
-        raise OTTLSyntaxError(f"{node.func} takes exactly 1 argument, got {len(node.args)}")
-    return node.args[0]
+# ---- the function table --------------------------------------------------
+#
+# Every supported function is ONE entry, ``name: (signature, builder)`` — the
+# reference registers each factory once too (ottl_functions.go:17-28, merging
+# ottlfuncs.StandardFuncs() at :19).  A signature names one kind per argument:
+#
+#   expr  any expression             -> the builder gets its compiled Column
+#   map   a bare attributes map ref  -> its compiled Column
+#   list  a list literal             -> a list of its compiled items
+#   str / int / bool  a literal      -> its Python value
+#
+# A trailing "?" marks an optional trailing argument; one left out is not
+# passed, so the builder's default applies.  ``_check_args`` is the only
+# arity / kind check.  Checks on literal VALUES (regex validity, delimiters,
+# modes, encodings, verbs, bounds) live in the builders — all at compile
+# time, as the reference's parser errors at startup (processor.go:81-118).
+
+_NODE_KINDS = {_Str: "str", _Int: "int", _Bool: "bool", _List: "list", _MapRef: "map"}
+
+
+def _kind(node) -> str:
+    return _NODE_KINDS.get(type(node), "expr")
+
+
+def _check_args(func: str, sig: str, args: list) -> list[str]:
+    """Validate a call against its signature (an expr slot takes anything but
+    a list); return the declared kind of each argument given."""
+    declared = sig.split(", ")
+    kinds = [k.rstrip("?") for k in declared]
+    required = sum(not k.endswith("?") for k in declared)
+    if not required <= len(args) <= len(kinds) or any(
+        k != _kind(a) and (k != "expr" or isinstance(a, _List))
+        for k, a in zip(kinds, args)
+    ):
+        got = ", ".join(_kind(a) for a in args)
+        raise OTTLSyntaxError(f"{func} takes ({sig}), got ({got})")
+    return kinds[: len(args)]
+
+
+def _checked(translate, *args):
+    """Run a compile-time literal translator; its ValueError is a clean reject."""
+    try:
+        return translate(*args)
+    except ValueError as exc:
+        raise OTTLSyntaxError(str(exc)) from exc
+
+
+def _is_match(col: Column, pattern: str) -> Column:
+    # partial-match semantics == Java regex find == Column.rlike.  A nil
+    # target is an OTTL error; NULL propagates and folds to skip (R6)
+    _validate_regex(pattern)
+    return col.rlike(pattern)
+
+
+def _substring(col: Column, start: int, length: int) -> Column:
+    # 0-based start; a range outside the string errors upstream -> NULL here
+    if start < 0 or length < 0:
+        raise OTTLSyntaxError("Substring start/length must be non-negative")
+    return F.when(F.length(col) >= start + length, F.substring(col, start + 1, length))
+
+
+def _convert_case(col: Column, case: str) -> Column:
+    # snake/camel are regexp_replace / split-transform chains — still pure
+    # expressions (stdfuncs.to_snake_case / to_camel_case)
+    convert = {
+        "lower": F.lower, "upper": F.upper, "snake": to_snake_case, "camel": to_camel_case,
+    }.get(case)
+    if convert is None:
+        raise OTTLSyntaxError(f"ConvertCase case {case!r} unsupported (lower/upper/snake/camel)")
+    return convert(col)
+
+
+def _split(col: Column, delimiter: str) -> Column:
+    # Go strings.Split: the literal delimiter splits verbatim, never as a regex
+    if not delimiter:
+        raise OTTLSyntaxError("Split delimiter must be non-empty")
+    return ottl_split(col, delimiter)
+
+
+def _replace_pattern(col: Column, pattern: str, replacement: str) -> Column:
+    _validate_regex(pattern)
+    return replace_pattern(col, pattern, replacement)
+
+
+def _replace_all_patterns(m: Column, mode: str, pattern: str, replacement: str) -> Column:
+    # rewrite every key or value of an attribute map — transform_keys /
+    # transform_values keep it a pure expression
+    if mode not in ("key", "value"):
+        raise OTTLSyntaxError(f'ReplaceAllPatterns mode must be "key"|"value", got {mode!r}')
+    _validate_regex(pattern)
+    if mode == "key":
+        return F.transform_keys(m, lambda k, v: replace_pattern(k, pattern, replacement))
+    return F.transform_values(m, lambda k, v: replace_pattern(v, pattern, replacement))
+
+
+def _time(col: Column, fmt: str) -> Column:
+    # ctimefmt %-directives -> Java DateTimeFormatter pattern, checked here
+    # once; unparseable input -> NULL via try_to_timestamp (error-as-null)
+    _checked(ctime_to_java, fmt)
+    return ottl_time(col, fmt)
+
+
+def _parse_key_value(col: Column, delimiter: str = "=", pair_delimiter: str = " ") -> Column:
+    # upstream errors on an empty delimiter or equal delimiters
+    if not delimiter or not pair_delimiter:
+        raise OTTLSyntaxError("ParseKeyValue delimiters must be non-empty")
+    if delimiter == pair_delimiter:
+        raise OTTLSyntaxError("ParseKeyValue delimiter and pairDelimiter must differ")
+    return parse_key_value(col, delimiter, pair_delimiter)
+
+
+def _log(col: Column) -> Column:
+    # func_log: natural log; upstream errors on target <= 0 -> NULL here
+    c = col.cast("double")
+    return F.when(c > 0, F.log(c))
+
+
+def _format(fmt: str, cols: list[Column]) -> Column:
+    # Go fmt verbs: %s/%d map 1:1 to java.lang.String.format (what
+    # format_string uses); %v, Go's default verb, is %s on these stringly
+    # values.  Other verbs (%f width/precision, %x, ...) are rejected rather
+    # than silently mis-formatted.
+    java_fmt = fmt.replace("%v", "%s")
+    if re.search(r"%[^sd%]", java_fmt):
+        raise OTTLSyntaxError(f"Format verb outside %s/%d/%v unsupported in {fmt!r}")
+    out = F.format_string(java_fmt, *cols)
+    # format_string renders a NULL arg as the string 'null'; OTTL treats a
+    # nil arg as an error -> NULL here (error-as-null model, R6/R8)
+    for c in cols:
+        out = F.when(c.isNull(), F.lit(None).cast("string")).otherwise(out)
+    return out
+
+
+# Extraction is by GROUP NUMBER, so the Java pattern needs no names: (?P<name>
+# becomes a plain '(' (numbering unchanged).  Java's (?<name>...) would break
+# on RE2-legal names like http_method (Java allows [A-Za-z][A-Za-z0-9]* only)
+# with a PatternSyntaxException at executor runtime, past compile checks.
+def _unnamed(pattern: str) -> str:
+    return re.sub(r"\(\?P<[^>]+>", "(", pattern)
+
+
+def _extract_patterns(col: Column, pattern: str) -> Column:
+    # named capture groups become map entries; the groups are known at
+    # COMPILE time (literal pattern), so this is pure expression work.  A nil
+    # target is an OTTL error -> NULL map (R6), not {}
+    try:
+        # OTTL patterns are Go RE2 syntax: named groups are (?P<name>...)
+        groupindex = re.compile(pattern).groupindex  # name -> group no.
+    except re.error as exc:
+        raise OTTLSyntaxError(f"ExtractPatterns pattern invalid: {exc}") from exc
+    if not groupindex:
+        raise OTTLSyntaxError(
+            "ExtractPatterns pattern must contain at least one named "
+            "capture group (?P<name>...)"
+        )
+    by_num = {num: g for g, num in groupindex.items()}
+    return F.when(col.isNotNull(), _extract_groups_map(col, _unnamed(pattern), by_num))
+
+
+def _extract_grok_patterns(col: Column, pattern: str, named_captures_only: bool = True) -> Column:
+    # %{SYNTAX:SEMANTIC} references expand against the curated base table
+    # (functions/grok.py) into ONE flat regex at COMPILE time, lowered like
+    # ExtractPatterns.  Unknown/cyclic/coerced references reject at load; a
+    # line the pattern doesn't match -> NULL (upstream parse error)
+    try:
+        flat = grok_to_java_regex(pattern, named_captures_only=named_captures_only)
+        name_map = grok_group_names(pattern, named_captures_only=named_captures_only)
+        groupindex = re.compile(flat).groupindex
+    except (ValueError, re.error) as exc:
+        raise OTTLSyntaxError(f"ExtractGrokPatterns: {exc}") from exc
+    if not groupindex:
+        raise OTTLSyntaxError(
+            "ExtractGrokPatterns pattern captures nothing — add a "
+            "%{SYNTAX:semantic} reference or namedCapturesOnly=false"
+        )
+    java_pat = _unnamed(flat)
+    by_num = {num: name_map.get(g, g) for g, num in groupindex.items()}
+    return F.when(
+        col.isNotNull() & col.rlike(java_pat),
+        _extract_groups_map(col, java_pat, by_num, assume_matched=True),
+    )
+
+
+def _sort(col: Column, order: str = "asc") -> Column:
+    # on the arrays converters produce (Split, Keys, Values); nil -> NULL
+    if order not in ("asc", "desc"):
+        raise OTTLSyntaxError(f'Sort order must be "asc"|"desc", got {order!r}')
+    sorted_col = F.array_sort(col)
+    return F.reverse(sorted_col) if order == "desc" else sorted_col
+
+
+def _parse_csv(
+    col: Column,
+    headers: str,
+    delimiter: str = ",",
+    header_delimiter: str | None = None,
+    mode: str = "strict",
+) -> Column:
+    # literal headers/delimiters fix the schema at compile time; a field-count
+    # mismatch -> NULL (upstream errors), see stdfuncs.parse_csv
+    if header_delimiter is None:
+        header_delimiter = delimiter
+    if not delimiter or not header_delimiter:
+        raise OTTLSyntaxError("ParseCSV delimiters must be non-empty")
+    if mode == "lazyQuotes":
+        raise OTTLSyntaxError("ParseCSV lazyQuotes mode unsupported (strict/ignoreQuotes only)")
+    if mode not in ("strict", "ignoreQuotes"):
+        raise OTTLSyntaxError(f"ParseCSV mode must be strict|ignoreQuotes, got {mode!r}")
+    names = headers.split(header_delimiter)
+    if any(not h for h in names):
+        raise OTTLSyntaxError("ParseCSV headers must be non-empty")
+    return parse_csv(col, names, delimiter, mode)
+
+
+def _replace_match(col: Column, glob: str, replacement: str) -> Column:
+    # whole-string path.Match glob, translated to an anchored Java regex at
+    # compile time; on match the value is REPLACED, else unchanged
+    pat = _checked(glob_to_regex, glob)
+    return F.when(col.rlike(pat), F.lit(replacement)).otherwise(col)
+
+
+def _replace_all_matches(m: Column, glob: str, replacement: str) -> Column:
+    # whole-map editor form: every VALUE matching the glob is replaced
+    pat = _checked(glob_to_regex, glob)
+    return F.transform_values(m, lambda k, v: F.when(v.rlike(pat), F.lit(replacement)).otherwise(v))
+
+
+def _truncate_all(m: Column, limit: int) -> Column:
+    # editor truncate_all value form; upstream errors at startup on limit < 0
+    if limit < 0:
+        raise OTTLSyntaxError("TruncateAll limit must be non-negative")
+    return F.transform_values(m, lambda k, v: F.substring(v, 1, limit))
+
+
+_FUNCTIONS = {
+    # the 5 custom functions (ottl_functions.go:17-28)
+    "NormalizePath": ("expr", normalize_path),
+    "ParseSQL": ("expr", parse_sql),
+    "RemoveQueryParams": ("expr", remove_query_params),
+    "FirstNonNil": ("list", first_non_nil),
+    "Concat": ("list, str", ottl_concat),
+    # strings and patterns
+    "IsMatch": ("expr, str", _is_match),
+    "Substring": ("expr, int, int", _substring),
+    "Len": ("expr", lambda c: F.length(c).cast("long")),
+    "ConvertCase": ("expr, str", _convert_case),
+    "Split": ("expr, str", _split),
+    "Trim": ("expr, str?", ottl_trim),
+    "ReplacePattern": ("expr, str, str", _replace_pattern),
+    "ReplaceAllPatterns": ("map, str, str, str", _replace_all_patterns),
+    "ReplaceMatch": ("expr, str, str", _replace_match),
+    "ReplaceAllMatches": ("map, str, str", _replace_all_matches),
+    "TruncateAll": ("map, int", _truncate_all),
+    "Format": ("str, list", _format),
+    "ExtractPatterns": ("expr, str", _extract_patterns),
+    "ExtractGrokPatterns": ("expr, str, bool?", _extract_grok_patterns),
+    # conversions (Int: ParseInt base 10, error -> nil; try_cast has the same
+    # reject set — ANSI bigint grammar, no floats)
+    "Int": ("expr", lambda c: c.try_cast("long")),
+    "Double": ("expr", lambda c: c.try_cast("double")),
+    "String": ("expr", lambda c: c.cast("string")),
+    "Hex": ("expr", lambda c: F.lower(F.hex(c.cast("binary")))),  # Spark's hex() is upper
+    "Log": ("expr", _log),
+    "Decode": ("expr, str", lambda c, encoding: _checked(ottl_decode, c, encoding)),
+    "MD5": ("expr", lambda c: F.md5(c.cast("binary"))),
+    "SHA1": ("expr", lambda c: F.sha1(c.cast("binary"))),
+    "SHA256": ("expr", lambda c: F.sha2(c.cast("binary"), 256)),
+    "SHA512": ("expr", lambda c: F.sha2(c.cast("binary"), 512)),
+    # maps and lists
+    "ParseJSON": ("expr", parse_json_flat),
+    "ParseKeyValue": ("expr, str?, str?", _parse_key_value),
+    "ToKeyValueString": ("expr, str?, str?, bool?", to_key_value_string),
+    "ParseCSV": ("expr, str, str?, str?, str?", _parse_csv),
+    "URL": ("expr", url_to_map),
+    "Keys": ("expr", F.map_keys),
+    "Values": ("expr", F.map_values),
+    "Sort": ("expr, str?", _sort),
+    # Is<Type>: the compiled expression's Catalyst type(s); prefix matches
+    # typeof()'s parameterized renderings (map<...>, array<...>)
+    "IsString": ("expr", lambda c: typeof_is(c, ("string",))),
+    "IsInt": ("expr", lambda c: typeof_is(c, ("bigint", "int", "smallint", "tinyint"))),
+    "IsDouble": ("expr", lambda c: typeof_is(c, ("double", "float"))),
+    "IsBool": ("expr", lambda c: typeof_is(c, ("boolean",))),
+    "IsMap": ("expr", lambda c: typeof_is(c, ("map<",), prefix=True)),
+    "IsList": ("expr", lambda c: typeof_is(c, ("array<",), prefix=True)),
+    # durations: Duration(x) is total nanoseconds (double); the converters
+    # keep upstream return types (Hours/Minutes/Seconds float64, the rest int64)
+    "Duration": ("expr", duration_ns),
+    "Hours": ("expr", lambda c: (c / F.lit(3.6e12)).cast("double")),
+    "Minutes": ("expr", lambda c: (c / F.lit(6e10)).cast("double")),
+    "Seconds": ("expr", lambda c: (c / F.lit(1e9)).cast("double")),
+    "Milliseconds": ("expr", lambda c: (c / F.lit(1e6)).cast("long")),
+    "Microseconds": ("expr", lambda c: (c / F.lit(1e3)).cast("long")),
+    "Nanoseconds": ("expr", lambda c: (c / F.lit(1.0)).cast("long")),
+    # time values: Time parses with a ctimefmt format; TruncateTime is Go
+    # time.Truncate by a duration expression (typically Duration("1h"));
+    # calendar accessors return int64 upstream
+    "Time": ("expr, str", _time),
+    "TruncateTime": ("expr, expr", truncate_time),
+    "UnixSeconds": ("expr", F.unix_seconds),
+    "UnixMilli": ("expr", F.unix_millis),
+    "UnixMicro": ("expr", F.unix_micros),
+    # Spark timestamps are µs precision; the ns value is exact µs*1000
+    "UnixNano": ("expr", lambda c: (F.unix_micros(c) * F.lit(1000)).cast("long")),
+    "Year": ("expr", lambda c: F.year(c).cast("long")),
+    "Month": ("expr", lambda c: F.month(c).cast("long")),
+    "Day": ("expr", lambda c: F.dayofmonth(c).cast("long")),
+    "Hour": ("expr", lambda c: F.hour(c).cast("long")),
+    "Minute": ("expr", lambda c: F.minute(c).cast("long")),
+    "Second": ("expr", lambda c: F.second(c).cast("long")),
+}
+
+#: the compile-or-reject contract surface (README conformance table,
+#: tests/test_conformance.py)
+SUPPORTED_FUNCTIONS = frozenset(_FUNCTIONS)
 
 
 def _compile_call(node: _Call, attrs_col, name_col, resource_col) -> Column:
-    def comp(n):
-        return _compile_node(n, attrs_col, name_col, resource_col)
+    if node.func not in _FUNCTIONS:
+        raise OTTLSyntaxError(f"unsupported OTTL function {node.func!r}")
+    sig, build = _FUNCTIONS[node.func]
+    kinds = _check_args(node.func, sig, node.args)
 
-    if node.func == "NormalizePath":
-        return normalize_path(comp(_unary(node)))
-    if node.func == "ParseSQL":
-        return parse_sql(comp(_unary(node)))
-    if node.func == "RemoveQueryParams":
-        return remove_query_params(comp(_unary(node)))
-    if node.func == "FirstNonNil":
-        (lst,) = node.args
-        if not isinstance(lst, _List):
-            raise OTTLSyntaxError("FirstNonNil takes a list literal")
-        return first_non_nil([comp(i) for i in lst.items])
-    if node.func == "IsMatch":
-        # ottlfuncs.IsMatch(target, pattern): pattern is a literal compiled
-        # once (ottl_functions.go registers StandardFuncs); partial match
-        # semantics == Java regex find == Column.rlike.  A nil target is an
-        # error in OTTL; NULL propagates through rlike and folds to skip in
-        # the rule predicate (the engine's error-as-null model, R6).
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError("IsMatch takes (target, string-literal pattern)")
-        tgt, pat = node.args
-        _validate_regex(pat.value)  # parser errors at startup, never at runtime
-        return comp(tgt).rlike(pat.value)
-    if node.func == "Substring":
-        # ottlfuncs.Substring(target, start, length): 0-based start; errors
-        # when the range falls outside the string -> NULL here (error-as-null)
-        if (
-            len(node.args) != 3
-            or not isinstance(node.args[1], _Int)
-            or not isinstance(node.args[2], _Int)
-        ):
-            raise OTTLSyntaxError("Substring takes (target, int start, int length)")
-        tgt, start, length = node.args
-        if start.value < 0 or length.value < 0:
-            raise OTTLSyntaxError("Substring start/length must be non-negative")
-        col = comp(tgt)
-        return F.when(
-            F.length(col) >= start.value + length.value,
-            F.substring(col, start.value + 1, length.value),
-        )
-    if node.func == "Len":
-        return F.length(comp(_unary(node))).cast("long")
-    if node.func == "ConvertCase":
-        # ottlfuncs.ConvertCase(target, toCase): all four upstream cases.
-        # snake/camel are regexp_replace / split-transform chains — still
-        # pure expressions (stdfuncs.to_snake_case / to_camel_case)
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError('ConvertCase takes (target, "lower"|"upper"|"snake"|"camel")')
-        tgt, case = node.args
-        if case.value == "lower":
-            return F.lower(comp(tgt))
-        if case.value == "upper":
-            return F.upper(comp(tgt))
-        if case.value == "snake":
-            return to_snake_case(comp(tgt))
-        if case.value == "camel":
-            return to_camel_case(comp(tgt))
-        raise OTTLSyntaxError(
-            f"ConvertCase case {case.value!r} unsupported (lower/upper/snake/camel)"
-        )
-    if node.func == "Split":
-        # ottlfuncs.Split(target, delimiter): Go strings.Split — the literal
-        # delimiter splits verbatim, never as a regex
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError("Split takes (target, string-literal delimiter)")
-        if node.args[1].value == "":
-            raise OTTLSyntaxError("Split delimiter must be non-empty")
-        return ottl_split(comp(node.args[0]), node.args[1].value)
-    if node.func == "Trim":
-        # ottlfuncs.Trim(target[, chars]): strip leading/trailing cutset
-        # chars, default " "
-        if (
-            len(node.args) not in (1, 2)
-            or (len(node.args) == 2 and not isinstance(node.args[1], _Str))
-        ):
-            raise OTTLSyntaxError("Trim takes (target[, string-literal chars])")
-        cutset = node.args[1].value if len(node.args) == 2 else " "
-        return ottl_trim(comp(node.args[0]), cutset)
-    if node.func == "ReplacePattern":
-        # value-returning form of the replace_pattern editor: the target
-        # string with every regex match substituted
-        if (
-            len(node.args) != 3
-            or not isinstance(node.args[1], _Str)
-            or not isinstance(node.args[2], _Str)
-        ):
-            raise OTTLSyntaxError(
-                "ReplacePattern takes (target, string-literal pattern, string-literal replacement)"
-            )
-        tgt, pat, repl = node.args
-        _validate_regex(pat.value)
-        return replace_pattern(comp(tgt), pat.value, repl.value)
-    if node.func == "ReplaceAllPatterns":
-        # replace_all_patterns(target-map, "key"|"value", pattern,
-        # replacement): rewrite every key or value of an attribute map —
-        # transform_keys / transform_values keep it a pure expression
-        if (
-            len(node.args) != 4
-            or not isinstance(node.args[0], _MapRef)
-            or not isinstance(node.args[1], _Str)
-            or not isinstance(node.args[2], _Str)
-            or not isinstance(node.args[3], _Str)
-        ):
-            raise OTTLSyntaxError(
-                'ReplaceAllPatterns takes (attributes-map, "key"|"value", pattern, replacement)'
-            )
-        mref, mode, pat, repl = node.args
-        _validate_regex(pat.value)
-        mcol = comp(mref)
-        if mode.value == "value":
-            return F.transform_values(
-                mcol, lambda k, v: replace_pattern(v, pat.value, repl.value)
-            )
-        if mode.value == "key":
-            return F.transform_keys(
-                mcol, lambda k, v: replace_pattern(k, pat.value, repl.value)
-            )
-        raise OTTLSyntaxError(f'ReplaceAllPatterns mode must be "key"|"value", got {mode.value!r}')
-    if node.func == "Int":
-        # ottlfuncs.Int: string -> ParseInt base 10, error -> nil; try_cast
-        # has the same reject set (ANSI bigint grammar, no floats)
-        return comp(_unary(node)).try_cast("long")
-    if node.func == "Double":
-        return comp(_unary(node)).try_cast("double")
-    if node.func == "String":
-        return comp(_unary(node)).cast("string")
-    if node.func == "Duration":
-        return duration_ns(comp(_unary(node)))
-    if node.func in _DURATION_CONVERTERS:
-        divisor, out_type = _DURATION_CONVERTERS[node.func]
-        return (comp(_unary(node)) / F.lit(divisor)).cast(out_type)
-    if node.func == "SHA1":
-        return F.sha1(comp(_unary(node)).cast("binary"))
-    if node.func == "Time":
-        # ottlfuncs.Time(target, format): ctimefmt %-directive grammar ->
-        # Java DateTimeFormatter pattern, translated ONCE at compile time;
-        # unparseable input -> NULL via try_to_timestamp (error-as-null).
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError("Time takes (target, string-literal format)")
-        try:
-            ctime_to_java(node.args[1].value)  # reject bad directives at compile
-        except ValueError as exc:
-            raise OTTLSyntaxError(str(exc)) from exc
-        return ottl_time(comp(node.args[0]), node.args[1].value)
-    if node.func == "TruncateTime":
-        # ottlfuncs.TruncateTime(time, duration) = Go time.Truncate; the
-        # duration arg is an expression (typically Duration("1h")) compiled
-        # to total nanoseconds
-        if len(node.args) != 2:
-            raise OTTLSyntaxError("TruncateTime takes (time, duration)")
-        return truncate_time(comp(node.args[0]), comp(node.args[1]))
-    if node.func == "UnixSeconds":
-        return F.unix_seconds(comp(_unary(node)))
-    if node.func == "UnixMilli":
-        return F.unix_millis(comp(_unary(node)))
-    if node.func == "UnixMicro":
-        return F.unix_micros(comp(_unary(node)))
-    if node.func == "UnixNano":
-        # Spark timestamps are µs precision; the ns value is exact µs*1000
-        return (F.unix_micros(comp(_unary(node))) * F.lit(1000)).cast("long")
-    if node.func == "ParseKeyValue":
-        # ottlfuncs.ParseKeyValue(target[, delimiter[, pairDelimiter]]):
-        # literal delimiters, compile-validated (upstream errors on empty)
-        if len(node.args) not in (1, 2, 3) or any(
-            not isinstance(a, _Str) for a in node.args[1:]
-        ):
-            raise OTTLSyntaxError(
-                "ParseKeyValue takes (target[, string-literal delimiter"
-                "[, string-literal pairDelimiter]])"
-            )
-        delim = node.args[1].value if len(node.args) > 1 else "="
-        pair_delim = node.args[2].value if len(node.args) > 2 else " "
-        if not delim or not pair_delim:
-            raise OTTLSyntaxError("ParseKeyValue delimiters must be non-empty")
-        if delim == pair_delim:
-            raise OTTLSyntaxError(
-                "ParseKeyValue delimiter and pairDelimiter must differ"
-            )
-        return parse_key_value(comp(node.args[0]), delim, pair_delim)
-    if node.func == "ToKeyValueString":
-        if (
-            len(node.args) not in (1, 2, 3, 4)
-            or any(not isinstance(a, _Str) for a in node.args[1:3])
-            or (len(node.args) == 4 and not isinstance(node.args[3], _Bool))
-        ):
-            raise OTTLSyntaxError(
-                "ToKeyValueString takes (map[, string-literal delimiter"
-                "[, string-literal pairDelimiter[, bool sortOutput]]])"
-            )
-        delim = node.args[1].value if len(node.args) > 1 else "="
-        pair_delim = node.args[2].value if len(node.args) > 2 else " "
-        sort_output = node.args[3].value if len(node.args) > 3 else False
-        return to_key_value_string(comp(node.args[0]), delim, pair_delim, sort_output)
-    if node.func == "Decode":
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError("Decode takes (target, string-literal encoding)")
-        try:
-            return ottl_decode(comp(node.args[0]), node.args[1].value)
-        except ValueError as exc:
-            raise OTTLSyntaxError(str(exc)) from exc
-    if node.func == "Keys":
-        return F.map_keys(comp(_unary(node)))
-    if node.func == "Values":
-        return F.map_values(comp(_unary(node)))
-    if node.func == "Hex":
-        # func_hex encodes the value's bytes as lowercase hex; Spark's hex()
-        # is uppercase
-        return F.lower(F.hex(comp(_unary(node)).cast("binary")))
-    if node.func == "Log":
-        # func_log: natural log, errors on target <= 0 -> NULL here
-        c = comp(_unary(node)).cast("double")
-        return F.when(c > 0, F.log(c))
-    if node.func == "ParseJSON":
-        return parse_json_flat(comp(_unary(node)))
-    if node.func == "Format":
-        # ottlfuncs.Format(formatString, [args]): Go fmt verbs.  %s/%d map
-        # 1:1 to java.lang.String.format (what format_string uses); %v is
-        # Go's default verb — everything here is already stringly, so it
-        # translates to %s.  Other verbs (%f width/precision, %x, ...) are
-        # rejected at compile time rather than silently mis-formatted.
-        if (
-            len(node.args) != 2
-            or not isinstance(node.args[0], _Str)
-            or not isinstance(node.args[1], _List)
-        ):
-            raise OTTLSyntaxError("Format takes (string-literal format, [args])")
-        fmt, lst = node.args
-        java_fmt = fmt.value.replace("%v", "%s")
-        if re.search(r"%[^sd%]", java_fmt):
-            raise OTTLSyntaxError(
-                f"Format verb outside %s/%d/%v unsupported in {fmt.value!r}"
-            )
-        cols = [comp(i) for i in lst.items]
-        out = F.format_string(java_fmt, *cols)
-        # format_string renders a NULL arg as the string 'null'; OTTL treats
-        # a nil arg as an error -> NULL here (error-as-null model, R6/R8)
-        for c in cols:
-            out = F.when(c.isNull(), F.lit(None).cast("string")).otherwise(out)
-        return out
-    if node.func == "ExtractPatterns":
-        # ottlfuncs.ExtractPatterns(target, pattern): named capture groups
-        # become map entries.  The groups are known at COMPILE time (literal
-        # pattern), so this lowers to one regexp_extract per group — pure
-        # expression work, no UDF.  OTTL omits non-matching groups from the
-        # map; regexp_extract yields '' on no-match, so empty extractions
-        # are filtered out of the entry list.
-        if len(node.args) != 2 or not isinstance(node.args[1], _Str):
-            raise OTTLSyntaxError("ExtractPatterns takes (target, string-literal pattern)")
-        tgt, pat = node.args
-        try:
-            # OTTL patterns are Go RE2 syntax: named groups are (?P<name>...)
-            groupindex = re.compile(pat.value).groupindex  # name -> group no.
-        except re.error as exc:
-            raise OTTLSyntaxError(f"ExtractPatterns pattern invalid: {exc}") from exc
-        if not groupindex:
-            raise OTTLSyntaxError(
-                "ExtractPatterns pattern must contain at least one named "
-                "capture group (?P<name>...)"
-            )
-        # Extraction is by GROUP NUMBER, so the Java pattern doesn't need the
-        # names at all — rewrite (?P<name> to a plain '(' (numbering is
-        # unchanged).  Translating to Java's (?<name>...) instead would break
-        # on OTTL/RE2-legal names like http_method: Java restricts group
-        # names to [A-Za-z][A-Za-z0-9]* and throws PatternSyntaxException at
-        # executor runtime, past compile-time validation.
-        java_pat = re.sub(r"\(\?P<[^>]+>", "(", pat.value)
-        col = comp(tgt)
-        # OTTL errors on a nil target; error-as-null model (R6) -> NULL map,
-        # consistent with IsMatch/Substring — not an empty {}.
-        return F.when(
-            col.isNotNull(),
-            _extract_groups_map(col, java_pat, {num: g for g, num in groupindex.items()}),
-        )
-    if node.func == "MD5":
-        return F.md5(comp(_unary(node)).cast("binary"))
-    if node.func == "SHA256":
-        return F.sha2(comp(_unary(node)).cast("binary"), 256)
-    if node.func == "Concat":
-        if len(node.args) != 2:
-            raise OTTLSyntaxError("Concat takes (list, separator)")
-        lst, sep = node.args
-        if not isinstance(lst, _List) or not isinstance(sep, _Str):
-            raise OTTLSyntaxError("Concat takes (list literal, string-literal separator)")
-        return ottl_concat([comp(i) for i in lst.items], sep.value)
-    if node.func in _TYPE_PREDICATES:
-        types, prefix = _TYPE_PREDICATES[node.func]
-        return typeof_is(comp(_unary(node)), types, prefix=prefix)
-    if node.func == "SHA512":
-        return F.sha2(comp(_unary(node)).cast("binary"), 512)
-    if node.func in _CALENDAR_ACCESSORS:
-        return _CALENDAR_ACCESSORS[node.func](comp(_unary(node))).cast("long")
-    if node.func == "Sort":
-        # ottlfuncs.Sort(target[, order]): ascending by default; "desc"
-        # reverses.  Operates on the array converters produce (Split, Keys,
-        # Values); nil -> NULL
-        if (
-            len(node.args) not in (1, 2)
-            or (len(node.args) == 2 and not isinstance(node.args[1], _Str))
-        ):
-            raise OTTLSyntaxError('Sort takes (target[, "asc"|"desc"])')
-        order = node.args[1].value if len(node.args) == 2 else "asc"
-        if order not in ("asc", "desc"):
-            raise OTTLSyntaxError(f'Sort order must be "asc"|"desc", got {order!r}')
-        sorted_col = F.array_sort(comp(node.args[0]))
-        return F.reverse(sorted_col) if order == "desc" else sorted_col
-    if node.func == "ParseCSV":
-        # ottlfuncs.ParseCSV(target, headers[, delimiter[, headerDelimiter
-        # [, mode]]]); headers/delimiters are literals so the schema is
-        # fixed at compile time.  Field-count mismatch -> NULL (upstream
-        # errors); see stdfuncs.parse_csv for the quote-aware count check.
-        if (
-            len(node.args) not in (2, 3, 4, 5)
-            or any(not isinstance(a, _Str) for a in node.args[1:])
-        ):
-            raise OTTLSyntaxError(
-                "ParseCSV takes (target, string-literal headers[, delimiter"
-                "[, headerDelimiter[, mode]]])"
-            )
-        delim = node.args[2].value if len(node.args) > 2 else ","
-        hdr_delim = node.args[3].value if len(node.args) > 3 else delim
-        mode = node.args[4].value if len(node.args) > 4 else "strict"
-        if not delim or not hdr_delim:
-            raise OTTLSyntaxError("ParseCSV delimiters must be non-empty")
-        if mode == "lazyQuotes":
-            raise OTTLSyntaxError(
-                "ParseCSV lazyQuotes mode unsupported (strict/ignoreQuotes only)"
-            )
-        if mode not in ("strict", "ignoreQuotes"):
-            raise OTTLSyntaxError(f"ParseCSV mode must be strict|ignoreQuotes, got {mode!r}")
-        headers = node.args[1].value.split(hdr_delim)
-        if any(not h for h in headers):
-            raise OTTLSyntaxError("ParseCSV headers must be non-empty")
-        return parse_csv(comp(node.args[0]), headers, delim, mode)
-    if node.func == "URL":
-        return url_to_map(comp(_unary(node)))
-    if node.func == "ReplaceMatch":
-        # ottlfuncs.ReplaceMatch(target, glob, replacement): whole-string
-        # path.Match glob; on match the value is REPLACED, else unchanged.
-        # The glob is translated to an anchored Java regex at compile time.
-        if (
-            len(node.args) != 3
-            or not isinstance(node.args[1], _Str)
-            or not isinstance(node.args[2], _Str)
-        ):
-            raise OTTLSyntaxError(
-                "ReplaceMatch takes (target, string-literal glob, string-literal replacement)"
-            )
-        try:
-            pat = glob_to_regex(node.args[1].value)
-        except ValueError as exc:
-            raise OTTLSyntaxError(str(exc)) from exc
-        c = comp(node.args[0])
-        return F.when(c.rlike(pat), F.lit(node.args[2].value)).otherwise(c)
-    if node.func == "ReplaceAllMatches":
-        # whole-map form: rewrite every VALUE matching the glob (upstream
-        # editor semantics on an attribute map)
-        if (
-            len(node.args) != 3
-            or not isinstance(node.args[0], _MapRef)
-            or not isinstance(node.args[1], _Str)
-            or not isinstance(node.args[2], _Str)
-        ):
-            raise OTTLSyntaxError(
-                "ReplaceAllMatches takes (attributes-map, string-literal glob, "
-                "string-literal replacement)"
-            )
-        try:
-            pat = glob_to_regex(node.args[1].value)
-        except ValueError as exc:
-            raise OTTLSyntaxError(str(exc)) from exc
-        repl = node.args[2].value
-        return F.transform_values(
-            comp(node.args[0]),
-            lambda k, v: F.when(v.rlike(pat), F.lit(repl)).otherwise(v),
-        )
-    if node.func == "ExtractGrokPatterns":
-        # ottlfuncs.ExtractGrokPatterns(target, pattern[, namedCapturesOnly]):
-        # %{SYNTAX:SEMANTIC} references expand against the curated base table
-        # (functions/grok.py) into ONE flat regex at COMPILE time, then lower
-        # to the same one-regexp_extract-per-group plan ExtractPatterns uses.
-        # Unknown/cyclic/coerced references reject at load; a line the
-        # pattern doesn't match -> NULL (upstream parse error), matched-empty
-        # groups are omitted (ExtractPatterns convention).
-        from .grok import grok_group_names, grok_to_java_regex
+    def lower(kind, n):
+        if kind == "list":
+            return [lower("expr", i) for i in n.items]
+        if kind in ("expr", "map"):
+            return _compile_node(n, attrs_col, name_col, resource_col)
+        return n.value
 
-        if (
-            len(node.args) not in (2, 3)
-            or not isinstance(node.args[1], _Str)
-            or (len(node.args) == 3 and not isinstance(node.args[2], _Bool))
-        ):
-            raise OTTLSyntaxError(
-                "ExtractGrokPatterns takes (target, string-literal pattern"
-                "[, bool namedCapturesOnly])"
-            )
-        nco = node.args[2].value if len(node.args) == 3 else True
-        try:
-            flat = grok_to_java_regex(node.args[1].value, named_captures_only=nco)
-            name_map = grok_group_names(node.args[1].value, named_captures_only=nco)
-            groupindex = re.compile(flat).groupindex
-        except (ValueError, re.error) as exc:
-            raise OTTLSyntaxError(f"ExtractGrokPatterns: {exc}") from exc
-        if not groupindex:
-            raise OTTLSyntaxError(
-                "ExtractGrokPatterns pattern captures nothing — add a "
-                "%{SYNTAX:semantic} reference or namedCapturesOnly=false"
-            )
-        java_pat = re.sub(r"\(\?P<[^>]+>", "(", flat)
-        col = comp(node.args[0])
-        return F.when(
-            col.isNotNull() & col.rlike(java_pat),
-            _extract_groups_map(
-                col,
-                java_pat,
-                {num: name_map.get(g, g) for g, num in groupindex.items()},
-                assume_matched=True,
-            ),
-        )
-    if node.func == "TruncateAll":
-        # editor truncate_all(attributes, limit) value-form: every map value
-        # truncated to limit chars; limit < 0 rejected at compile (upstream
-        # errors at startup)
-        if len(node.args) != 2 or not isinstance(node.args[1], _Int):
-            raise OTTLSyntaxError("TruncateAll takes (attributes-map, int limit)")
-        if not isinstance(node.args[0], _MapRef):
-            raise OTTLSyntaxError("TruncateAll takes an attributes-map target")
-        if node.args[1].value < 0:
-            raise OTTLSyntaxError("TruncateAll limit must be non-negative")
-        limit = node.args[1].value
-        return F.transform_values(
-            comp(node.args[0]), lambda k, v: F.substring(v, 1, limit)
-        )
-    raise OTTLSyntaxError(f"unsupported OTTL function {node.func!r}")
+    return build(*[lower(k, a) for k, a in zip(kinds, node.args)])
 
 
 def compile_ottl(

@@ -1,7 +1,7 @@
 """Operator surface. Import from the submodules:
 
   rules       apply_rules (the one cascade; schema_url-versioned rules
-              gated by literal schema_url comparisons), compile_rule_columns
+              gated by literal schema_url comparisons)
   extract     extract_pages (pandas/Arrow), extract_pages_native
   enrich      insert_attrs_if_absent, apply_semconv_mappings, lookup_lang_name,
               join_dims

@@ -52,9 +52,7 @@ instead.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MODE_ENFORCE, Config
@@ -62,51 +60,7 @@ from ..functions.ottl import compile_ottl, value_expr_never_null
 from ..functions.scalars import attr
 from ..tuning import ensure_jit_codegen
 
-__all__ = ["compile_rule_columns", "apply_rules", "finish_match", "CompiledRuleCols"]
-
-
-@dataclass
-class CompiledRuleCols:
-    rule_id: str
-    predicate: Column
-    operation_name: Column
-    operation_type: Column | None
-    # True when the name expr can evaluate to NULL (= OTTL eval error,
-    # processor.go:244-250) and the cascade must test it before matching.
-    name_nullable: bool = False
-
-
-def compile_rule_columns(
-    cfg: Config,
-    attrs_col: Column,
-    name_col: Column,
-    kind_col: Column,
-) -> list[CompiledRuleCols]:
-    """Compile every validated rule into (predicate, name, type) Columns.
-
-    Driver-side, once per job — the Spark analogue of compileRules
-    (processor.go:81-118).  Rules arrive priority-sorted from
-    Config.validate() (config.go:156-158)."""
-    out: list[CompiledRuleCols] = []
-    for rule in cfg.span_processing.rules:
-        pred = compile_ottl(rule.condition, attrs_col, name_col)
-        if rule.span_kind:
-            # processor.go:215-228 — empty list means all kinds.
-            pred = kind_col.isin(list(rule.span_kind)) & pred
-        name_expr = compile_ottl(rule.operation_name, attrs_col, name_col).cast("string")
-        type_expr = None
-        if rule.operation_type:
-            type_expr = compile_ottl(rule.operation_type, attrs_col, name_col).cast("string")
-        out.append(
-            CompiledRuleCols(
-                rule.id,
-                pred,
-                name_expr,
-                type_expr,
-                name_nullable=not value_expr_never_null(rule.operation_name),
-            )
-        )
-    return out
+__all__ = ["apply_rules"]
 
 
 def apply_rules(
@@ -147,28 +101,26 @@ def apply_rules(
             f"'schema_url' is not in the input ({df.columns})"
         )
 
-    compiled = compile_rule_columns(cfg, attrs, name, kind)
-
-    # One struct-valued CASE chain => each rule predicate is evaluated at most
-    # once per row and evaluation stops at the first match (lazy CASE WHEN),
-    # mirroring the `break` at processor.go:322.
-    no_match = F.lit(None).cast(
-        "struct<rule_id:string,op_name:string,op_type:string>"
-    )
-    cascade = no_match
-    for seq in reversed(range(len(compiled))):
-        c = compiled[seq]
-        hit = F.struct(
-            F.lit(c.rule_id).alias("rule_id"),
-            c.operation_name.alias("op_name"),
-            (c.operation_type if c.operation_type is not None else F.lit(None).cast("string")).alias("op_type"),
+    # Compile every validated rule into one (predicate, hit) branch, driver-side
+    # and once per job — the Spark analogue of compileRules
+    # (processor.go:81-118).  Rules arrive priority-sorted from
+    # Config.validate() (config.go:156-158).
+    branches = []
+    for rule in sp.rules:
+        pred = compile_ottl(rule.condition, attrs, name)
+        if rule.span_kind:
+            # processor.go:215-228 — empty list means all kinds.
+            pred = kind.isin(list(rule.span_kind)) & pred
+        op_name = compile_ottl(rule.operation_name, attrs, name).cast("string")
+        op_type = (
+            compile_ottl(rule.operation_type, attrs, name).cast("string")
+            if rule.operation_type
+            else F.lit(None).cast("string")
         )
-        pred = c.predicate
-        schema_url = sp.rules[seq].schema_url
-        if schema_url:
+        if rule.schema_url:
             # versioned rule: applies only to spans of its schema version
-            pred = (F.col("schema_url") == F.lit(schema_url)) & pred
-        if c.name_nullable:
+            pred = (F.col("schema_url") == F.lit(rule.schema_url)) & pred
+        if not value_expr_never_null(rule.operation_name):
             # name-expr error => skip THIS rule and continue the cascade
             # (processor.go:244-250): fold name_expr IS NOT NULL into the
             # predicate.  The expr appears in both the branch condition and
@@ -178,7 +130,19 @@ def apply_rules(
             # cascade (12.30s vs 11.16s min-warm, cascade_attrib.py harness,
             # commit 980a121): the nested struct-valued CASE costs codegen
             # more than the rare re-evaluation saves.
-            pred = pred & c.operation_name.isNotNull()
+            pred = pred & op_name.isNotNull()
+        hit = F.struct(
+            F.lit(rule.id).alias("rule_id"),
+            op_name.alias("op_name"),
+            op_type.alias("op_type"),
+        )
+        branches.append((pred, hit))
+
+    # One struct-valued CASE chain => each rule predicate is evaluated at most
+    # once per row and evaluation stops at the first match (lazy CASE WHEN),
+    # mirroring the `break` at processor.go:322.
+    cascade = F.lit(None).cast("struct<rule_id:string,op_name:string,op_type:string>")
+    for pred, hit in reversed(branches):
         cascade = F.when(pred, hit).otherwise(cascade)
 
     # Skip-guard (processor.go:202-206): pre-existing operation.name attribute

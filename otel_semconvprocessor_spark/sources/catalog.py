@@ -12,7 +12,7 @@ pipeline change:
     are engine-verified in-sandbox against a real V2 TableCatalog — the
     Derby-backed JDBCTableCatalog that ships inside pyspark's jars
     (tests/test_catalog.py::test_iceberg_catalog_verbs_against_real_v2_catalog
-    runs create_or_replace / read through the genuine CatalogManager path;
+    runs create_or_replace through the genuine CatalogManager path;
     JDBC tables are unpartitioned, so the partitioned create still needs
     the iceberg-spark-runtime jar).
   * ``ParquetDirCatalog`` — the test double: one directory per table,
@@ -21,14 +21,14 @@ pipeline change:
     through ``route.rebalanced_writer``, the same shape as the single-pass
     route, so file counts stay O(partitions), not O(tasks x partitions).
 
-The verbs are the two the pipeline uses: ``create_or_replace`` and ``read``.
+The one verb the pipeline uses is ``create_or_replace``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.route import rebalanced_writer
@@ -37,12 +37,9 @@ __all__ = ["SinkCatalog", "ParquetDirCatalog", "IcebergCatalog"]
 
 
 class SinkCatalog:
-    """DataFrameWriterV2-shaped sink interface (create_or_replace / read)."""
+    """DataFrameWriterV2-shaped sink interface (create_or_replace)."""
 
     def create_or_replace(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
-        raise NotImplementedError
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
         raise NotImplementedError
 
 
@@ -57,9 +54,6 @@ class ParquetDirCatalog(SinkCatalog):
 
     def create_or_replace(self, df, table, partition_cols):
         rebalanced_writer(df, partition_cols).parquet(self._path(table))
-
-    def read(self, spark, table):
-        return spark.read.parquet(self._path(table))
 
 
 @dataclass
@@ -79,6 +73,3 @@ class IcebergCatalog(SinkCatalog):
         if t:
             w = w.partitionedBy(t[0], *t[1:])
         w.createOrReplace()
-
-    def read(self, spark, table):
-        return spark.table(self._ident(table))

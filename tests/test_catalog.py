@@ -26,9 +26,9 @@ def _df(spark, langs):
 
 def test_create_or_replace_and_read(spark, cat):
     cat.create_or_replace(_df(spark, ["en", "de"]), "t1", ["lang"])
-    assert cat.read(spark, "t1").count() == 2
+    assert spark.read.parquet(cat._path("t1")).count() == 2
     cat.create_or_replace(_df(spark, ["fr"]), "t1", ["lang"])
-    assert {r["lang"] for r in cat.read(spark, "t1").collect()} == {"fr"}
+    assert {r["lang"] for r in spark.read.parquet(cat._path("t1")).collect()} == {"fr"}
 
 
 def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path, chunk_codecs):
@@ -41,7 +41,7 @@ def test_write_per_sink_tables_through_catalog(spark, cat, tmp_path, chunk_codec
     res = run_pipeline(spark, pages, str(tmp_path / "out"), run_id="cat", catalog=cat)
     assert res.sink_path == cat.base_path
     assert set(os.listdir(cat.base_path)) == set(SINKS)
-    total = sum(cat.read(spark, s).count() for s in SINKS)
+    total = sum(spark.read.parquet(cat._path(s)).count() for s in SINKS)
     assert total == 300  # routed-row equality: disjoint + exhaustive
     # partition layout present (warc_day= / lang= subdirs)
     sink_dir = f"{cat.base_path}/sink_http"
@@ -122,7 +122,7 @@ def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
     """Round-5 judge task #5: engine-verify the DataFrameWriterV2 verbs
     against a REAL V2 TableCatalog that ships with Spark — the Derby-backed
     JDBCTableCatalog (pyspark bundles derby*.jar).  IcebergCatalog's
-    create_or_replace / read run the genuine V2 catalog path (createTable
+    create_or_replace runs the genuine V2 catalog path (createTable
     through CatalogManager), not the parquet-dir twin.
     JDBC tables are unpartitioned, so the (warc_day, lang) partitioned
     create still needs the Iceberg runtime jar — that stays a prod smoke.
@@ -141,12 +141,12 @@ def test_iceberg_catalog_verbs_against_real_v2_catalog(spark):
             "id", "CAST(id % 3 AS STRING) AS lang", "md5(CAST(id AS STRING)) AS url"
         )
         ic.create_or_replace(df, "t_verbs", [])
-        assert ic.read(spark, "t_verbs").count() == 10
+        assert spark.table(ic._ident("t_verbs")).count() == 10
         # createOrReplace must drop + recreate, not append
         ic.create_or_replace(df.limit(4), "t_verbs", [])
-        assert ic.read(spark, "t_verbs").count() == 4
+        assert spark.table(ic._ident("t_verbs")).count() == 4
         # schema round-trips through the real catalog
-        assert set(ic.read(spark, "t_verbs").columns) == {"id", "lang", "url"}
+        assert set(spark.table(ic._ident("t_verbs")).columns) == {"id", "lang", "url"}
     finally:
         for k in ("spark.sql.catalog.v2smoke", "spark.sql.catalog.v2smoke.url",
                   "spark.sql.catalog.v2smoke.driver"):

@@ -26,6 +26,7 @@ from otel_semconvprocessor_spark.config_yaml import (
 from otel_semconvprocessor_spark.functions.ottl import (
     OTTLSyntaxError,
     SUPPORTED_FUNCTIONS,
+    compile_ottl,
 )
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "conformance")
@@ -136,30 +137,75 @@ def test_unsupported_yaml_raises_with_rule_and_field_named(spark):
     assert "kebab_case" in msg and "operation_name" in msg
 
 
-def test_rejection_is_never_a_crash(spark):
-    """Fuzz-ish sweep: malformed expressions in every field slot must raise
-    OTTLSyntaxError (or config ValueError), never anything else."""
-    bad_exprs = [
-        "", "((", 'attributes[name]', "name ==", "nil > 3", "[1,2]",
-        'Foo("x")', "Len()", "Substring(name)", 'Trim(name, "a", "b")',
-        'Duration(name, "x")', "and and", 'Concat("a", "b")',
-    ]
-    for expr in bad_exprs:
-        text = f"""
+def _one_rule_yaml(operation_name, rule_id="r1"):
+    return f"""
 enabled: true
 span_processing:
   enabled: true
   rules:
-    - id: r1
+    - id: {rule_id}
       priority: 1
       condition: 'name != nil'
-      operation_name: '{expr.replace("'", "''")}'
+      operation_name: '{operation_name.replace("'", "''")}'
 """
+
+
+def test_rejection_is_never_a_crash(spark):
+    """Fuzz-ish sweep: malformed expressions in a structurally valid rule
+    must raise OTTLSyntaxError, never anything else.  (An empty expression is
+    the config's own check, a plain ValueError naming the field.)"""
+    with pytest.raises(ValueError, match="empty operation_name"):
+        load_collector_yaml(_one_rule_yaml(""))
+    bad_exprs = [
+        "((", 'attributes[name]', "name ==", "nil > 3", "[1,2]",
+        'Foo("x")', "Len()", "Substring(name)", 'Trim(name, "a", "b")',
+        'Duration(name, "x")', "and and", 'Concat("a", "b")',
+        "FirstNonNil()", "FirstNonNil([name], name)",
+    ]
+    for expr in bad_exprs:
         try:
-            load_collector_yaml(text)
-        except (OTTLSyntaxError, ValueError):
+            load_collector_yaml(_one_rule_yaml(expr))
+        except OTTLSyntaxError:
             continue
         raise AssertionError(f"expression {expr!r} was accepted")
+
+
+def test_wrong_arity_rejects_with_rule_and_field_named(spark):
+    with pytest.raises(OTTLSyntaxError) as exc:
+        load_collector_yaml(_one_rule_yaml('FirstNonNil([attributes["a"]], "x")', "fnn_two_args"))
+    msg = str(exc.value)
+    assert "fnn_two_args" in msg and "operation_name" in msg and "FirstNonNil" in msg
+
+
+# a fixed atom set: every argument kind a signature names, plus the empty
+# string and a negative int (the literal values builders check).  nil is left
+# out to keep the sweep (4,526 calls) near 20 s: in an expr slot it lowers
+# like `name`, and no signature has a nil kind.
+_ATOMS = ["name", '"s"', "1", "true", "[name]", "attributes", '""', "-1"]
+
+
+def test_every_function_compiles_or_cleanly_rejects(spark):
+    """Every supported function with 0, 1 and 2 arguments drawn from _ATOMS
+    either compiles to a Column or raises OTTLSyntaxError — the signature
+    table is checked for every name, not just the documented invocations."""
+    from itertools import product
+
+    from pyspark.sql import Column
+
+    crashes = []
+    for func in sorted(SUPPORTED_FUNCTIONS):
+        for n in range(3):
+            for args in product(_ATOMS, repeat=n):
+                expr = f"{func}({', '.join(args)})"
+                try:
+                    result = compile_ottl(expr, resource_col="resource")
+                except OTTLSyntaxError:
+                    continue
+                except Exception as exc:  # noqa: BLE001 - any other type is a compiler bug
+                    result = exc
+                if not isinstance(result, Column):
+                    crashes.append(f"{expr}: {result!r}")
+    assert crashes == [], crashes[:10]
 
 
 # ---- structural validation through the YAML path --------------------------

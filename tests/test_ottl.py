@@ -81,6 +81,12 @@ def test_unsupported_function_still_raises():
         compile_ottl('Uppercase(name)')
 
 
+def test_first_non_nil_wrong_arity_rejects(spark):
+    for expr in ("FirstNonNil()", "FirstNonNil([name], name)"):
+        with pytest.raises(OTTLSyntaxError, match=r"FirstNonNil takes \(list\)"):
+            compile_ottl(expr)
+
+
 def test_convert_case(frame):
     low = _col(frame, 'ConvertCase(name, "lower")')
     up = _col(frame, 'ConvertCase(name, "upper")')

@@ -143,8 +143,11 @@ _RULE_ORDER = [
 ]
 
 
-def _py_pipeline(rows):
-    """Full row-at-a-time oracle over raw page text: extract + cascade."""
+def _py_pipeline(rows, versions=None):
+    """Full row-at-a-time oracle over raw page text: extract + cascade.
+    ``versions`` maps a rule id to its schema_url; such a rule applies only
+    to pages whose ``schema.url`` line names that version."""
+    versions = versions or {}
     out = []
     for url, text in rows:
         full = dict(_ATTR_RE.findall(text))
@@ -156,6 +159,8 @@ def _py_pipeline(rows):
             continue
         result = None
         for rid in _RULE_ORDER:
+            if versions.get(rid, "") not in ("", a.get("schema.url")):
+                continue
             # value-expr error => skip rule: only internal_operations /
             # database_queries can "error" and their conditions preclude it
             r = _py_eval_rule(rid, a, kind)
@@ -274,6 +279,75 @@ def test_versioned_rules_match_only_their_schema_version(spark, pages):
     assert any(plain[u]["rule_id"] for u in new) and any(plain[u]["rule_id"] for u in old)
     assert all(versioned[u]["rule_id"] is None for u in old)
     assert all(versioned[u]["rule_id"] == plain[u]["rule_id"] for u in new)
+
+
+# Hand-written pages outside the generator's two versions: each span is
+# written once with no schema.url line and once at 1.99.0, a version no rule
+# names.  Under _mixed_version_rules the http server and grpc server spans
+# match only versioned rules, the others also a wildcard rule.
+_HAND_SPANS = [
+    "span.name: GET /u/1\nspan.kind: server\nhttp.method: GET\nhttp.route: /u/{id}",
+    "span.name: GET /u/2\nspan.kind: server\nhttp.method: GET\nhttp.route: /u/{id}\nurl.path: /u/2",
+    "span.name: Cart/Get\nspan.kind: server\nrpc.system: grpc\nrpc.service: Cart\nrpc.method: Get",
+    "span.name: q\nspan.kind: client\ndb.statement: SELECT * FROM users\n"
+    "db.operation: find\ndb.collection.name: users",
+    "span.name: send\nspan.kind: producer\nmessaging.operation: publish\n"
+    "messaging.destination.name: orders",
+    "span.name: job\nspan.kind: internal\ninternal.operation: rebuild-index",
+]
+
+
+def _hand_pages(spark, schema):
+    import datetime
+
+    ts = datetime.datetime(2026, 1, 1)
+    rows = []
+    for i, span in enumerate(_HAND_SPANS):
+        for tag, line in (("nover", ""), ("v199", "\nschema.url: 1.99.0")):
+            rows.append((f"https://hand.example/{tag}/{i}", ts, bytearray(b"<html></html>"), span + line, "en"))
+    return spark.createDataFrame(rows, schema)
+
+
+def _mixed_version_rules():
+    """Every 3rd reference rule at 1.21.0, the next at 1.26.0, the rest
+    wildcard."""
+    rules = reference_rules()
+    for i, r in enumerate(rules):
+        r.schema_url = ("1.21.0", "1.26.0", "")[i % 3]
+    return rules
+
+
+def test_versioned_cascade_matches_pure_python_oracle(spark, pages):
+    """Mixed-version rule set vs the oracle with its schema_url gate, per url:
+    generated pages (1.21.0 / 1.26.0) plus hand-written pages with no
+    schema.url line or an unknown version, which see only wildcard rules."""
+    rules = _mixed_version_rules()
+    cfg = reference_config()
+    cfg.span_processing.rules = rules
+    cfg.validate()
+    versions = {r.id: r.schema_url for r in rules}
+    base = pages.select("url", "warc_ts", "html", "text", "lang")
+    allp = base.unionByName(_hand_pages(spark, base.schema))
+    raw = [(r["url"], r["text"]) for r in allp.select("url", "text").collect()]
+    oracle = {u: (rid, op_name, op_type, final) for u, rid, op_name, op_type, final in _py_pipeline(raw, versions)}
+    got = build_normalized(spark, allp, cfg).select("url", "rule_id", "operation_name", "operation_type", "name")
+    rows = got.collect()
+    assert len(rows) == len(oracle) == N + 2 * len(_HAND_SPANS)
+    for r in rows:
+        assert (r["rule_id"], r["operation_name"], r["operation_type"]) == oracle[r["url"]][:3], r["url"]
+        if oracle[r["url"]][0] is not None:
+            assert r["name"] == oracle[r["url"]][3], r["url"]
+    # the gate is exercised in both directions on generated pages
+    hit = {versions[o[0]] for o in oracle.values() if o[0] is not None}
+    assert hit == {"1.21.0", "1.26.0", ""}
+    # hand pages: wildcard rules only, and the gate (not the data) leaves
+    # the versioned-only spans unmatched
+    hand = {r["url"]: r["rule_id"] for r in rows if r["url"].startswith("https://hand.")}
+    assert all(rid is None or versions[rid] == "" for rid in hand.values())
+    assert [rid for u, rid in hand.items() if u.endswith(("/0", "/2"))] == [None] * 4
+    assert set(hand.values()) == {
+        None, "http_paths", "database_operations", "messaging_producer", "internal_operations",
+    }
 
 
 @pytest.fixture(scope="module")
