@@ -21,7 +21,8 @@ from dataclasses import dataclass
 import yaml
 
 from .config import Config, OTTLRule, SpanProcessingConfig
-from .functions.ottl import OTTLSyntaxError, compile_ottl
+from .functions.ottl import OTTLSyntaxError
+from .operators.rules import compile_rule_field
 
 __all__ = [
     "load_collector_yaml",
@@ -88,11 +89,7 @@ def load_collector_yaml(text: str) -> Config:
         else:
             raise ValueError("no semconv processor found in 'processors:'")
     cfg = load_semconv_mapping(sub)
-    bad = [
-        f"rule {r.rule_id!r} field {r.field}: {r.error}"
-        for r in conformance_report(cfg)
-        if not r.compiled
-    ]
+    bad = [r.error for r in conformance_report(cfg) if not r.compiled]
     if bad:
         raise OTTLSyntaxError("; ".join(bad))
     return cfg
@@ -108,18 +105,18 @@ class RuleFieldReport:
 
 
 def conformance_report(cfg: Config) -> list[RuleFieldReport]:
-    """Compile every OTTL expression in the config; report per-field
-    compiled-or-rejected.  A rejection is ALWAYS an OTTLSyntaxError with a
-    message (the clean-reject contract) — any other exception type is a
-    compiler bug and propagates."""
+    """Compile every OTTL expression in the config, as ``apply_rules`` does
+    on an OTLP span frame (which carries a ``resource`` map column); report
+    per-field compiled-or-rejected.  A rejection is ALWAYS an OTTLSyntaxError
+    with a message naming the rule and field (the clean-reject contract) —
+    any other exception type is a compiler bug and propagates."""
     out: list[RuleFieldReport] = []
     for rule in cfg.span_processing.rules:
-        fields = [("condition", rule.condition), ("operation_name", rule.operation_name)]
-        if rule.operation_type:
-            fields.append(("operation_type", rule.operation_type))
-        for fname, expr in fields:
+        fields = ["condition", "operation_name"] + (["operation_type"] if rule.operation_type else [])
+        for fname in fields:
+            expr = getattr(rule, fname)
             try:
-                compile_ottl(expr, resource_col="resource")
+                compile_rule_field(rule, fname, "attrs", "name", "resource")
                 out.append(RuleFieldReport(rule.id, fname, expr, True))
             except OTTLSyntaxError as exc:
                 out.append(RuleFieldReport(rule.id, fname, expr, False, str(exc)))

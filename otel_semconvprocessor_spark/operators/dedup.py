@@ -69,22 +69,21 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(t)
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       normalized: bool = False) -> DataFrame:
+def exact_dedup_groups(df: DataFrame, normalized: bool = False) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct content with the
     smallest id as the deterministic keeper and the duplicate count."""
-    key = normalize_text(text_col) if normalized else _as_col(text_col)
+    key = normalize_text("text") if normalized else F.col("text")
     return (
-        df.select(F.md5(key).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(key).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
     )
 
 
-def _pair_join(left: DataFrame, right: DataFrame, on, id_col: str) -> DataFrame:
+def _pair_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     a = left.alias("a")
     b = right.alias("b")
-    return a.join(b, on=on).filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return a.join(b, on=on).filter(F.col("a.doc_id") < F.col("b.doc_id"))
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -101,13 +100,10 @@ def jaccard(a: Column, b: Column) -> Column:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.7,
-    shingle_k: int = 3,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup pairs with exact-Jaccard verification.
@@ -132,10 +128,10 @@ def minhash_lsh_pairs(
     # joins it back by id after candidate dedup
     sh = (
         df.repartition(spread)  # tiny single-file inputs must still parallelize
-        .select(F.col(id_col), word_shingles(text_col, shingle_k).alias("__sh"))
+        .select(F.col("doc_id"), word_shingles("text").alias("__sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sig = sh.select(id_col, minhash_signature(F.col("__sh"), num_hashes).alias("__sig"))
+    sig = sh.select("doc_id", minhash_signature(F.col("__sh"), num_hashes).alias("__sig"))
     # banded frame is SLIM — (id, band, 32-char band key) only.  Carrying the
     # full shingle arrays here (the round-2 shape) duplicated the shingle
     # payload x bands through the persist AND both shuffle sides of the
@@ -144,7 +140,7 @@ def minhash_lsh_pairs(
     # slim banded 0.7 MB (7x) + 3.7 MB x1 shingles, and the pair join now
     # shuffles ids instead of shingle arrays.
     banded = sig.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 *[
@@ -161,7 +157,7 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("__band"),
-    ).select(id_col, F.col("__band.band").alias("band"), F.col("__band.band_key").alias("band_key"))
+    ).select("doc_id", F.col("__band.band").alias("band"), F.col("__band.band_key").alias("band_key"))
 
     # the banded frame feeds three plan branches (bucket sizing + both sides
     # of the self-join); without persist the whole shingle+signature pipeline
@@ -180,19 +176,19 @@ def minhash_lsh_pairs(
     )
 
     cand = (
-        _pair_join(banded, banded, on=["band", "band_key"], id_col=id_col)
+        _pair_join(banded, banded, on=["band", "band_key"])
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
     # shingles re-attached by id AFTER candidate dedup: each side's payload
     # crosses one join, once per candidate — never x bands
     cand = cand.join(
-        sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a")), on="id_a"
+        sh.select(F.col("doc_id").alias("id_a"), F.col("__sh").alias("sh_a")), on="id_a"
     ).join(
-        sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b")), on="id_b"
+        sh.select(F.col("doc_id").alias("id_b"), F.col("__sh").alias("sh_b")), on="id_b"
     )
     return _with_cached_deps(
         cand.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
@@ -202,7 +198,7 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(text: Column | str, tokens: Column | None = None) -> Column:
+def simhash64(text: Column | str) -> Column:
     """64-bit SimHash as a 64-char '0'/'1' string (portable across engines —
     no unsigned-int pitfalls).  Token hash = the first 16 hex chars of
     md5(token) (64 bits); bit i votes +1/-1; signature bit = majority.
@@ -210,7 +206,6 @@ def simhash64(text: Column | str, tokens: Column | None = None) -> Column:
     md5-derived bits (rather than xxhash64) keep the signature reproducible
     in any engine with md5 — the DuckDB oracle re-derives identical
     signatures from the same hex-nibble arithmetic."""
-    toks = tokens if tokens is not None else ws_tokens(text)
 
     def bit_votes(t: Column) -> Column:
         # nibble p (0-based) of the md5 hex supplies bits 4p..4p+3, high bit
@@ -234,7 +229,7 @@ def simhash64(text: Column | str, tokens: Column | None = None) -> Column:
         )
 
     votes = F.aggregate(
-        toks,
+        ws_tokens(text),
         F.array_repeat(F.lit(0), 64),
         lambda acc, t: F.zip_with(acc, bit_votes(t), lambda a, b: a + b),
     )
@@ -250,10 +245,10 @@ def hamming_bits(a: Column, b: Column) -> Column:
     return F.size(F.filter(F.zip_with(za, zb, lambda x, y: x != y), lambda d: d))
 
 
-def simhash_chunk_bounds(chunks: int, bits: int = 64) -> list[tuple[int, int]]:
-    """Partition ``bits`` signature bits into ``chunks`` contiguous spans
+def simhash_chunk_bounds(chunks: int) -> list[tuple[int, int]]:
+    """Partition the 64 signature bits into ``chunks`` contiguous spans
     (1-based start, width) as evenly as possible — every bit covered."""
-    base, extra = divmod(bits, chunks)
+    base, extra = divmod(64, chunks)
     bounds, start = [], 1
     for c in range(chunks):
         width = base + (1 if c < extra else 0)
@@ -264,8 +259,6 @@ def simhash_chunk_bounds(chunks: int, bits: int = 64) -> list[tuple[int, int]]:
 
 def simhash_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     max_hamming: int = 3,
     chunks: int | None = None,
@@ -296,9 +289,9 @@ def simhash_pairs(
     if chunks > 64:
         raise ValueError(f"chunks must be <= 64 (got {chunks})")
     spread = df.sparkSession.sparkContext.defaultParallelism
-    sigd = df.repartition(spread).select(F.col(id_col), simhash64(text_col).alias("__sig"))
+    sigd = df.repartition(spread).select(F.col("doc_id"), simhash64("text").alias("__sig"))
     banded = sigd.select(
-        id_col,
+        "doc_id",
         "__sig",
         F.explode(
             F.array(
@@ -311,7 +304,7 @@ def simhash_pairs(
                 ]
             )
         ).alias("__b"),
-    ).select(id_col, "__sig", F.col("__b.chunk").alias("chunk"), F.col("__b.chunk_val").alias("chunk_val"))
+    ).select("doc_id", "__sig", F.col("__b.chunk").alias("chunk"), F.col("__b.chunk_val").alias("chunk_val"))
     # feeds both sides of the self-join; disk-backed for the same 100 TB
     # spill reason as the minhash banded frame above
     banded_cached = banded.persist(StorageLevel.MEMORY_AND_DISK)
@@ -323,10 +316,10 @@ def simhash_pairs(
         how="left_anti",
     )
     cand = (
-        _pair_join(banded, banded, on=["chunk", "chunk_val"], id_col=id_col)
+        _pair_join(banded, banded, on=["chunk", "chunk_val"])
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.col("a.__sig").alias("sig_a"),
             F.col("b.__sig").alias("sig_b"),
         )
@@ -340,25 +333,18 @@ def simhash_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    shingle_k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, *, threshold: float = 0.8) -> DataFrame:
     """All-pairs exact n-gram Jaccard (quadratic — small inputs / verification
     baseline only; the scale path is minhash_lsh_pairs)."""
     spread = df.sparkSession.sparkContext.defaultParallelism
     sh = (
         df.repartition(spread)
-        .select(F.col(id_col), word_shingles(text_col, shingle_k).alias("__sh"))
+        .select(F.col("doc_id"), word_shingles("text").alias("__sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)  # both sides of the cross join
     )
-    pairs = _pair_join(sh, sh, on=F.lit(True), id_col=id_col).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
+    pairs = _pair_join(sh, sh, on=F.lit(True)).select(
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
         jaccard(F.col("a.__sh"), F.col("b.__sh")).alias("jaccard"),
     )
     return _with_cached_deps(

@@ -39,7 +39,7 @@ __all__ = [
 ]
 
 
-def insert_attrs_if_absent(df: DataFrame, values: dict[str, str], attrs_col: str = "attrs") -> DataFrame:
+def insert_attrs_if_absent(df: DataFrame, values: dict[str, str]) -> DataFrame:
     """Resource-processor 'insert' action (config.yaml:17-27): add each
     key/value only when the key is absent.
 
@@ -54,7 +54,7 @@ def insert_attrs_if_absent(df: DataFrame, values: dict[str, str], attrs_col: str
     values = {k: v for k, v in values.items() if v is not None}
     if not values:
         return df
-    attrs = F.col(attrs_col)
+    attrs = F.col("attrs")
     additions = F.map_from_entries(
         F.filter(
             F.array(
@@ -78,7 +78,7 @@ def insert_attrs_if_absent(df: DataFrame, values: dict[str, str], attrs_col: str
         none_present = none_present & F.try_element_at(attrs, F.lit(k)).isNull()
     empty = F.create_map().cast("map<string,string>")
     return df.withColumn(
-        attrs_col,
+        "attrs",
         F.when(attrs.isNull(), const_all)
         .when(none_present, F.map_concat(attrs, const_all))
         .otherwise(F.map_concat(F.coalesce(attrs, empty), additions)),
@@ -261,12 +261,7 @@ def _rewrite(attrs: Column, renames: dict, copies: dict, deletes: list) -> Colum
     return F.transform(F.array(out), with_copies)[0]
 
 
-def apply_semconv_mappings(
-    df: DataFrame,
-    mappings: list[SemconvMapping] | DataFrame,
-    attrs_col: str = "attrs",
-    schema_url_col: str = "schema_url",
-) -> DataFrame:
+def apply_semconv_mappings(df: DataFrame, mappings: list[SemconvMapping] | DataFrame) -> DataFrame:
     """Apply rename/move/copy/delete as one compiled CASE over the attrs map:
 
         CASE WHEN schema_url = '<v>' AND (<k1> in attrs OR ...) THEN <rewrite>
@@ -281,14 +276,14 @@ def apply_semconv_mappings(
     job runs."""
     if isinstance(mappings, DataFrame):
         mappings = _from_table(mappings)
-    attrs = F.col(attrs_col)
+    attrs = F.col("attrs")
     out = None
     for version, (renames, copies, deletes) in _versions(mappings).items():
         present = [F.map_contains_key(attrs, F.lit(k)) for k in dict.fromkeys([*renames, *copies, *deletes])]
-        cond = (F.col(schema_url_col) == version) & reduce(Column.__or__, present)
+        cond = (F.col("schema_url") == version) & reduce(Column.__or__, present)
         rewrite = _rewrite(attrs, renames, copies, deletes)
         out = F.when(cond, rewrite) if out is None else out.when(cond, rewrite)
-    return df if out is None else df.withColumn(attrs_col, out.otherwise(attrs))
+    return df if out is None else df.withColumn("attrs", out.otherwise(attrs))
 
 
 # ---------------------------------------------------------------------------

@@ -66,11 +66,10 @@ def debug_sample(df: DataFrame, sampling_initial: int = 10, sampling_thereafter:
     return initial.unionByName(sampled).dropDuplicates([key])
 
 
-def write_with_rotation(df: DataFrame, path: str, max_records_per_file: int = 100_000,
-                        mode: str = "overwrite") -> None:
+def write_with_rotation(df: DataFrame, path: str, max_records_per_file: int = 100_000) -> None:
     """S3: file exporter with 'rotation' — in columnar land rotation is a
     bound on output file size, enforced by maxRecordsPerFile."""
-    df.write.mode(mode).option("maxRecordsPerFile", str(max_records_per_file)).parquet(path)
+    df.write.mode("overwrite").option("maxRecordsPerFile", str(max_records_per_file)).parquet(path)
 
 
 def passthrough(df: DataFrame) -> DataFrame:
@@ -83,10 +82,10 @@ def passthrough(df: DataFrame) -> DataFrame:
 DURATION_BUCKETS_MS = [0.01, 0.05, 0.1, 0.5, 1.0, 5.0, 10.0, 50.0, 100.0]
 
 
-def duration_histogram(durations: DataFrame, col: str = "duration_ms") -> DataFrame:
-    """M3: histogram of stage/chunk durations over the reference's bucket
-    boundaries; returns (bucket_le, n) with +inf as the last bucket."""
-    d = F.col(col)
+def duration_histogram(durations: DataFrame) -> DataFrame:
+    """M3: histogram of the ``duration_ms`` column over the reference's
+    bucket boundaries; returns (bucket_le, n) with +inf as the last bucket."""
+    d = F.col("duration_ms")
     bucket = F.lit(float("inf"))
     for le in reversed(DURATION_BUCKETS_MS):
         bucket = F.when(d <= le, F.lit(le)).otherwise(bucket)

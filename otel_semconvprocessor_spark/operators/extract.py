@@ -98,13 +98,13 @@ def _finish(df: DataFrame, ext: Column) -> Column | DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def extract_pages_native(df: DataFrame, text_col: str = "text", html_col: str = "html") -> DataFrame:
+def extract_pages_native(df: DataFrame) -> DataFrame:
     ensure_jit_codegen(df.sparkSession)
-    text = F.col(text_col)
+    text = F.col("text")
     # a binary->string cast never raises: malformed UTF-8 reads as U+FFFD
     # when the regex decodes it, like the pandas twin's decode(errors=
     # "replace"); F.decode raises MALFORMED_CHARACTER_CODING under ANSI
-    html_text = F.col(html_col).cast("string")
+    html_text = F.col("html").cast("string")
 
     keys = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 1)
     vals = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 2)
@@ -202,8 +202,8 @@ def _make_extract_udf():
 _extract_udf = _make_extract_udf()
 
 
-def extract_pages(df: DataFrame, text_col: str = "text", html_col: str = "html") -> DataFrame:
+def extract_pages(df: DataFrame) -> DataFrame:
     """Parse stage via Arrow-batched pandas UDF (north_star path)."""
     ensure_jit_codegen(df.sparkSession)
-    ext = _extract_udf(F.col(text_col), F.col(html_col))
+    ext = _extract_udf(F.col("text"), F.col("html"))
     return _finish(df.withColumn("__ext", ext), F.col("__ext")).drop("__ext")

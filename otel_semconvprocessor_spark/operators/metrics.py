@@ -34,33 +34,20 @@ __all__ = [
 ]
 
 
-def sliding_window_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    *,
-    window: str = "7 days",
-    slide: str = "1 day",
-    keys: tuple[str, ...] = ("event_type",),
-    value_col: str | None = "value",
-) -> DataFrame:
+def sliding_window_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Sliding event-time windows (the batch form of the streaming windowed
-    counters, SURVEY.md §2.4/S5): count + value sum per (window start, keys).
+    counters, SURVEY.md §2.4/S5): 7-day windows sliding by 1 day, count +
+    ``value`` sum per (window start, ``event_type``).
 
-    Uses the built-in ``window()`` generator — each row lands in
-    window/slide overlapping windows (7 here), all expression work before
-    one groupBy shuffle; epoch-aligned UTC window starts, so results are
-    engine-reproducible (DuckDB oracle re-derives membership as the 7
-    calendar days ending at date(ts))."""
-    from pyspark.sql import functions as F
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if value_col is not None:
-        aggs.append(F.round(F.sum(value_col), 3).alias("total_value"))
+    Uses the built-in ``window()`` generator — each row lands in 7
+    overlapping windows, all expression work before one groupBy shuffle;
+    epoch-aligned UTC window starts, so results are engine-reproducible
+    (DuckDB oracle re-derives membership as the 7 calendar days ending at
+    date(ts))."""
     return (
-        df.groupBy(F.window(ts_col, window, slide).alias("__w"), *keys)
-        .agg(*aggs)
-        .select(F.to_date("__w.start").alias("win_start"), *keys, "n",
-                *(["total_value"] if value_col is not None else []))
+        df.groupBy(F.window(ts_col, "7 days", "1 day").alias("__w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 3).alias("total_value"))
+        .select(F.to_date("__w.start").alias("win_start"), "event_type", "n", "total_value")
     )
 
 

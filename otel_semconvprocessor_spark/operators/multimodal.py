@@ -47,10 +47,10 @@ FEATURE_SCHEMA = (
 )
 
 
-def synthetic_media(spark: SparkSession, n: int, seed: int = 7) -> DataFrame:
+def synthetic_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic fake media rows (bytes = hash-derived, NOT decodable),
     Spark-native — the plumbing/prune-plan fixture."""
-    df = spark.range(n).withColumn("__h", F.xxhash64(F.col("id"), F.lit(seed)))
+    df = spark.range(n).withColumn("__h", F.xxhash64(F.col("id"), F.lit(7)))
     kind = (
         F.when(F.pmod("__h", F.lit(3)) == 0, "image")
         .when(F.pmod("__h", F.lit(3)) == 1, "audio")
@@ -84,18 +84,18 @@ def _wav_params(i: int) -> tuple[int, int, int]:
     return 400 + (i % 50) * 40, 1 + i % 2, (i % 1000) * 16  # frames, channels, amp
 
 
-def media_from_ids(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL decodable media blobs derived deterministically from an id
-    column: even ids encode a PNG (constant fill), odd ids a PCM-16 WAV
-    (constant amplitude) — both via the pure-stdlib codecs, generated
-    executor-side in Arrow batches (no driver loop, no rand())."""
+def media_from_ids(df: DataFrame) -> DataFrame:
+    """REAL decodable media blobs derived deterministically from the
+    ``doc_id`` column: even ids encode a PNG (constant fill), odd ids a
+    PCM-16 WAV (constant amplitude) — both via the pure-stdlib codecs,
+    generated executor-side in Arrow batches (no driver loop, no rand())."""
 
     def gen(batches):
         import pandas as pd
 
         for pdf in batches:
             ids, kinds, blobs = [], [], []
-            for i in pdf[id_col]:
+            for i in pdf["doc_id"]:
                 i = int(i)
                 if i % 2 == 0:
                     w, h, fill = _png_params(i)
@@ -107,11 +107,9 @@ def media_from_ids(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     kinds.append("audio")
                 ids.append(i)
                 blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "kind": kinds, "bytes": blobs})
+            yield pd.DataFrame({"doc_id": ids, "kind": kinds, "bytes": blobs})
 
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} long, kind string, bytes binary"
-    )
+    return df.select("doc_id").mapInPandas(gen, schema="doc_id long, kind string, bytes binary")
 
 
 def decode_and_featurize(
@@ -119,8 +117,6 @@ def decode_and_featurize(
     *,
     fake: bool = True,
     feature_dim: int = 8,
-    resize_to: tuple[int, int] = (224, 224),
-    frames_per_video: int = 4,
     id_col: str = "media_id",
 ) -> DataFrame:
     """Decode -> feature-extract -> resize / frame-sample, as ONE
@@ -138,9 +134,9 @@ def decode_and_featurize(
     The closure is self-contained (pickled by value — no package import needed
     on executors).  Output rows 1:1 with input (frame sampling yields a count
     + pooled feature, not exploded frames — explode at this layer would
-    multiply blob traffic).
+    multiply blob traffic).  Every row reports the 224x224 resize target and
+    samples 4 frames per video.
     """
-    rw, rh = resize_to
 
     def featurize(batches):
         import hashlib
@@ -206,15 +202,15 @@ def decode_and_featurize(
                         "(PNG/WAV supported; JPEG/MP4 need external codec "
                         "libraries not present in this container)"
                     )
-                frames.append(frames_per_video if kind == "video" else 1)
+                frames.append(4 if kind == "video" else 1)
             yield pd.DataFrame(
                 {
                     "media_id": pdf[id_col].astype(str),
                     "kind": pdf["kind"],
                     "n_bytes": nbytes,
                     "feature": [list(map(float, f)) for f in feats],
-                    "resized_width": rw,
-                    "resized_height": rh,
+                    "resized_width": 224,
+                    "resized_height": 224,
                     "n_frames_sampled": frames,
                     "decoded_width": pd.array(dws, dtype="Int32"),
                     "decoded_height": pd.array(dhs, dtype="Int32"),

@@ -52,31 +52,43 @@ instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import MODE_ENFORCE, Config
-from ..functions.ottl import compile_ottl, value_expr_never_null
+from ..config import MODE_ENFORCE, Config, OTTLRule
+from ..functions.ottl import OTTLSyntaxError, compile_ottl, value_expr_never_null
 from ..functions.scalars import attr
 from ..tuning import ensure_jit_codegen
 
 __all__ = ["apply_rules"]
 
 
-def apply_rules(
-    df: DataFrame,
-    cfg: Config,
-    attrs_col: str = "attrs",
-    name_col: str = "name",
-    kind_col: str = "kind",
-) -> DataFrame:
+def compile_rule_field(
+    rule: OTTLRule, field: str, attrs: Column | str, name: Column | str, resource: Column | str | None
+) -> Column:
+    """Compile one OTTL field of ``rule`` (``condition``, ``operation_name``
+    or ``operation_type``) over the span columns ``attrs`` and ``name`` and
+    the ``resource`` map column that ``resource.attributes`` reads (None
+    when the frame has none).  A rejection raises ``OTTLSyntaxError`` naming
+    the rule id and the field.  ``apply_rules`` and
+    ``config_yaml.conformance_report`` both compile through here, so what
+    loads is what runs."""
+    try:
+        return compile_ottl(getattr(rule, field), attrs, name, resource)
+    except OTTLSyntaxError as exc:
+        raise OTTLSyntaxError(f"rule {rule.id!r} field {field}: {exc}") from None
+
+
+def apply_rules(df: DataFrame, cfg: Config) -> DataFrame:
     """Apply the processor to a span-shaped DataFrame (see module docstring).
 
     A rule set with ``schema_url``-versioned rules needs a ``schema_url``
     column on ``df``; without one it raises ``ValueError`` — silently
     degrading to wildcard-only matching would be invisible, since the output
     schema is unchanged.  Spans whose schema_url is NULL or has no versioned
-    rule see only the version-wildcard rules."""
+    rule see only the version-wildcard rules.  ``resource.attributes`` reads
+    the ``resource`` map column; a rule that uses it on a frame without one
+    raises ``OTTLSyntaxError`` here, before any job runs."""
     ensure_jit_codegen(df.sparkSession)
     if not cfg.enabled or not cfg.span_processing.enabled:
         # processor.go:122-124 / 146-148: disabled => identity, but keep the
@@ -91,14 +103,16 @@ def apply_rules(
         )
 
     sp = cfg.span_processing
-    attrs = F.col(attrs_col)
-    name = F.col(name_col)
-    kind = F.col(kind_col)
+    columns = df.columns
+    attrs = F.col("attrs")
+    name = F.col("name")
+    kind = F.col("kind")
+    resource = F.col("resource") if "resource" in columns else None
 
-    if any(r.schema_url for r in sp.rules) and "schema_url" not in df.columns:
+    if any(r.schema_url for r in sp.rules) and "schema_url" not in columns:
         raise ValueError(
             "rule set has schema_url-versioned rules but column "
-            f"'schema_url' is not in the input ({df.columns})"
+            f"'schema_url' is not in the input ({columns})"
         )
 
     # Compile every validated rule into one (predicate, hit) branch, driver-side
@@ -107,13 +121,13 @@ def apply_rules(
     # Config.validate() (config.go:156-158).
     branches = []
     for rule in sp.rules:
-        pred = compile_ottl(rule.condition, attrs, name)
+        pred = compile_rule_field(rule, "condition", attrs, name, resource)
         if rule.span_kind:
             # processor.go:215-228 — empty list means all kinds.
             pred = kind.isin(list(rule.span_kind)) & pred
-        op_name = compile_ottl(rule.operation_name, attrs, name).cast("string")
+        op_name = compile_rule_field(rule, "operation_name", attrs, name, resource).cast("string")
         op_type = (
-            compile_ottl(rule.operation_type, attrs, name).cast("string")
+            compile_rule_field(rule, "operation_type", attrs, name, resource).cast("string")
             if rule.operation_type
             else F.lit(None).cast("string")
         )
@@ -149,22 +163,17 @@ def apply_rules(
     # short-circuits the whole cascade.
     guarded = F.when(attr(attrs, sp.operation_name_attribute).isNull(), cascade)
 
-    return finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
+    return finish_match(df.withColumn("__match", guarded), cfg)
 
 
-def finish_match(
-    df: DataFrame,
-    cfg: Config,
-    attrs_col: str = "attrs",
-    name_col: str = "name",
-) -> DataFrame:
+def finish_match(df: DataFrame, cfg: Config) -> DataFrame:
     """Post-match stage: given a ``__match`` struct column
     (``struct<rule_id,op_name,op_type>``, NULL = skip-guarded or no match),
     produce the output contract — enforce/enrich naming, name.original
     preservation, and the attribute-map update."""
     sp = cfg.span_processing
-    attrs = F.col(attrs_col)
-    name = F.col(name_col)
+    attrs = F.col("attrs")
+    name = F.col("name")
     m = F.col("__match")
     matched = m.isNotNull()
     op_name = m["op_name"]
@@ -243,9 +252,9 @@ def finish_match(
                 "rule_id": m["rule_id"],
                 "operation_name": F.when(matched, op_name),
                 "operation_type": F.when(matched, op_type),
-                name_col: new_name,
+                "name": new_name,
                 "name_original": name_original,
-                attrs_col: new_attrs,
+                "attrs": new_attrs,
             }
         ).drop("__match")
     )

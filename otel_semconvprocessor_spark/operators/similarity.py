@@ -53,7 +53,7 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFrame:
+def _rank_topk(scored: DataFrame, k: int, query_id: str) -> DataFrame:
     """Two-phase top-k over a scored candidate frame.
 
     Phase 1 (narrow, no shuffle): a per-partition partial top-k — each Arrow
@@ -78,21 +78,20 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFra
     task (OOM at 10^9+), two-phase never exceeds the Arrow batch + k*P merge.
     """
     fields = {f.name: f.dataType.simpleString() for f in scored.schema.fields}
-    out_schema = f"{query_id} {fields[query_id]}, {id_col} {fields[id_col]}, score double"
-    qcol, icol, kk = query_id, id_col, k  # plain values only in the closure
+    out_schema = f"{query_id} {fields[query_id]}, vec_id {fields['vec_id']}, score double"
 
     def partial_topk(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             yield (
-                pdf.sort_values(["score", icol], ascending=[False, True], kind="mergesort")
-                .groupby(qcol, sort=False)
-                .head(kk)
+                pdf.sort_values(["score", "vec_id"], ascending=[False, True], kind="mergesort")
+                .groupby(query_id, sort=False)
+                .head(k)
             )
 
     survivors = scored.select(
-        query_id, id_col, F.col("score").cast("double").alias("score")
+        query_id, "vec_id", F.col("score").cast("double").alias("score")
     ).mapInPandas(
         partial_topk, schema=out_schema
     )
@@ -100,7 +99,7 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFra
         F.slice(
             F.array_sort(
                 F.collect_list(
-                    F.struct((-F.col("score")).alias("ns"), F.col(id_col).alias("i"))
+                    F.struct((-F.col("score")).alias("ns"), F.col("vec_id").alias("i"))
                 )
             ),
             1,
@@ -111,7 +110,7 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFra
         F.col(query_id), F.posexplode("__top").alias("__r", "__t")
     ).select(
         query_id,
-        F.col("__t.i").alias(id_col),
+        F.col("__t.i").alias("vec_id"),
         F.round(-F.col("__t.ns"), 6).alias("score"),
         (F.col("__r") + 1).cast("int").alias("rank"),
     )
@@ -122,29 +121,27 @@ def topk_brute_force(
     queries: DataFrame,
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id: str = "query_id",
 ) -> DataFrame:
     """Exact top-k: corpus x broadcast(queries); returns
     (query_id, vec_id, score, rank) with deterministic id tie-breaks."""
     ensure_jit_codegen(corpus.sparkSession)
     q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+        F.col("vec_id").alias(query_id),
+        F.col("embedding").alias("__qvec"),
+        l2_norm(F.col("embedding")).alias("__qn"),
     )
     # norms precomputed ONCE per vector (corpus side in the scan projection,
     # query side in the broadcast): an inline cosine would recompute the
     # corpus norm per query and the query norm per corpus row — 3 dots per
     # pair instead of 1 (measured 5.2x end-to-end at 100k x 10: 31.0s -> 5.9s)
-    c = corpus.select(id_col, vec_col, l2_norm(F.col(vec_col)).alias("__cn"))
+    c = corpus.select("vec_id", "embedding", l2_norm(F.col("embedding")).alias("__cn"))
     denom = F.col("__cn") * F.col("__qn")
-    score = F.when(denom > 0, dot(F.col(vec_col), F.col("__qvec")) / denom).otherwise(
+    score = F.when(denom > 0, dot(F.col("embedding"), F.col("__qvec")) / denom).otherwise(
         F.lit(0.0)
     )
-    scored = c.crossJoin(F.broadcast(q)).select(query_id, id_col, score.alias("score"))
-    return _rank_topk(scored, k, query_id, id_col)
+    scored = c.crossJoin(F.broadcast(q)).select(query_id, "vec_id", score.alias("score"))
+    return _rank_topk(scored, k, query_id)
 
 
 # ---------------------------------------------------------------------------
@@ -152,20 +149,18 @@ def topk_brute_force(
 # ---------------------------------------------------------------------------
 
 
-def seed_centroids(
-    corpus: DataFrame, n_cells: int, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[list[float]]:
+def seed_centroids(corpus: DataFrame, n_cells: int) -> list[list[float]]:
     """Deterministic coarse-quantizer seeds: the ``n_cells`` corpus vectors
     ranked first by md5 of their id — a data-dependent but seed-free pick
     that any engine can reproduce with ORDER BY md5(id) LIMIT k (which is
     what the DuckDB oracle does).  Cell order = the md5 rank."""
     rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")))
         .limit(n_cells)
         .collect()
     )
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def _cell_dots(vec: Column, centroids: list[list[float]]) -> Column:
@@ -193,9 +188,6 @@ def topk_ivf(
     *,
     n_cells: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed into ``n_cells``
     coarse-quantizer cells (argmax centroid cosine, a pure expression over
@@ -206,14 +198,14 @@ def topk_ivf(
     Per-query cost ~ |corpus| x nprobe / n_cells.  The cells are
     seed_centroids, which the DuckDB oracle reproduces exactly."""
     ensure_jit_codegen(corpus.sparkSession)
-    centroids = seed_centroids(corpus, n_cells, id_col=id_col, vec_col=vec_col)
+    centroids = seed_centroids(corpus, n_cells)
     c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-        assign_cell(F.col(vec_col), centroids).alias("__cell"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        l2_norm(F.col("embedding")).alias("__cn"),
+        assign_cell(F.col("embedding"), centroids).alias("__cell"),
     )
-    qdots = _cell_dots(F.col(vec_col), centroids)
+    qdots = _cell_dots(F.col("embedding"), centroids)
     # nprobe nearest cells: rank (dot desc, cell asc) via array sort on
     # (-dot, idx) structs, then take the first nprobe indices
     ranked = F.array_sort(
@@ -225,28 +217,26 @@ def topk_ivf(
     )
     probes = F.slice(F.transform(ranked, lambda s: s["idx"]), 1, nprobe)
     q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        l2_norm(F.col("embedding")).alias("__qn"),
         F.explode(probes).alias("__cell"),
     )
     denom = F.col("__cn") * F.col("__qn")
     cand = c.join(F.broadcast(q), on="__cell").select(
-        query_id,
-        id_col,
-        F.when(denom > 0, dot(F.col(vec_col), F.col("__qvec")) / denom)
+        "query_id",
+        "vec_id",
+        F.when(denom > 0, dot(F.col("embedding"), F.col("__qvec")) / denom)
         .otherwise(F.lit(0.0))
         .alias("score"),
     )
-    return _rank_topk(cand, k, query_id, id_col)
+    return _rank_topk(cand, k, "query_id")
 
 
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int = 8,
     tables: int = 4,
     dim: int | None = None,
@@ -268,16 +258,16 @@ def embedding_near_dup_pairs(
 
     ensure_jit_codegen(df.sparkSession)
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = len(df.select("embedding").first()[0])
     vecs = df.select(
-        id_col, vec_col, l2_norm(F.col(vec_col)).alias("__n")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("__n")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     sig_tagged = [
-        F.concat(F.lit(f"{t}:"), F.expr(_sig_sql(vec_col, hyperplanes(dim, bits, seed=f"lsh-{t}"))))
+        F.concat(F.lit(f"{t}:"), F.expr(_sig_sql("embedding", hyperplanes(dim, bits, seed=f"lsh-{t}"))))
         for t in range(tables)
     ]
     banded_cached = vecs.select(
-        id_col, F.explode(F.array(*sig_tagged)).alias("__sig")
+        "vec_id", F.explode(F.array(*sig_tagged)).alias("__sig")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # degenerate-bucket guard (minhash_lsh_pairs parity): a signature shared
     # by >max_bucket vectors (e.g. mass-identical or zero vectors) makes the
@@ -293,21 +283,21 @@ def embedding_near_dup_pairs(
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(b, on="__sig")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
     cand = cand.join(
         vecs.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"), F.col("__n").alias("__na")
+            F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"), F.col("__n").alias("__na")
         ),
         on="id_a",
     ).join(
         vecs.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"), F.col("__n").alias("__nb")
+            F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"), F.col("__n").alias("__nb")
         ),
         on="id_b",
     )
@@ -380,9 +370,6 @@ def topk_lsh(
     *,
     bits: int = 8,
     tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
     multiprobe: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
@@ -401,7 +388,7 @@ def topk_lsh(
     # array<float> schemas don't carry — pass ``dim`` to avoid the
     # driver-side probe read
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     # one F.expr per signature instead of per-element Column calls — see
     # _sig_sql (kills ~3s of py4j chatter per topk_lsh call).  Signatures
     # are STAGED as projected columns on both sides; the explode arrays and
@@ -409,7 +396,7 @@ def topk_lsh(
     # re-embedding each table's full dot-product tree (the flip probes
     # previously carried ~4 copies of it per table through analysis).
     sig_exprs = {
-        f"__s{t}": F.expr(_sig_sql(vec_col, hyperplanes(dim, bits, seed=f"lsh-{t}")))
+        f"__s{t}": F.expr(_sig_sql("embedding", hyperplanes(dim, bits, seed=f"lsh-{t}")))
         for t in range(tables)
     }
     sig_tagged = [F.concat(F.lit(f"{t}:"), F.col(f"__s{t}")) for t in range(tables)]
@@ -428,42 +415,42 @@ def topk_lsh(
         probe_tagged.extend(F.concat(F.lit(f"{t}:"), p) for p in probes)
 
     c = corpus.select(
-        id_col,
-        vec_col,
-        l2_norm(F.col(vec_col)).alias("__cn"),  # norm once per vector, pre-explode
+        "vec_id",
+        "embedding",
+        l2_norm(F.col("embedding")).alias("__cn"),  # norm once per vector, pre-explode
         *[e.alias(n) for n, e in sig_exprs.items()],
     ).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "__cn",
         F.explode(F.array(*sig_tagged)).alias("__sig"),
     )
     q = (
         queries.select(
-            F.col(id_col).alias(query_id),
-            F.col(vec_col).alias("__qvec"),
-            l2_norm(F.col(vec_col)).alias("__qn"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("__qvec"),
+            l2_norm(F.col("embedding")).alias("__qn"),
             *[e.alias(n) for n, e in sig_exprs.items()],
         )
         .select(
-            query_id,
+            "query_id",
             "__qvec",
             "__qn",
             F.explode(F.array(*probe_tagged)).alias("__sig"),
         )
-        .dropDuplicates([query_id, "__sig"])
+        .dropDuplicates(["query_id", "__sig"])
     )
     denom = F.col("__cn") * F.col("__qn")
     cand = (
         c.join(F.broadcast(q), on="__sig")
-        .select(query_id, id_col, "__qvec", "__qn", "__cn", F.col(vec_col).alias("__cvec"))
-        .dropDuplicates([query_id, id_col])
+        .select("query_id", "vec_id", "__qvec", "__qn", "__cn", F.col("embedding").alias("__cvec"))
+        .dropDuplicates(["query_id", "vec_id"])
         .select(
-            query_id,
-            id_col,
+            "query_id",
+            "vec_id",
             F.when(denom > 0, dot(F.col("__cvec"), F.col("__qvec")) / denom)
             .otherwise(F.lit(0.0))
             .alias("score"),
         )
     )
-    return _rank_topk(cand, k, query_id, id_col)
+    return _rank_topk(cand, k, "query_id")

@@ -100,14 +100,14 @@ def read_otlp_traces(spark: SparkSession, path: str) -> DataFrame:
     return spans_from_otlp_df(raw)
 
 
-def write_synthetic_otlp_fixture(path: str, n_lines: int = 50, seed: int = 11) -> int:
+def write_synthetic_otlp_fixture(path: str, n_lines: int = 50) -> int:
     """Write a small deterministic OTLP/JSON fixture file shaped like the
     reference's benchmark input (one export request per line); returns the
     total span count.  Synthetic — no reference data is copied."""
     import hashlib
 
     def h(*parts: object) -> int:
-        return int(hashlib.md5(f"{seed}:{parts}".encode()).hexdigest()[:8], 16)
+        return int(hashlib.md5(f"11:{parts}".encode()).hexdigest()[:8], 16)
 
     methods = ["GET", "POST", "PUT", "DELETE"]
     routes = ["/api/users/{userId}", "/api/cart", None]

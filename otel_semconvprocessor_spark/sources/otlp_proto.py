@@ -585,12 +585,12 @@ BINARY_FILE_SCHEMA = (
 )
 
 
-def read_otlp_proto_stream(spark, path: str, *, on_error: str = "skip") -> DataFrame:
+def read_otlp_proto_stream(spark, path: str) -> DataFrame:
     """Structured-Streaming twin of ``read_otlp_proto_files``: new request
     files appearing under ``path`` stream through the same decode operator
-    (mapInPandas is streaming-safe: stateless per-batch).  Default
-    ``on_error='skip'`` — a continuously-ingesting receiver drops malformed
-    requests rather than wedging the stream."""
+    (mapInPandas is streaming-safe: stateless per-batch).  Malformed requests
+    are skipped (``on_error='skip'``) — a continuously-ingesting receiver
+    drops them rather than wedging the stream."""
     from pyspark.sql import functions as F
 
     raw = (
@@ -599,7 +599,7 @@ def read_otlp_proto_stream(spark, path: str, *, on_error: str = "skip") -> DataF
         .load(path)
         .select(F.col("content").alias("payload"))
     )
-    return spans_from_otlp_proto(raw, "payload", on_error=on_error)
+    return spans_from_otlp_proto(raw, "payload", on_error="skip")
 
 
 def spans_from_otlp_proto(

@@ -40,35 +40,33 @@ def start_streaming_pipeline(
     input_dir: str,
     out_dir: str,
     cfg: Config | None = None,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """File-source -> partitioned file-sink with checkpointed exactly-once;
-    ``available_now`` drains the current backlog then stops (batch-like runs,
-    incremental across restarts).  The transform chain is the batch one
-    (plans/pipeline.build_normalized): every stage is stateless or
-    stream-static, so one definition serves both, and the sink rows are the
-    batch ones (``route.routed_rows``; tested column-for-column equal in
-    tests/test_streaming.py), written with the batch files' ``SINK_CODEC``."""
+    """File-source -> partitioned file-sink with checkpointed exactly-once.
+    The ``availableNow`` trigger drains the current backlog then stops
+    (batch-like runs, incremental across restarts).  The transform chain is
+    the batch one (plans/pipeline.build_normalized): every stage is
+    stateless or stream-static, so one definition serves both, and the sink
+    rows are the batch ones (``route.routed_rows``; tested
+    column-for-column equal in tests/test_streaming.py), written with the
+    batch files' ``SINK_CODEC``."""
     normalized = build_normalized(spark, stream_pages(spark, input_dir), cfg)
-    writer = (
+    return (
         routed_rows(slim_for_sink(normalized)).writeStream.format("parquet")
         .option("path", f"{out_dir}/sinks")
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
         .option("compression", SINK_CODEC)
         .partitionBy(*SINK_PARTITIONS)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def windowed_rule_counts(normalized: DataFrame, watermark: str = "1 day") -> DataFrame:
+def windowed_rule_counts(normalized: DataFrame) -> DataFrame:
     """Watermarked event-time aggregation: rule-hit counts per day window,
-    tolerating ``watermark`` of lateness before state cleanup."""
+    tolerating 1 day of lateness before state cleanup."""
     return (
-        normalized.withWatermark("warc_ts", watermark)
+        normalized.withWatermark("warc_ts", "1 day")
         .groupBy(F.window("warc_ts", "1 day").alias("w"), F.col("rule_id"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("day"), "rule_id", "n")

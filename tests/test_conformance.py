@@ -102,6 +102,46 @@ def test_realistic_port_runs_through_the_engine(spark):
     assert out[4] == ("fallback", "plain_span")
 
 
+_RESOURCE_RULE_YAML = """
+enabled: true
+span_processing:
+  enabled: true
+  rules:
+    - id: by_service
+      priority: 1
+      condition: 'resource.attributes["service.name"] != nil'
+      operation_name: 'Concat([resource.attributes["service.name"], name], "/")'
+"""
+
+
+def test_resource_attributes_rule_runs_on_a_span_frame(spark):
+    """What the loader accepts, apply_rules runs: resource.attributes reads
+    the span frame's ``resource`` map column."""
+    from otel_semconvprocessor_spark.operators.rules import apply_rules
+
+    cfg = load_collector_yaml(_RESOURCE_RULE_YAML)
+    df = spark.createDataFrame(
+        [("GET", "server", {}, {"service.name": "cart"})],
+        "name string, kind string, attrs map<string,string>, resource map<string,string>",
+    )
+    row = apply_rules(df, cfg).first()
+    assert (row["rule_id"], row["operation_name"]) == ("by_service", "cart/GET")
+
+
+def test_resource_attributes_rule_without_resource_column_names_the_rule(spark):
+    """On a pages-shaped frame (no ``resource`` column) the same rule is
+    rejected when apply_rules is called, naming the rule and field."""
+    from otel_semconvprocessor_spark.operators.rules import apply_rules
+
+    cfg = load_collector_yaml(_RESOURCE_RULE_YAML)
+    df = spark.createDataFrame(
+        [("GET", "server", {}, "")],
+        "name string, kind string, attrs map<string,string>, schema_url string",
+    )
+    with pytest.raises(OTTLSyntaxError, match="by_service.*condition"):
+        apply_rules(df, cfg)
+
+
 # ---- unsupported constructs: clean rejection ------------------------------
 
 
