@@ -727,7 +727,7 @@ def _q_minhash_signatures(spark, sf_dir):
     d = _docs(spark, sf_dir)
     # stage shingles as a projection so the salted hash families don't
     # re-evaluate the shingling inside each lambda (no cross-lambda CSE)
-    staged = d.select("doc_id", word_shingles("text", 3).alias("__sh"))
+    staged = d.select("doc_id", word_shingles("text").alias("__sh"))
     sig = minhash_signature(F.col("__sh"), 4)
     return staged.select(
         "doc_id",
@@ -775,7 +775,7 @@ def _q_lang_id_confusion(spark, sf_dir):
 
 def _q_ngram_near_dups(spark, sf_dir):
     """Training op: all-pairs 3-gram Jaccard near-dups (baseline path)."""
-    d = _docs(spark, sf_dir).select("doc_id", word_shingles("text", 3).alias("sh"))
+    d = _docs(spark, sf_dir).select("doc_id", word_shingles("text").alias("sh"))
     a, b = d.alias("a"), d.alias("b")
     pairs = a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
     return (
@@ -795,7 +795,7 @@ def _q_minhash_lsh_pairs(spark, sf_dir):
     the oracle would otherwise have to replicate bucket statistics; the guard
     itself is covered by pytest)."""
     return minhash_lsh_pairs(
-        _docs(spark, sf_dir), threshold=0.5, num_hashes=16, bands=4, max_bucket=10**9
+        _docs(spark, sf_dir), threshold=0.5, max_bucket=10**9
     )
 
 
@@ -811,7 +811,7 @@ def _q_topk_lsh(spark, sf_dir):
     Deterministic md5 hyperplanes are injected into the oracle as literals."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    return topk_lsh(emb, q, k=10, bits=8, tables=4, multiprobe=1, dim=64)
+    return topk_lsh(emb, q, k=10, bits=8, tables=4, dim=64)
 
 
 def _q_topk_ivf(spark, sf_dir):
@@ -821,7 +821,7 @@ def _q_topk_ivf(spark, sf_dir):
     SQL (cells, nprobe ranking, candidate scoring)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    return topk_ivf(emb, q, k=10, n_cells=16, nprobe=4)
+    return topk_ivf(emb, q, nprobe=4)
 
 
 def _q_embedding_near_dups(spark, sf_dir):
@@ -849,7 +849,7 @@ def _q_embedding_near_dups(spark, sf_dir):
         .select((vid + 100000).alias("vec_id"), F.col("__pert").alias("embedding"))
     )
     corpus = base.unionByName(pert)
-    return embedding_near_dup_pairs(corpus, threshold=0.98, bits=8, tables=4, dim=64)
+    return embedding_near_dup_pairs(corpus, threshold=0.98, dim=64)
 
 
 def _q_embedding_topk(spark, sf_dir):
@@ -859,7 +859,7 @@ def _q_embedding_topk(spark, sf_dir):
     from otel_semconvprocessor_spark.operators.similarity import topk_brute_force
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = topk_brute_force(emb, emb.filter(F.col("vec_id") < 5), k=10, query_id="query_id")
+    out = topk_brute_force(emb, emb.filter(F.col("vec_id") < 5), k=10)
     # compare at the operator's NATIVE round-6 — both engines fold the dot
     # product in identical element order (bit-identical doubles), and a
     # re-round to 4dp would double-round (0.1234495 -> .12345 -> .1235 vs a
@@ -1127,7 +1127,7 @@ def _q_events_sliding_window(spark, sf_dir):
     from otel_semconvprocessor_spark.operators.metrics import sliding_window_counts
 
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sliding_window_counts(e, "ts")
+    return sliding_window_counts(e)
 
 
 def _q_debug_sample_rows(spark, sf_dir):
@@ -1138,7 +1138,7 @@ def _q_debug_sample_rows(spark, sf_dir):
 
     d = _docs(spark, sf_dir).select("doc_id", "lang")
     return debug_sample(
-        d, sampling_initial=10, sampling_thereafter=20, key="doc_id",
+        d, sampling_thereafter=20, key="doc_id",
         hash_fn="md5", ordered_initial=True,
     )
 
@@ -1208,7 +1208,7 @@ def _q_salted_bucket_distribution(spark, sf_dir):
 
     d = _docs(spark, sf_dir)
     rep = salted_repartition(
-        d, "lang", 8, salt_buckets=16, salt_source="doc_id", hash_fn="md5"
+        d, "lang", 8, salt_source="doc_id", hash_fn="md5"
     )
     return (
         rep.select(salt_expr(F.col("doc_id"), 16, "md5").alias("salt"))

@@ -101,24 +101,21 @@ def jaccard(a: Column, b: Column) -> Column:
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
-    num_hashes: int = 16,
-    bands: int = 4,
     threshold: float = 0.7,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup pairs with exact-Jaccard verification.
 
-    shingle -> minhash(num_hashes) -> band (rows = num_hashes/bands) ->
-    bucket-join -> verify.  Returns (id_a, id_b, jaccard >= threshold).
+    shingle -> minhash(16 hashes) -> 4 bands of 4 rows -> bucket-join ->
+    verify.  Returns (id_a, id_b, jaccard >= threshold).
 
-    Default 16 hashes / 4 bands = 4 rows per band: collision probability
+    4 rows per band: collision probability
     1-(1-s^4)^4 is ~0.03 at s=0.3 but ~0.99 at s=0.9 — selective enough that
     vocabulary-dense corpora (every doc sharing common words) don't explode
     the candidate pair set; 2-row bands measured 10x more candidates.
     """
-    assert num_hashes % bands == 0
     ensure_jit_codegen(df.sparkSession)
-    rows_per_band = num_hashes // bands
+    bands, rows_per_band = 4, 4
     # stage words -> shingles -> signature as materialized projections:
     # embedding word_shingles(text) directly inside the 16 salted array_min
     # lambdas would re-evaluate split()/shingling per lambda per element
@@ -131,7 +128,7 @@ def minhash_lsh_pairs(
         .select(F.col("doc_id"), word_shingles("text").alias("__sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sig = sh.select("doc_id", minhash_signature(F.col("__sh"), num_hashes).alias("__sig"))
+    sig = sh.select("doc_id", minhash_signature(F.col("__sh"), 16).alias("__sig"))
     # banded frame is SLIM — (id, band, 32-char band key) only.  Carrying the
     # full shingle arrays here (the round-2 shape) duplicated the shingle
     # payload x bands through the persist AND both shuffle sides of the

@@ -1,6 +1,6 @@
 """Exporter-side parity pieces (SURVEY.md §2.1).
 
-  S2  debug exporter     sampled peek (sampling_initial=10 then 1/100,
+  S2  debug exporter     sampled peek (10 rows then 1/100,
                          config.yaml:199-202)
   S3  file exporter      rotation == bounded file size: maxRecordsPerFile
                          (config.yaml:204-207, 10MB rotation)
@@ -43,25 +43,25 @@ def sample_hash(key, modulus: int, hash_fn: str = "xxhash64"):
     return F.pmod(F.xxhash64(col), F.lit(modulus))
 
 
-def debug_sample(df: DataFrame, sampling_initial: int = 10, sampling_thereafter: int = 100,
-                 key: str | None = None, *, hash_fn: str = "xxhash64",
-                 ordered_initial: bool = False) -> DataFrame:
-    """Debug-exporter sampling: ``sampling_initial`` rows up front, then ~one
-    of every ``sampling_thereafter`` (config.yaml:199-202).
+def debug_sample(df: DataFrame, sampling_thereafter: int = 100, key: str | None = None, *,
+                 hash_fn: str = "xxhash64", ordered_initial: bool = False) -> DataFrame:
+    """Debug-exporter sampling: 10 rows up front (the reference's
+    ``sampling_initial``), then ~one of every ``sampling_thereafter``
+    (config.yaml:199-202).
 
     The reference counts rows in arrival order; a distributed engine has no
     arrival order, so 'thereafter' is a deterministic 1/N hash sample on
     ``key`` (default: first column) — same density, no global sort, no
     shuffle beyond the final dedup.  ``ordered_initial`` makes the 'initial'
-    rows deterministic too (the ``sampling_initial`` smallest keys — a
+    rows deterministic too (the 10 smallest keys — a
     TakeOrdered of k rows, not a global sort), which is what the oracle
     compares; the default keeps the reference's cheaper arbitrary-k peek."""
     key = key or df.columns[0]
     sampled = df.filter(sample_hash(key, sampling_thereafter, hash_fn) == 0)
     initial = (
-        df.orderBy(F.col(key).asc()).limit(sampling_initial)
+        df.orderBy(F.col(key).asc()).limit(10)
         if ordered_initial
-        else df.limit(sampling_initial)
+        else df.limit(10)
     )
     return initial.unionByName(sampled).dropDuplicates([key])
 

@@ -164,15 +164,14 @@ def decode_png(data: bytes) -> dict:
     }
 
 
-def encode_wav(
-    n_frames: int, sample_rate: int = 8000, channels: int = 1, amplitude: int = 1000
-) -> bytes:
-    """PCM-16 WAV with every sample at a constant amplitude (deterministic)."""
+def encode_wav(n_frames: int, channels: int = 1, amplitude: int = 1000) -> bytes:
+    """8 kHz PCM-16 WAV with every sample at a constant amplitude
+    (deterministic)."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(channels)
         w.setsampwidth(2)
-        w.setframerate(sample_rate)
+        w.setframerate(8000)
         w.writeframes(struct.pack("<h", amplitude) * (n_frames * channels))
     return buf.getvalue()
 

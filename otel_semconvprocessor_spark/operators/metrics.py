@@ -34,10 +34,10 @@ __all__ = [
 ]
 
 
-def sliding_window_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def sliding_window_counts(df: DataFrame) -> DataFrame:
     """Sliding event-time windows (the batch form of the streaming windowed
-    counters, SURVEY.md §2.4/S5): 7-day windows sliding by 1 day, count +
-    ``value`` sum per (window start, ``event_type``).
+    counters, SURVEY.md §2.4/S5): 7-day windows of ``ts`` sliding by 1 day,
+    count + ``value`` sum per (window start, ``event_type``).
 
     Uses the built-in ``window()`` generator — each row lands in 7
     overlapping windows, all expression work before one groupBy shuffle;
@@ -45,7 +45,7 @@ def sliding_window_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     (DuckDB oracle re-derives membership as the 7 calendar days ending at
     date(ts))."""
     return (
-        df.groupBy(F.window(ts_col, "7 days", "1 day").alias("__w"), "event_type")
+        df.groupBy(F.window("ts", "7 days", "1 day").alias("__w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 3).alias("total_value"))
         .select(F.to_date("__w.start").alias("win_start"), "event_type", "n", "total_value")
     )

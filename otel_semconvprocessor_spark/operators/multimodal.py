@@ -103,7 +103,7 @@ def media_from_ids(df: DataFrame) -> DataFrame:
                     kinds.append("image")
                 else:
                     frames, ch, amp = _wav_params(i)
-                    blob = media_codecs.encode_wav(frames, 8000, ch, amp)
+                    blob = media_codecs.encode_wav(frames, ch, amp)
                     kinds.append("audio")
                 ids.append(i)
                 blobs.append(blob)
@@ -116,7 +116,6 @@ def decode_and_featurize(
     df: DataFrame,
     *,
     fake: bool = True,
-    feature_dim: int = 8,
     id_col: str = "media_id",
 ) -> DataFrame:
     """Decode -> feature-extract -> resize / frame-sample, as ONE
@@ -134,8 +133,8 @@ def decode_and_featurize(
     The closure is self-contained (pickled by value — no package import needed
     on executors).  Output rows 1:1 with input (frame sampling yields a count
     + pooled feature, not exploded frames — explode at this layer would
-    multiply blob traffic).  Every row reports the 224x224 resize target and
-    samples 4 frames per video.
+    multiply blob traffic).  Every row carries 8 features, reports the
+    224x224 resize target and samples 4 frames per video.
     """
 
     def featurize(batches):
@@ -145,8 +144,8 @@ def decode_and_featurize(
         import pandas as pd
 
         def pad(vals):
-            out = list(vals)[:feature_dim]
-            return [float(v) for v in out] + [0.0] * (feature_dim - len(out))
+            out = list(vals)[:8]
+            return [float(v) for v in out] + [0.0] * (8 - len(out))
 
         for pdf in batches:
             feats, nbytes, frames = [], [], []
@@ -156,7 +155,7 @@ def decode_and_featurize(
                 nbytes.append(len(data))
                 if fake:
                     digest = hashlib.sha256(data).digest()
-                    vec = np.frombuffer(digest[: feature_dim * 4], dtype=np.uint32)
+                    vec = np.frombuffer(digest[:32], dtype=np.uint32)
                     feats.append((vec.astype(np.float64) / 2**32).astype(np.float32))
                     dws.append(None)
                     dhs.append(None)

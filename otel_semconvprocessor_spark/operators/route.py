@@ -35,7 +35,7 @@ splits it over several writers — the split follows the sizes measured at run
 time, not a static salt count.  ``salted_repartition`` stays as the explicit
 deterministic primitive for keyed repartitions: a salt derived from
 xxhash64(url), reproducible across runs unlike rand(), bounding the largest
-task at ~1/salt_buckets of the hot key (SURVEY.md §2.5).
+task at ~1/16 of the hot key (SURVEY.md §2.5).
 """
 
 from __future__ import annotations
@@ -93,14 +93,11 @@ def salt_expr(source: Column, salt_buckets: int, hash_fn: str = "xxhash64") -> C
 
 
 def salted_repartition(
-    df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 16,
-    salt_source: str = "url", hash_fn: str = "xxhash64"
+    df: DataFrame, key: str, num_partitions: int, salt_source: str = "url",
+    hash_fn: str = "xxhash64"
 ) -> DataFrame:
-    """Repartition on (key, salt) — spreads a hot key over salt_buckets
-    tasks."""
-    return df.repartition(
-        num_partitions, F.col(key), salt_expr(F.col(salt_source), salt_buckets, hash_fn)
-    )
+    """Repartition on (key, salt) — spreads a hot key over 16 salt buckets."""
+    return df.repartition(num_partitions, F.col(key), salt_expr(F.col(salt_source), 16, hash_fn))
 
 
 def routed_rows(df: DataFrame) -> DataFrame:

@@ -53,8 +53,8 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def _rank_topk(scored: DataFrame, k: int, query_id: str) -> DataFrame:
-    """Two-phase top-k over a scored candidate frame.
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Two-phase top-k over a scored (query_id, vec_id, score) candidate frame.
 
     Phase 1 (narrow, no shuffle): a per-partition partial top-k — each Arrow
     batch keeps only its best ``k`` rows per query (exact order: score desc,
@@ -78,7 +78,7 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str) -> DataFrame:
     task (OOM at 10^9+), two-phase never exceeds the Arrow batch + k*P merge.
     """
     fields = {f.name: f.dataType.simpleString() for f in scored.schema.fields}
-    out_schema = f"{query_id} {fields[query_id]}, vec_id {fields['vec_id']}, score double"
+    out_schema = f"query_id {fields['query_id']}, vec_id {fields['vec_id']}, score double"
 
     def partial_topk(batches):
         for pdf in batches:
@@ -86,16 +86,16 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str) -> DataFrame:
                 continue
             yield (
                 pdf.sort_values(["score", "vec_id"], ascending=[False, True], kind="mergesort")
-                .groupby(query_id, sort=False)
+                .groupby("query_id", sort=False)
                 .head(k)
             )
 
     survivors = scored.select(
-        query_id, "vec_id", F.col("score").cast("double").alias("score")
+        "query_id", "vec_id", F.col("score").cast("double").alias("score")
     ).mapInPandas(
         partial_topk, schema=out_schema
     )
-    merged = survivors.groupBy(query_id).agg(
+    merged = survivors.groupBy("query_id").agg(
         F.slice(
             F.array_sort(
                 F.collect_list(
@@ -107,27 +107,21 @@ def _rank_topk(scored: DataFrame, k: int, query_id: str) -> DataFrame:
         ).alias("__top")
     )
     return merged.select(
-        F.col(query_id), F.posexplode("__top").alias("__r", "__t")
+        F.col("query_id"), F.posexplode("__top").alias("__r", "__t")
     ).select(
-        query_id,
+        "query_id",
         F.col("__t.i").alias("vec_id"),
         F.round(-F.col("__t.ns"), 6).alias("score"),
         (F.col("__r") + 1).cast("int").alias("rank"),
     )
 
 
-def topk_brute_force(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    query_id: str = "query_id",
-) -> DataFrame:
+def topk_brute_force(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k: corpus x broadcast(queries); returns
     (query_id, vec_id, score, rank) with deterministic id tie-breaks."""
     ensure_jit_codegen(corpus.sparkSession)
     q = queries.select(
-        F.col("vec_id").alias(query_id),
+        F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
         l2_norm(F.col("embedding")).alias("__qn"),
     )
@@ -140,8 +134,8 @@ def topk_brute_force(
     score = F.when(denom > 0, dot(F.col("embedding"), F.col("__qvec")) / denom).otherwise(
         F.lit(0.0)
     )
-    scored = c.crossJoin(F.broadcast(q)).select(query_id, "vec_id", score.alias("score"))
-    return _rank_topk(scored, k, query_id)
+    scored = c.crossJoin(F.broadcast(q)).select("query_id", "vec_id", score.alias("score"))
+    return _rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -181,24 +175,17 @@ def assign_cell(vec: Column, centroids: list[list[float]]) -> Column:
     return F.array_position(dots, F.array_max(dots)).cast("int")
 
 
-def topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    n_cells: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF approximate top-k: corpus vectors are bucketed into ``n_cells``
+def topk_ivf(corpus: DataFrame, queries: DataFrame, *, nprobe: int = 4) -> DataFrame:
+    """IVF approximate top-10: corpus vectors are bucketed into 16
     coarse-quantizer cells (argmax centroid cosine, a pure expression over
     broadcast-free centroid literals — the corpus is scanned once, never
     shuffled for the index); each query probes its ``nprobe`` closest cells
     and scores only those cells' members.
 
-    Per-query cost ~ |corpus| x nprobe / n_cells.  The cells are
+    Per-query cost ~ |corpus| x nprobe / 16.  The cells are
     seed_centroids, which the DuckDB oracle reproduces exactly."""
     ensure_jit_codegen(corpus.sparkSession)
-    centroids = seed_centroids(corpus, n_cells)
+    centroids = seed_centroids(corpus, 16)
     c = corpus.select(
         F.col("vec_id"),
         F.col("embedding"),
@@ -230,22 +217,20 @@ def topk_ivf(
         .otherwise(F.lit(0.0))
         .alias("score"),
     )
-    return _rank_topk(cand, k, "query_id")
+    return _rank_topk(cand, 10)
 
 
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
     *,
-    bits: int = 8,
-    tables: int = 4,
     dim: int | None = None,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector twin of the
     MinHash/SimHash dedup family: candidates share a hyperplane-LSH bucket in
-    at least one of ``tables`` signature tables (collision probability
-    (1 - theta/pi)^bits per table, near 1 for near-parallel vectors), then
+    at least one of 4 signature tables of 8 bits (collision probability
+    (1 - theta/pi)^8 per table, near 1 for near-parallel vectors), then
     exact float64 cosine verifies.  The corpus is mapped once (signatures are
     pure expressions); the only shuffle is the bucket self-join — never
     all-pairs.  Deterministic md5 hyperplanes keep it oracle-reproducible.
@@ -263,8 +248,8 @@ def embedding_near_dup_pairs(
         "vec_id", "embedding", l2_norm(F.col("embedding")).alias("__n")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     sig_tagged = [
-        F.concat(F.lit(f"{t}:"), F.expr(_sig_sql("embedding", hyperplanes(dim, bits, seed=f"lsh-{t}"))))
-        for t in range(tables)
+        F.concat(F.lit(f"{t}:"), F.expr(_sig_sql("embedding", hyperplanes(dim, 8, seed=f"lsh-{t}"))))
+        for t in range(4)
     ]
     banded_cached = vecs.select(
         "vec_id", F.explode(F.array(*sig_tagged)).alias("__sig")
@@ -273,7 +258,7 @@ def embedding_near_dup_pairs(
     # by >max_bucket vectors (e.g. mass-identical or zero vectors) makes the
     # self-join quadratic in that bucket — drop such buckets wholesale.
     # Contract: a dropped bucket can lose pairs; a near-dup cluster still
-    # pairs via its other ``tables`` signatures unless all are degenerate.
+    # pairs via its other signatures unless all 4 are degenerate.
     bucket_sizes = banded_cached.groupBy("__sig").agg(F.count(F.lit(1)).alias("__bn"))
     banded = banded_cached.join(
         F.broadcast(bucket_sizes.filter(F.col("__bn") > max_bucket)),
@@ -370,14 +355,13 @@ def topk_lsh(
     *,
     bits: int = 8,
     tables: int = 4,
-    multiprobe: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via the standard L-table hyperplane-LSH construction:
     ``tables`` independent signatures bucket the corpus; each query probes its
-    own bucket (+ ``multiprobe`` 1-bit-flip neighbors) in EVERY table and the
-    candidate sets union.  Tune (bits up = fewer candidates, tables/probes up
-    = higher recall); recall is regression-tested against topk_brute_force.
+    own bucket and the one with its first bit flipped in EVERY table and the
+    candidate sets union.  Tune (bits up = fewer candidates, tables up =
+    higher recall); recall is regression-tested against topk_brute_force.
 
     Scale shape: the corpus is mapped once per run (signatures are pure
     expressions), the tiny probe set broadcasts, and only candidate rows are
@@ -392,7 +376,7 @@ def topk_lsh(
     # one F.expr per signature instead of per-element Column calls — see
     # _sig_sql (kills ~3s of py4j chatter per topk_lsh call).  Signatures
     # are STAGED as projected columns on both sides; the explode arrays and
-    # the multiprobe bit-flips then reference tiny column refs instead of
+    # the bit-flip probes then reference tiny column refs instead of
     # re-embedding each table's full dot-product tree (the flip probes
     # previously carried ~4 copies of it per table through analysis).
     sig_exprs = {
@@ -403,16 +387,11 @@ def topk_lsh(
     probe_tagged = []
     for t in range(tables):
         qsig = F.col(f"__s{t}")
-        probes = [qsig]
-        for i in range(min(multiprobe, bits)):
-            probes.append(
-                F.concat(
-                    F.substring(qsig, 1, i),
-                    F.when(F.substring(qsig, i + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-                    F.substring(qsig, i + 2, bits - i - 1),
-                )
-            )
-        probe_tagged.extend(F.concat(F.lit(f"{t}:"), p) for p in probes)
+        flipped = F.concat(
+            F.when(F.substring(qsig, 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
+            F.substring(qsig, 2, bits - 1),
+        )
+        probe_tagged.extend(F.concat(F.lit(f"{t}:"), p) for p in (qsig, flipped))
 
     c = corpus.select(
         "vec_id",
@@ -453,4 +432,4 @@ def topk_lsh(
             .alias("score"),
         )
     )
-    return _rank_topk(cand, k, "query_id")
+    return _rank_topk(cand, k)

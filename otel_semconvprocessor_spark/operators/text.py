@@ -112,18 +112,16 @@ def lang_id(text: Column | str) -> Column:
     return expr
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingles: ['a b c', 'b c d', ...]; < k words -> whole text
+def word_shingles(text: Column | str) -> Column:
+    """Word 3-gram shingles: ['a b c', 'b c d', ...]; < 3 words -> whole text
     as the single shingle (so short docs still fingerprint)."""
     words = ws_tokens(text)
     n = F.size(words)
     grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(words, i + j) for j in range(k)]
-        ),
+        F.sequence(F.lit(1), n - 2),
+        lambda i: F.concat_ws(" ", *[F.try_element_at(words, i + j) for j in range(3)]),
     )
-    return F.when(n >= k, grams).otherwise(F.array(F.trim(_as_col(text))))
+    return F.when(n >= 3, grams).otherwise(F.array(F.trim(_as_col(text))))
 
 
 def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:

@@ -1,39 +1,59 @@
-"""OTLP protobuf trace ingestion: the reference's gRPC/HTTP-protobuf receiver
+"""OTLP protobuf ingestion: the reference's gRPC/HTTP-protobuf receiver
 surface (config.yaml:2-8 exposes :4317 grpc and :4318 http; a real OTLP feed
 is usually protobuf, not JSON).
 
 This module implements the protobuf WIRE FORMAT by hand (varint +
 length-delimited records — the public encoding, developers.google.com/
-protocol-buffers/docs/encoding) for exactly the message subset the span
-pipeline consumes, with field numbers from the public opentelemetry-proto
-schema (opentelemetry/proto/trace/v1/trace.proto):
+protocol-buffers/docs/encoding) for exactly the message subset the pipeline
+consumes, with field numbers from the public opentelemetry-proto schema.
+Traces, metrics and logs share one envelope (collector/*/v1 and the
+resource/common protos), with ``X`` = Spans, Metrics or Logs:
 
-    ExportTraceServiceRequest: resource_spans = 1
-    ResourceSpans:   resource = 1, scope_spans = 2, schema_url = 3
+    ExportXServiceRequest: resource_x = 1
+    ResourceX:       resource = 1, scope_x = 2, schema_url = 3
     Resource:        attributes = 1
-    ScopeSpans:      scope = 1, spans = 2, schema_url = 3
+    ScopeX:          scope = 1, items = 2 (spans / metrics / log_records),
+                     schema_url = 3
     InstrumentationScope: name = 1
-    Span:            trace_id = 1, span_id = 2, name = 5, kind = 6 (varint),
-                     attributes = 9
     KeyValue:        key = 1, value = 2
     AnyValue:        string_value = 1, bool_value = 2, int_value = 3,
                      double_value = 4
 
-Unknown fields of any wire type are skipped (forward-compatible, as protobuf
-requires).  The decode runs inside an Arrow-batched pandas UDF
-(``spans_from_otlp_proto``): payload bytes stream through mapInPandas, one
-Python decode per request (the mandated-UDF parse-stage shape, SURVEY §2.5)
-— never per-field driver work — and yield the SAME span frame as the JSON
-path (otlp_json.SPAN_ROW_SCHEMA), so everything downstream (semconv
-mapping, rule cascade, routing) is shared.
+and each signal has its own item message (trace/v1/trace.proto,
+metrics/v1/metrics.proto, logs/v1/logs.proto):
+
+    Span:            trace_id = 1, span_id = 2, name = 5, kind = 6 (varint),
+                     attributes = 9
+    Metric:          name = 1, description = 2, unit = 3,
+                     data oneof: gauge = 5, sum = 7, histogram = 9,
+                     exponential_histogram = 10, summary = 11
+    Gauge/Sum/Histogram: data_points = 1 (Sum: aggregation_temporality = 2,
+                     is_monotonic = 3)
+    LogRecord:       time_unix_nano = 1, severity_number = 2,
+                     severity_text = 3, body = 5 (AnyValue), attributes = 6
+
+The envelope is encoded by one function (``_encode_request``) and walked by
+one (``_decode_request``), the 3-level flatten of processor.go:130-151: one
+row per item, carrying its group's merged ``resource`` map and the last
+``InstrumentationScope`` name of its scope group.  Each signal supplies only
+its item codec.  Unknown fields of any wire type are skipped
+(forward-compatible, as protobuf requires).
+
+The decode runs inside one Arrow-batched pandas UDF (``_decode_payloads``):
+payload bytes stream through mapInPandas, one Python decode per request (the
+mandated-UDF parse-stage shape, SURVEY §2.5) — never per-field driver work.
+Spans come out as the JSON path's frame (otlp_json.SPAN_ROW_SCHEMA), so
+everything downstream (semconv mapping, rule cascade, routing) is shared;
+metrics and logs come out as countable passthrough rows (S8).
 
 Scale: requests are independent rows; decode is embarrassingly parallel and
-the output schema is identical to the JSON flatten, so the 100 TB plan is
+the span schema is identical to the JSON flatten, so the 100 TB plan is
 unchanged — only the leaf parse differs.
 """
 
 from __future__ import annotations
 
+import struct
 import sys as _sys
 
 from pyspark import cloudpickle as _cp
@@ -45,8 +65,10 @@ from pyspark.sql import DataFrame
 # sys.path.insert — no --py-files in local mode).  Registering the module for
 # BY-VALUE pickling makes cloudpickle ship the referenced function graph
 # instead of an import reference — the same worker-independence contract
-# extract.py keeps via a self-contained closure.  Idempotent; import-time so
-# it precedes any UDF serialization (which happens at plan build).
+# extract.py keeps via a self-contained closure.  So the codecs may reference
+# only this module's own globals (and the standard library).  Idempotent;
+# import-time so it precedes any UDF serialization (which happens at plan
+# build).
 _cp.register_pickle_by_value(_sys.modules[__name__])
 
 __all__ = [
@@ -68,6 +90,20 @@ __all__ = [
 
 # processor.go:172-189 kind enum -> string (same table as functions/scalars.py)
 KIND_NAMES = ["unspecified", "internal", "server", "client", "producer", "consumer"]
+
+METRIC_ROW_SCHEMA = (
+    "metric_name string, metric_type string, unit string, data_points long, "
+    "resource map<string,string>, scope_name string"
+)
+LOG_ROW_SCHEMA = (
+    "severity_number int, severity_text string, body string, n_attrs int, "
+    "resource map<string,string>, scope_name string"
+)
+
+_METRIC_DATA_FIELDS = {5: "gauge", 7: "sum", 9: "histogram", 10: "exponential_histogram", 11: "summary"}
+
+# opentelemetry-proto SeverityNumber bands (logs.proto enum, 4 values/level)
+SEVERITY_BANDS = ["TRACE", "DEBUG", "INFO", "WARN", "ERROR", "FATAL"]
 
 
 # ---------------------------------------------------------------------------
@@ -152,19 +188,12 @@ def _fields(buf: bytes):
         yield field, wire, v
 
 
-# ---------------------------------------------------------------------------
-# encode (fixture generation / round-trip testing)
-# ---------------------------------------------------------------------------
-
-
 def _encode_any_value(value) -> bytes:
     if isinstance(value, bool):
         return _varint_field(2, int(value))
     if isinstance(value, int):
         return _varint_field(3, value)
     if isinstance(value, float):
-        import struct
-
         return _tag(4, 1) + struct.pack("<d", value)
     return _str_field(1, str(value))
 
@@ -173,50 +202,9 @@ def _encode_kv(key: str, value) -> bytes:
     return _str_field(1, key) + _len_field(2, _encode_any_value(value))
 
 
-def encode_export_request(resource_spans: list[dict]) -> bytes:
-    """Encode an ExportTraceServiceRequest.
-
-    ``resource_spans``: [{"resource": {attr: value, ...},
-                          "scope_name": str,
-                          "spans": [{"trace_id": hex-str, "span_id": hex-str,
-                                     "name": str, "kind": int,
-                                     "attrs": {k: v, ...}}, ...]}]
-    """
-    out = bytearray()
-    for rs in resource_spans:
-        body = bytearray()
-        res = rs.get("resource") or {}
-        if res:
-            res_body = b"".join(_len_field(1, _encode_kv(k, v)) for k, v in res.items())
-            body += _len_field(1, res_body)
-        scope = _str_field(1, rs.get("scope_name", ""))
-        spans = bytearray()
-        for sp in rs.get("spans", []):
-            sp_body = bytearray()
-            sp_body += _len_field(1, bytes.fromhex(sp["trace_id"]))
-            sp_body += _len_field(2, bytes.fromhex(sp["span_id"]))
-            sp_body += _str_field(5, sp["name"])
-            if sp.get("kind"):
-                sp_body += _varint_field(6, sp["kind"])
-            for k, v in (sp.get("attrs") or {}).items():
-                sp_body += _len_field(9, _encode_kv(k, v))
-            spans += _len_field(2, bytes(sp_body))
-        ss_body = _len_field(1, scope) + bytes(spans)
-        body += _len_field(2, ss_body)
-        out += _len_field(1, bytes(body))
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# decode
-# ---------------------------------------------------------------------------
-
-
 def _decode_any_value(buf: bytes) -> str | None:
     """AnyValue -> string, matching the processor's fmt.Sprintf('%v', ...)
     stringification (processor.go:253) and the JSON path's cast-to-string."""
-    import struct
-
     for field, wire, v in _fields(buf):
         if field == 1 and wire == 2:
             return v.decode("utf-8")
@@ -240,8 +228,81 @@ def _decode_kv(buf: bytes) -> tuple[str, str | None]:
     return key, val
 
 
+# ---------------------------------------------------------------------------
+# the envelope: Request -> ResourceX* -> ScopeX* -> item*
+# ---------------------------------------------------------------------------
+
+
+def _encode_request(groups: list[dict], items_key: str, encode_item) -> bytes:
+    """Encode an export request: one ResourceX per group of
+    ``{"resource": {k: v}, "scope_name": str, items_key: [item, ...]}``,
+    each with one ScopeX holding ``encode_item(item)`` per item."""
+    out = bytearray()
+    for g in groups:
+        body = b""
+        if g.get("resource"):
+            body = _len_field(1, b"".join(_len_field(1, _encode_kv(k, v)) for k, v in g["resource"].items()))
+        scope = _len_field(1, _str_field(1, g.get("scope_name", "")))
+        items = b"".join(_len_field(2, encode_item(it)) for it in g.get(items_key, []))
+        out += _len_field(1, body + _len_field(2, scope + items))
+    return bytes(out)
+
+
+def _decode_request(data: bytes, decode_item) -> list[dict]:
+    """Export request bytes -> ``decode_item(item)`` per item, each row
+    completed with its group's ``resource`` map (every Resource field merged,
+    the later key winning) and its scope group's ``scope_name`` (the last
+    InstrumentationScope name)."""
+    rows = []
+    for field, wire, group in _fields(data):
+        if field != 1 or wire != 2:
+            continue
+        resource: dict = {}
+        scopes = []
+        for f, w, v in _fields(group):
+            if f == 1 and w == 2:  # Resource
+                for f2, w2, kv in _fields(v):
+                    if f2 == 1 and w2 == 2:
+                        k, val = _decode_kv(kv)
+                        if k:
+                            resource[k] = val
+            elif f == 2 and w == 2:
+                scopes.append(v)
+        for scope in scopes:
+            scope_name, items = "", []
+            for f, w, v in _fields(scope):
+                if f == 1 and w == 2:  # InstrumentationScope
+                    for f2, w2, name in _fields(v):
+                        if f2 == 1 and w2 == 2:
+                            scope_name = name.decode("utf-8")
+                elif f == 2 and w == 2:
+                    items.append(v)
+            for item in items:
+                row = decode_item(item)
+                row["resource"] = resource
+                row["scope_name"] = scope_name
+                rows.append(row)
+    return rows
+
+
+# ---------------------------------------------------------------------------
+# item codecs
+# ---------------------------------------------------------------------------
+
+
+def _encode_span(sp: dict) -> bytes:
+    out = (
+        _len_field(1, bytes.fromhex(sp["trace_id"]))
+        + _len_field(2, bytes.fromhex(sp["span_id"]))
+        + _str_field(5, sp["name"])
+    )
+    if sp.get("kind"):
+        out += _varint_field(6, sp["kind"])
+    return out + b"".join(_len_field(9, _encode_kv(k, v)) for k, v in (sp.get("attrs") or {}).items())
+
+
 def _decode_span(buf: bytes) -> dict:
-    span = {"trace_id": "", "span_id": "", "name": "", "kind": 0, "attrs": {}}
+    span = {"trace_id": "", "span_id": "", "name": "", "kind": "unspecified", "attrs": {}}
     for field, wire, v in _fields(buf):
         if field == 1 and wire == 2:
             span["trace_id"] = v.hex()
@@ -250,7 +311,7 @@ def _decode_span(buf: bytes) -> dict:
         elif field == 5 and wire == 2:
             span["name"] = v.decode("utf-8")
         elif field == 6 and wire == 0:
-            span["kind"] = v
+            span["kind"] = KIND_NAMES[v] if v < len(KIND_NAMES) else "unspecified"
         elif field == 9 and wire == 2:
             k, val = _decode_kv(v)
             if k:
@@ -258,292 +319,131 @@ def _decode_span(buf: bytes) -> dict:
     return span
 
 
+def _encode_metric(m: dict) -> bytes:
+    # data points are minimal valid messages (all-default NumberDataPoint /
+    # HistogramDataPoint) — enough for a counting no-op pipeline
+    mtype = m.get("type", "gauge")
+    out = _str_field(1, m["name"])
+    if m.get("unit"):
+        out += _str_field(3, m["unit"])
+    data = _len_field(1, b"") * m.get("points", 1)
+    if mtype == "sum":
+        data += _varint_field(2, 2) + _varint_field(3, 1)  # CUMULATIVE, is_monotonic
+    return out + _len_field({t: f for f, t in _METRIC_DATA_FIELDS.items()}[mtype], data)
+
+
+def _decode_metric(buf: bytes) -> dict:
+    """One row per metric with its data oneof kind and data-point count."""
+    row = {"metric_name": "", "metric_type": "empty", "unit": "", "data_points": 0}
+    for field, wire, v in _fields(buf):
+        if field == 1 and wire == 2:
+            row["metric_name"] = v.decode("utf-8")
+        elif field == 3 and wire == 2:
+            row["unit"] = v.decode("utf-8")
+        elif field in _METRIC_DATA_FIELDS and wire == 2:
+            row["metric_type"] = _METRIC_DATA_FIELDS[field]
+            row["data_points"] = sum(1 for f, w, _ in _fields(v) if f == 1 and w == 2)
+    return row
+
+
+def _encode_log(rec: dict) -> bytes:
+    out = b""
+    if rec.get("severity_number"):
+        out += _varint_field(2, rec["severity_number"])
+    if rec.get("severity_text"):
+        out += _str_field(3, rec["severity_text"])
+    if rec.get("body") is not None:
+        out += _len_field(5, _encode_any_value(rec["body"]))
+    return out + b"".join(_len_field(6, _encode_kv(k, v)) for k, v in (rec.get("attrs") or {}).items())
+
+
+def _decode_log(buf: bytes) -> dict:
+    row = {"severity_number": 0, "severity_text": "", "body": None, "n_attrs": 0}
+    for field, wire, v in _fields(buf):
+        if field == 2 and wire == 0:
+            row["severity_number"] = v
+        elif field == 3 and wire == 2:
+            row["severity_text"] = v.decode("utf-8")
+        elif field == 5 and wire == 2:
+            row["body"] = _decode_any_value(v)
+        elif field == 6 and wire == 2:
+            row["n_attrs"] += 1
+    return row
+
+
+# ---------------------------------------------------------------------------
+# public codecs (fixture generation, round-trip testing, the decode UDF)
+# ---------------------------------------------------------------------------
+
+
+def encode_export_request(resource_spans: list[dict]) -> bytes:
+    """Encode an ExportTraceServiceRequest.  ``resource_spans``:
+    [{"resource": {k: v}, "scope_name": str,
+      "spans": [{"trace_id": hex-str, "span_id": hex-str, "name": str,
+                 "kind": int, "attrs": {k: v}}]}]"""
+    return _encode_request(resource_spans, "spans", _encode_span)
+
+
 def decode_export_request(data: bytes) -> list[dict]:
-    """ExportTraceServiceRequest bytes -> flat span rows
-    (trace_id, span_id, name, kind:str, attrs, resource, scope_name) —
-    the same 3-level flatten as spans_from_otlp_df (processor.go:130-151)."""
-    rows = []
-    for field, wire, rs in _fields(data):
-        if field != 1 or wire != 2:
-            continue
-        resource: dict = {}
-        scope_spans = []
-        for f2, w2, v2 in _fields(rs):
-            if f2 == 1 and w2 == 2:  # Resource
-                for f3, w3, v3 in _fields(v2):
-                    if f3 == 1 and w3 == 2:
-                        k, val = _decode_kv(v3)
-                        if k:
-                            resource[k] = val
-            elif f2 == 2 and w2 == 2:
-                scope_spans.append(v2)
-        for ss in scope_spans:
-            scope_name = ""
-            for f3, w3, v3 in _fields(ss):
-                if f3 == 1 and w3 == 2:  # InstrumentationScope
-                    for f4, w4, v4 in _fields(v3):
-                        if f4 == 1 and w4 == 2:
-                            scope_name = v4.decode("utf-8")
-            for f3, w3, v3 in _fields(ss):
-                if f3 == 2 and w3 == 2:  # Span
-                    sp = _decode_span(v3)
-                    kind = sp["kind"]
-                    rows.append(
-                        {
-                            "trace_id": sp["trace_id"],
-                            "span_id": sp["span_id"],
-                            "name": sp["name"],
-                            "kind": KIND_NAMES[kind] if 0 <= kind < 6 else "unspecified",
-                            "attrs": sp["attrs"],
-                            "resource": resource,
-                            "scope_name": scope_name,
-                        }
-                    )
-    return rows
-
-
-# ---------------------------------------------------------------------------
-# metrics / logs signals (S8 wire-shape parity)
-#
-# The reference declares metrics and logs pipelines as timed NO-OPS
-# (processor.go:327-343, 346-375): signals traverse unchanged and get
-# counted.  We decode just enough of the public wire shapes to count and
-# route them through the passthrough sink.  Field numbers from
-# opentelemetry/proto/metrics/v1/metrics.proto and logs/v1/logs.proto:
-#
-#   ExportMetricsServiceRequest: resource_metrics = 1
-#   ResourceMetrics: resource = 1, scope_metrics = 2, schema_url = 3
-#   ScopeMetrics:    scope = 1, metrics = 2
-#   Metric:          name = 1, description = 2, unit = 3,
-#                    data oneof: gauge = 5, sum = 7, histogram = 9,
-#                    exponential_histogram = 10, summary = 11
-#   Gauge/Sum/Histogram: data_points = 1 (Sum: aggregation_temporality = 2,
-#                    is_monotonic = 3)
-#
-#   ExportLogsServiceRequest: resource_logs = 1
-#   ResourceLogs:    resource = 1, scope_logs = 2, schema_url = 3
-#   ScopeLogs:       scope = 1, log_records = 2
-#   LogRecord:       time_unix_nano = 1, severity_number = 2,
-#                    severity_text = 3, body = 5 (AnyValue), attributes = 6
-# ---------------------------------------------------------------------------
-
-METRIC_ROW_SCHEMA = (
-    "metric_name string, metric_type string, unit string, data_points long, "
-    "resource map<string,string>, scope_name string"
-)
-LOG_ROW_SCHEMA = (
-    "severity_number int, severity_text string, body string, n_attrs int, "
-    "resource map<string,string>, scope_name string"
-)
-
-_METRIC_DATA_FIELDS = {5: "gauge", 7: "sum", 9: "histogram", 10: "exponential_histogram", 11: "summary"}
-
-# opentelemetry-proto SeverityNumber bands (logs.proto enum, 4 values/level)
-SEVERITY_BANDS = ["TRACE", "DEBUG", "INFO", "WARN", "ERROR", "FATAL"]
+    """ExportTraceServiceRequest bytes -> flat span rows (trace_id, span_id,
+    name, kind:str, attrs, resource, scope_name) — the same 3-level flatten
+    as spans_from_otlp_df."""
+    return _decode_request(data, _decode_span)
 
 
 def encode_metrics_request(resource_metrics: list[dict]) -> bytes:
-    """Encode an ExportMetricsServiceRequest.
-
-    ``resource_metrics``: [{"resource": {k: v}, "scope_name": str,
-                            "metrics": [{"name": str, "unit": str,
-                                         "type": gauge|sum|histogram,
-                                         "points": int}]}]
-    Data points are minimal valid messages (all-default NumberDataPoint /
-    HistogramDataPoint) — enough for a counting no-op pipeline.
-    """
-    type_field = {v: k for k, v in _METRIC_DATA_FIELDS.items()}
-    out = bytearray()
-    for rm in resource_metrics:
-        body = bytearray()
-        res = rm.get("resource") or {}
-        if res:
-            res_body = b"".join(_len_field(1, _encode_kv(k, v)) for k, v in res.items())
-            body += _len_field(1, res_body)
-        sm = bytearray()
-        sm += _len_field(1, _str_field(1, rm.get("scope_name", "")))
-        for m in rm.get("metrics", []):
-            m_body = bytearray()
-            m_body += _str_field(1, m["name"])
-            if m.get("unit"):
-                m_body += _str_field(3, m["unit"])
-            data = bytearray()
-            for _ in range(m.get("points", 1)):
-                data += _len_field(1, b"")  # all-default data point
-            if m.get("type", "gauge") == "sum":
-                data += _varint_field(2, 2)  # CUMULATIVE
-                data += _varint_field(3, 1)  # is_monotonic
-            m_body += _len_field(type_field[m.get("type", "gauge")], bytes(data))
-            sm += _len_field(2, bytes(m_body))
-        body += _len_field(2, bytes(sm))
-        out += _len_field(1, bytes(body))
-    return bytes(out)
+    """Encode an ExportMetricsServiceRequest.  ``resource_metrics``:
+    [{"resource": {k: v}, "scope_name": str,
+      "metrics": [{"name": str, "unit": str,
+                   "type": gauge|sum|histogram|exponential_histogram|summary,
+                   "points": int}]}]"""
+    return _encode_request(resource_metrics, "metrics", _encode_metric)
 
 
 def decode_metrics_request(data: bytes) -> list[dict]:
-    """ExportMetricsServiceRequest bytes -> one row per metric with its data
-    oneof kind and data-point count — the countable passthrough shape."""
-    rows = []
-    for field, wire, rm in _fields(data):
-        if field != 1 or wire != 2:
-            continue
-        resource: dict = {}
-        scope_metrics = []
-        for f2, w2, v2 in _fields(rm):
-            if f2 == 1 and w2 == 2:
-                for f3, w3, v3 in _fields(v2):
-                    if f3 == 1 and w3 == 2:
-                        k, val = _decode_kv(v3)
-                        if k:
-                            resource[k] = val
-            elif f2 == 2 and w2 == 2:
-                scope_metrics.append(v2)
-        for sm in scope_metrics:
-            scope_name = ""
-            metrics = []
-            for f3, w3, v3 in _fields(sm):
-                if f3 == 1 and w3 == 2:
-                    for f4, w4, v4 in _fields(v3):
-                        if f4 == 1 and w4 == 2:
-                            scope_name = v4.decode("utf-8")
-                elif f3 == 2 and w3 == 2:
-                    metrics.append(v3)
-            for mb in metrics:
-                name, unit, mtype, points = "", "", "empty", 0
-                for f4, w4, v4 in _fields(mb):
-                    if f4 == 1 and w4 == 2:
-                        name = v4.decode("utf-8")
-                    elif f4 == 3 and w4 == 2:
-                        unit = v4.decode("utf-8")
-                    elif f4 in _METRIC_DATA_FIELDS and w4 == 2:
-                        mtype = _METRIC_DATA_FIELDS[f4]
-                        points = sum(
-                            1 for f5, w5, _ in _fields(v4) if f5 == 1 and w5 == 2
-                        )
-                rows.append(
-                    {
-                        "metric_name": name,
-                        "metric_type": mtype,
-                        "unit": unit,
-                        "data_points": points,
-                        "resource": resource,
-                        "scope_name": scope_name,
-                    }
-                )
-    return rows
+    """ExportMetricsServiceRequest bytes -> METRIC_ROW_SCHEMA rows."""
+    return _decode_request(data, _decode_metric)
 
 
 def encode_logs_request(resource_logs: list[dict]) -> bytes:
-    """Encode an ExportLogsServiceRequest.
-
-    ``resource_logs``: [{"resource": {k: v}, "scope_name": str,
-                         "records": [{"severity_number": int,
-                                      "severity_text": str, "body": str,
-                                      "attrs": {k: v}}]}]
-    """
-    out = bytearray()
-    for rl in resource_logs:
-        body = bytearray()
-        res = rl.get("resource") or {}
-        if res:
-            res_body = b"".join(_len_field(1, _encode_kv(k, v)) for k, v in res.items())
-            body += _len_field(1, res_body)
-        sl = bytearray()
-        sl += _len_field(1, _str_field(1, rl.get("scope_name", "")))
-        for rec in rl.get("records", []):
-            r_body = bytearray()
-            if rec.get("severity_number"):
-                r_body += _varint_field(2, rec["severity_number"])
-            if rec.get("severity_text"):
-                r_body += _str_field(3, rec["severity_text"])
-            if rec.get("body") is not None:
-                r_body += _len_field(5, _encode_any_value(rec["body"]))
-            for k, v in (rec.get("attrs") or {}).items():
-                r_body += _len_field(6, _encode_kv(k, v))
-            sl += _len_field(2, bytes(r_body))
-        body += _len_field(2, bytes(sl))
-        out += _len_field(1, bytes(body))
-    return bytes(out)
+    """Encode an ExportLogsServiceRequest.  ``resource_logs``:
+    [{"resource": {k: v}, "scope_name": str,
+      "records": [{"severity_number": int, "severity_text": str,
+                   "body": str, "attrs": {k: v}}]}]"""
+    return _encode_request(resource_logs, "records", _encode_log)
 
 
 def decode_logs_request(data: bytes) -> list[dict]:
-    """ExportLogsServiceRequest bytes -> one row per log record."""
-    rows = []
-    for field, wire, rl in _fields(data):
-        if field != 1 or wire != 2:
-            continue
-        resource: dict = {}
-        scope_logs = []
-        for f2, w2, v2 in _fields(rl):
-            if f2 == 1 and w2 == 2:
-                for f3, w3, v3 in _fields(v2):
-                    if f3 == 1 and w3 == 2:
-                        k, val = _decode_kv(v3)
-                        if k:
-                            resource[k] = val
-            elif f2 == 2 and w2 == 2:
-                scope_logs.append(v2)
-        for sl in scope_logs:
-            scope_name = ""
-            for f3, w3, v3 in _fields(sl):
-                if f3 == 1 and w3 == 2:
-                    for f4, w4, v4 in _fields(v3):
-                        if f4 == 1 and w4 == 2:
-                            scope_name = v4.decode("utf-8")
-            for f3, w3, v3 in _fields(sl):
-                if f3 == 2 and w3 == 2:
-                    sev, sev_text, body_str, n_attrs = 0, "", None, 0
-                    for f4, w4, v4 in _fields(v3):
-                        if f4 == 2 and w4 == 0:
-                            sev = v4
-                        elif f4 == 3 and w4 == 2:
-                            sev_text = v4.decode("utf-8")
-                        elif f4 == 5 and w4 == 2:
-                            body_str = _decode_any_value(v4)
-                        elif f4 == 6 and w4 == 2:
-                            n_attrs += 1
-                    rows.append(
-                        {
-                            "severity_number": sev,
-                            "severity_text": sev_text,
-                            "body": body_str,
-                            "n_attrs": n_attrs,
-                            "resource": resource,
-                            "scope_name": scope_name,
-                        }
-                    )
-    return rows
+    """ExportLogsServiceRequest bytes -> LOG_ROW_SCHEMA rows."""
+    return _decode_request(data, _decode_log)
 
 
-def signals_from_otlp_proto(
-    df: DataFrame,
-    signal: str,
-    payload_col: str = "payload",
-    *,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Decode a binary metrics/logs export-request column into signal rows —
-    the same Arrow-batched mapInPandas shape as ``spans_from_otlp_proto``.
-    The rows then traverse the engine unchanged (passthrough, S8): counting
-    and routing happen on the decoded frame with ordinary expressions."""
-    if signal not in ("metrics", "logs"):
-        raise ValueError(f"signal must be 'metrics' or 'logs', got {signal!r}")
+# ---------------------------------------------------------------------------
+# the Spark operators
+# ---------------------------------------------------------------------------
+
+
+def _decode_payloads(df: DataFrame, payload_col: str, decode, schema: str, on_error: str) -> DataFrame:
+    """Decode a binary export-request column with ``decode`` into ``schema``
+    rows — Arrow-batched mapInPandas, one decode per request row, no driver
+    involvement.
+
+    ``on_error``: ``'fail'`` propagates a malformed payload as a task error;
+    ``'skip'`` drops malformed requests wholesale — the collector-receiver
+    behavior for a broken export request, and the only sane mode for a
+    web-scale feed where some fraction of payloads is always garbage (count
+    the drop rate by differencing request counts, M8-style)."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    decode = decode_metrics_request if signal == "metrics" else decode_logs_request
-    schema = METRIC_ROW_SCHEMA if signal == "metrics" else LOG_ROW_SCHEMA
     keys = [f.split()[0] for f in schema.split(", ")]
-    col = payload_col
     skip = on_error == "skip"
 
     def decode_batches(batches):
-        import struct
-
         import pandas as pd
 
         for pdf in batches:
             out = {k: [] for k in keys}
-            for payload in pdf[col]:
+            for payload in pdf[payload_col]:
                 if payload is None:
                     continue
                 try:
@@ -555,15 +455,39 @@ def signals_from_otlp_proto(
                 for row in rows:
                     for k in keys:
                         out[k].append(row[k])
-            if out[keys[0]]:
-                yield pd.DataFrame(out)
+            if out[keys[0]]:  # empty pdf would infer float64 for the
+                yield pd.DataFrame(out)  # map columns and break Arrow
 
-    return df.select(col).mapInPandas(decode_batches, schema=schema)
+    return df.select(payload_col).mapInPandas(decode_batches, schema=schema)
 
 
-# ---------------------------------------------------------------------------
-# the Spark operator
-# ---------------------------------------------------------------------------
+def spans_from_otlp_proto(df: DataFrame, *, on_error: str = "fail") -> DataFrame:
+    """Decode the binary ``payload`` column of ExportTraceServiceRequests
+    into span rows with the JSON path's SPAN_ROW_SCHEMA (``on_error``: see
+    ``_decode_payloads``)."""
+    from ..tuning import ensure_jit_codegen
+    from .otlp_json import SPAN_ROW_SCHEMA
+
+    ensure_jit_codegen(df.sparkSession)
+    return _decode_payloads(df, "payload", decode_export_request, SPAN_ROW_SCHEMA, on_error)
+
+
+def signals_from_otlp_proto(
+    df: DataFrame,
+    signal: str,
+    payload_col: str = "payload",
+    *,
+    on_error: str = "fail",
+) -> DataFrame:
+    """Decode a binary metrics/logs export-request column into signal rows
+    through the same operator as ``spans_from_otlp_proto``.  The rows then
+    traverse the engine unchanged (passthrough, S8): counting and routing
+    happen on the decoded frame with ordinary expressions."""
+    if signal == "metrics":
+        return _decode_payloads(df, payload_col, decode_metrics_request, METRIC_ROW_SCHEMA, on_error)
+    if signal == "logs":
+        return _decode_payloads(df, payload_col, decode_logs_request, LOG_ROW_SCHEMA, on_error)
+    raise ValueError(f"signal must be 'metrics' or 'logs', got {signal!r}")
 
 
 def read_otlp_proto_files(spark, path: str) -> DataFrame:
@@ -577,12 +501,7 @@ def read_otlp_proto_files(spark, path: str) -> DataFrame:
     # binaryFile yields (path, modificationTime, length, content) — only the
     # payload bytes travel into the decode stage
     raw = spark.read.format("binaryFile").load(path).select(F.col("content").alias("payload"))
-    return spans_from_otlp_proto(raw, "payload")
-
-
-BINARY_FILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
+    return spans_from_otlp_proto(raw)
 
 
 def read_otlp_proto_stream(spark, path: str) -> DataFrame:
@@ -595,59 +514,8 @@ def read_otlp_proto_stream(spark, path: str) -> DataFrame:
 
     raw = (
         spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
+        .schema("path string, modificationTime timestamp, length long, content binary")
         .load(path)
         .select(F.col("content").alias("payload"))
     )
-    return spans_from_otlp_proto(raw, "payload", on_error="skip")
-
-
-def spans_from_otlp_proto(
-    df: DataFrame, payload_col: str = "payload", *, on_error: str = "fail"
-) -> DataFrame:
-    """Decode a binary OTLP-protobuf payload column into span rows with the
-    JSON path's SPAN_ROW_SCHEMA — Arrow-batched mapInPandas, one decode per
-    request row, no driver involvement.
-
-    ``on_error``: ``'fail'`` (default) propagates a malformed payload as a
-    task error; ``'skip'`` drops malformed requests wholesale — the
-    collector-receiver behavior for a broken export request, and the only
-    sane mode for a web-scale feed where some fraction of payloads is
-    always garbage (count the drop rate by differencing request counts,
-    M8-style)."""
-    from ..tuning import ensure_jit_codegen
-
-    ensure_jit_codegen(df.sparkSession)
-    from .otlp_json import SPAN_ROW_SCHEMA
-
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    col = payload_col
-    skip = on_error == "skip"
-
-    def decode_batches(batches):
-        import struct
-
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "trace_id": [], "span_id": [], "name": [], "kind": [],
-                "attrs": [], "resource": [], "scope_name": [],
-            }
-            for payload in pdf[col]:
-                if payload is None:
-                    continue
-                try:
-                    rows = decode_export_request(bytes(payload))
-                except (ValueError, IndexError, UnicodeDecodeError, struct.error):
-                    if skip:
-                        continue
-                    raise
-                for row in rows:
-                    for k in out:
-                        out[k].append(row[k])
-            if out["trace_id"]:  # empty pdf would infer float64 for the
-                yield pd.DataFrame(out)  # map columns and break Arrow
-
-    return df.select(col).mapInPandas(decode_batches, schema=SPAN_ROW_SCHEMA)
+    return spans_from_otlp_proto(raw, on_error="skip")

@@ -15,7 +15,7 @@ from otel_semconvprocessor_spark.operators.exporters import (
 
 def test_debug_sample_density(spark):
     df = spark.range(10_000).withColumnRenamed("id", "url")
-    out = debug_sample(df, sampling_initial=10, sampling_thereafter=100)
+    out = debug_sample(df, sampling_thereafter=100)
     n = out.count()
     # ~10 initial + ~1% of 10k, deduped
     assert 50 <= n <= 250

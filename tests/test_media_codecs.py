@@ -102,7 +102,7 @@ def test_png_corruption_raises(mutate):
 
 
 def test_wav_round_trip():
-    data = encode_wav(800, sample_rate=8000, channels=2, amplitude=512)
+    data = encode_wav(800, channels=2, amplitude=512)
     d = decode_wav(data)
     assert d["channels"] == 2 and d["sample_rate"] == 8000
     assert d["n_frames"] == 800

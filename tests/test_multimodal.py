@@ -25,7 +25,7 @@ def test_media_schema(media):
 
 
 def test_featurize_fake(media):
-    out = decode_and_featurize(media, fake=True, feature_dim=8)
+    out = decode_and_featurize(media, fake=True)
     rows = out.collect()
     assert len(rows) == 60
     for r in rows:
@@ -38,7 +38,7 @@ def test_featurize_fake(media):
     a = sorted((r["media_id"], tuple(r["feature"])) for r in rows)
     b = sorted(
         (r["media_id"], tuple(r["feature"]))
-        for r in decode_and_featurize(media.repartition(7), fake=True, feature_dim=8).collect()
+        for r in decode_and_featurize(media.repartition(7), fake=True).collect()
     )
     assert a == b
 

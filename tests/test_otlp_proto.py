@@ -1,10 +1,17 @@
 """OTLP protobuf receiver surface: hand-rolled wire codec round-trips, unknown
--field forward compatibility, and frame parity with the JSON path."""
+-field forward compatibility, the envelope shared by traces, metrics and
+logs, by-value pickling of the decoders, and frame parity with the JSON
+path."""
+
+import struct
 
 import pytest
 
+from otel_semconvprocessor_spark.sources import otlp_proto as p
 from otel_semconvprocessor_spark.sources.otlp_proto import (
     decode_export_request,
+    decode_logs_request,
+    decode_metrics_request,
     encode_export_request,
     spans_from_otlp_proto,
 )
@@ -57,14 +64,20 @@ def test_round_trip():
     assert r2["kind"] == "unspecified" and r2["resource"] == {} and r2["attrs"] == {}
 
 
-def test_unknown_fields_are_skipped():
-    """A producer sending newer Span fields (timestamps, status, events) must
-    not break the decoder — protobuf requires skipping unknown fields."""
-    import struct
+# unknown fields of wire types 0, 1, 2 and 5, numbered above every field any
+# envelope level or item reads
+JUNK = (
+    p._varint_field(15, 7)
+    + p._tag(14, 1) + bytes(8)
+    + p._len_field(13, b"\x0a\x03abc")
+    + p._tag(12, 5) + bytes(4)
+)
 
-    from otel_semconvprocessor_spark.sources import otlp_proto as p
-
-    sp_body = (
+# signal -> (public decoder, one encoded item, the item's decoded fields); the
+# span carries newer Span fields the decoder does not read
+SIGNALS = {
+    "traces": (
+        decode_export_request,
         p._len_field(1, bytes.fromhex("ab" * 16))
         + p._len_field(2, bytes.fromhex("cd" * 8))
         + p._str_field(5, "with-extras")
@@ -73,14 +86,49 @@ def test_unknown_fields_are_skipped():
         + p._tag(8, 1) + struct.pack("<Q", 1700000001_000000000)  # end_time fixed64
         + p._varint_field(10, 4)                                  # dropped_attributes_count
         + p._len_field(11, b"\x0a\x03abc")                        # an event submessage
-        + p._len_field(9, p._encode_kv("k", "v"))
-    )
-    req = p._len_field(1, p._len_field(2, p._len_field(1, p._str_field(1, "s")) + p._len_field(2, sp_body)))
-    rows = decode_export_request(req)
-    assert len(rows) == 1
-    assert rows[0]["name"] == "with-extras"
-    assert rows[0]["kind"] == "client"
-    assert rows[0]["attrs"] == {"k": "v"}
+        + p._len_field(9, p._encode_kv("k", "v")),
+        {"trace_id": "ab" * 16, "span_id": "cd" * 8, "name": "with-extras", "kind": "client",
+         "attrs": {"k": "v"}},
+    ),
+    "metrics": (
+        decode_metrics_request,
+        p._str_field(1, "latency") + p._str_field(3, "ms") + p._len_field(9, p._len_field(1, b"") * 2),
+        {"metric_name": "latency", "metric_type": "histogram", "unit": "ms", "data_points": 2},
+    ),
+    "logs": (
+        decode_logs_request,
+        p._varint_field(2, 17) + p._str_field(3, "ERROR") + p._len_field(5, p._str_field(1, "boom"))
+        + p._len_field(6, p._encode_kv("code", 500)),
+        {"severity_number": 17, "severity_text": "ERROR", "body": "boom", "n_attrs": 1},
+    ),
+}
+
+
+def _resource(attrs: dict, junk: bytes = b"") -> bytes:
+    """A ResourceX's Resource field."""
+    return p._len_field(1, junk + b"".join(p._len_field(1, p._encode_kv(k, v)) for k, v in attrs.items()) + junk)
+
+
+def _scope_group(names: list[str], items: list[bytes], junk: bytes = b"") -> bytes:
+    """A ResourceX's ScopeX field: one InstrumentationScope per name, then the
+    items."""
+    scopes = b"".join(p._len_field(1, junk + p._str_field(1, n) + junk) for n in names)
+    return p._len_field(2, junk + scopes + junk + b"".join(p._len_field(2, junk + it) for it in items) + junk)
+
+
+def test_unknown_fields_are_skipped():
+    """A producer sending newer fields (span timestamps, status, events, or
+    any unknown field at any envelope level) must not break a decoder —
+    protobuf requires skipping unknown fields.  The schema_url fields, known
+    but unread, are skipped too."""
+    schema_url = p._str_field(3, "https://opentelemetry.io/schemas/1.21.0")
+    for decode, item, fields in SIGNALS.values():
+        group = (
+            JUNK + _resource({"service.name": "cart"}, JUNK) + JUNK
+            + _scope_group(["lib"], [item], JUNK) + schema_url + JUNK
+        )
+        req = JUNK + p._len_field(1, group) + JUNK
+        assert decode(req) == [dict(fields, resource={"service.name": "cart"}, scope_name="lib")]
 
 
 def test_spark_proto_path_matches_json_path(spark, tmp_path):
@@ -384,3 +432,56 @@ def test_signals_spark_operator_and_truncation(spark):
 
     with pytest.raises(ValueError):
         signals_from_otlp_proto(ldf, "traces")
+
+
+@pytest.mark.parametrize("signal", list(SIGNALS))
+def test_envelope_groups(signal):
+    """Two Resource fields merge (the later key wins, wherever the field sits
+    in the group); each ScopeX group names its items with its last
+    InstrumentationScope name; groups with no items yield no rows; and a
+    group's resource does not leak into the next group."""
+    decode, item, fields = SIGNALS[signal]
+    req = (
+        p._len_field(1, _resource({"a": "1", "b": "2"}) + _scope_group(["first", "last"], [item])
+                     + _resource({"b": "3", "c": 4}) + _scope_group(["s2"], [item, item]))
+        + p._len_field(1, _resource({"x": "y"}) + _scope_group(["empty"], []))
+        + p._len_field(1, _resource({"x": "y"}))
+        + p._len_field(1, _scope_group([], [item]))
+    )
+    merged = {"a": "1", "b": "3", "c": "4"}
+    assert decode(req) == [
+        dict(fields, resource=merged, scope_name="last"),
+        dict(fields, resource=merged, scope_name="s2"),
+        dict(fields, resource=merged, scope_name="s2"),
+        dict(fields, resource={}, scope_name=""),
+    ]
+
+
+@pytest.mark.parametrize("signal", list(SIGNALS))
+def test_decoders_pickle_by_value(signal, tmp_path):
+    """The module registers itself for by-value pickling so executors never
+    import the package: each public decoder, cloudpickled with a payload,
+    loads and runs in a fresh interpreter that cannot import the package and
+    returns the in-process rows."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    decode, item, _ = SIGNALS[signal]
+    payload = p._len_field(1, _resource({"service.name": "cart"}) + _scope_group(["lib"], [item, item]))
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('otel_semconvprocessor_spark') is None\n"
+        "decode, payload = pickle.loads(sys.stdin.buffer.read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(decode(payload)))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], input=cloudpickle.dumps((decode, payload)),
+        cwd=tmp_path, env=env, capture_output=True,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert pickle.loads(out.stdout) == decode(payload)

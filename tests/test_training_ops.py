@@ -70,14 +70,14 @@ def test_lang_id(spark, docs):
 
 
 def test_shingles_and_fingerprint(spark, docs):
-    sh = docs.filter("doc_id = 0").select(word_shingles("text", 3).alias("sh")).collect()[0]["sh"]
+    sh = docs.filter("doc_id = 0").select(word_shingles("text").alias("sh")).collect()[0]["sh"]
     assert sh[0] == "the quick brown"
     assert len(sh) == 7
 
 
 def test_minhash_signature_shape(spark, docs):
     sig = docs.filter("doc_id = 0").select(
-        minhash_signature(word_shingles("text", 3), 8).alias("s")
+        minhash_signature(word_shingles("text"), 8).alias("s")
     ).collect()[0]["s"]
     assert len(sig) == 8 and all(len(x) == 32 for x in sig)
     # salted hash families must actually differ (guards the HOF-lambda-arity
@@ -133,7 +133,7 @@ def test_topk_lsh_recall(spark, sf01_dir):
     emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet").cache()
     queries = emb.filter(F.col("vec_id") < 10)
     exact = topk_brute_force(emb, queries, k=5)
-    approx = topk_lsh(emb, queries, k=5, bits=4, tables=8, multiprobe=1)
+    approx = topk_lsh(emb, queries, k=5, bits=4, tables=8)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -205,7 +205,7 @@ def test_topk_ivf_recall_and_refine(spark, sf01_dir):
     truth = {(r["query_id"], r["vec_id"])
              for r in topk_brute_force(emb, q, k=10).collect()}
 
-    ivf = topk_ivf(emb, q, k=10, n_cells=16, nprobe=8)
+    ivf = topk_ivf(emb, q, nprobe=8)
     got = {(r["query_id"], r["vec_id"]) for r in ivf.collect()}
     recall = len(got & truth) / len(truth)
     assert recall >= 0.5, recall  # seed centroids, half the cells probed
@@ -224,7 +224,7 @@ def test_topk_ivf_plan_shape(spark, sf01_dir):
 
     emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    plan = topk_ivf(emb, q, k=10)._jdf.queryExecution().executedPlan().toString()
+    plan = topk_ivf(emb, q)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
